@@ -13,11 +13,10 @@ its mutations through the original), so this beats alternating-star
 constant factors in practice while staying two shuffles per round.
 
 Scale hygiene:
-- ``localCheckpoint`` each round truncates the lineage so plans don't grow
-  (replaced by a durable checkpoint table in the resumable pipeline,
-  rkmh_spark.plans.checkpoint).
+- ``localCheckpoint`` each round truncates the lineage so plans don't grow.
 - Convergence test = count of changed labels via self-join on the (small)
-  label relation; rounds are capped by cfg.max_cc_iterations.
+  label relation; rounds are capped by cfg.max_cc_iterations, and a run
+  that hits the cap falls back to star contraction (connected_components_star).
 - Deterministic ids: label = lexicographic min url of the component.
 """
 
@@ -94,28 +93,16 @@ def connected_components(
         )
         cur = _sig(labels)
         if cur == prev:
-            converged = True
-            break
+            sym.unpersist()
+            return labels
         prev = cur
-    else:
-        converged = False
 
+    # Not converged: a component with diameter > max_iterations would get
+    # split labels. Near-dup graphs are low-diameter, so this means
+    # pathological chaining; star contraction converges in O(log n) rounds
+    # whatever the diameter, so it gives the exact answer instead.
     sym.unpersist()
-    if not converged:
-        # A component with diameter > max_iterations would get split labels;
-        # surface it instead of returning silently-partial clusters
-        # (ADVICE r1). Near-dup graphs are low-diameter, so this firing
-        # means either pathological chaining or a mis-set iteration cap.
-        import warnings
-
-        warnings.warn(
-            "connected_components: hash-min propagation did NOT converge "
-            f"within max_iterations={max_iterations}; labels may split "
-            "components. Raise max_cc_iterations.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return labels
+    return connected_components_star(edges, src_col=src_col, dst_col=dst_col)
 
 
 def connected_components_star(
@@ -128,8 +115,8 @@ def connected_components_star(
     'Connected Components in MapReduce and Beyond', SoCC'14 — public
     algorithm): converges in O(log n) rounds regardless of component
     DIAMETER, where hash-min label propagation needs O(diameter) rounds —
-    the right distributed path when near-dup chains are pathologically
-    long (the failure mode warned about in connected_components).
+    the fallback when hash-min does not converge within its round cap
+    (pathologically long near-dup chains).
 
     Per round (two shuffles each, like hash-min):
       large-star(u): every strictly-larger neighbor of u links to

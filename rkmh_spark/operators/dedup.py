@@ -5,11 +5,16 @@ exact verification → connected components → assignments(url, cluster_id).
 
 Mirrors rkmh stream/classify's lifecycle (/root/reference/src/rkmh.cpp:584-948)
 with the all-pairs comparison replaced by LSH (SURVEY.md §3.1).
+
+This module is the only place the stage sequence is written: the
+checkpointed run is ``dedup_pages(..., checkpoint=mgr)``, and the
+incremental stream and its compaction reuse ``assign_clusters``.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import TYPE_CHECKING, Callable
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -22,6 +27,9 @@ from rkmh_spark.operators.signatures import (
     compute_signatures_min_occ,
 )
 from rkmh_spark.operators.verify import brute_force_pairs, verify_pairs
+
+if TYPE_CHECKING:
+    from rkmh_spark.plans.checkpoint import CheckpointManager
 
 
 def keep_representatives(pages: DataFrame, assignments: DataFrame) -> DataFrame:
@@ -43,12 +51,38 @@ class DedupResult:
     assignments: DataFrame    # (url, cluster_id)
 
 
+def assign_clusters(
+    urls: DataFrame,
+    edges: DataFrame,
+    cfg: DedupConfig,
+    n_edges: int | None = None,
+    relabel: Callable[[DataFrame], DataFrame] | None = None,
+) -> DataFrame:
+    """The pipeline's shared tail: verified edges(url_a, url_b) →
+    connected components → (url, cluster_id) for every url in ``urls``;
+    a url in no edge is its own cluster (min-url label rule).
+
+    ``relabel`` maps the component labels(node, label) before the join —
+    the incremental stream uses it to inherit older cluster ids.
+    """
+    labels = connected_components(
+        edges, cfg.max_cc_iterations, n_edges=n_edges,
+        driver_threshold=cfg.cc_driver_threshold,
+    )
+    if relabel is not None:
+        labels = relabel(labels)
+    return (
+        urls.join(labels.withColumnRenamed("node", "url"), "url", "left")
+        .select("url", F.coalesce("label", "url").alias("cluster_id"))
+    )
+
+
 def dedup_pages(
     pages: DataFrame,
     cfg: DedupConfig,
     use_lsh: bool = True,
     containment_threshold: float | None = None,
-    url_dedup_first: bool = False,
+    checkpoint: CheckpointManager | None = None,
 ) -> DedupResult:
     """Run the full dedup pipeline; ``use_lsh=False`` = exhaustive verify
     (the reference's own mechanism, for fixtures/recall oracles).
@@ -59,22 +93,28 @@ def dedup_pages(
     asymmetric dups become extra edges for clustering — catches
     truncation/mirror-with-chrome dups whose symmetric Jaccard is low.
 
-    ``url_dedup_first``: run the url-level pre-pass (keep the newest
-    fetch per canonical url, functions/urls.py) before any sketching —
-    the standard crawl pipeline ordering; refetches and tracking-param
-    spellings never reach the shingle kernel. Default off so the pinned
-    content-dedup gates measure the content path alone.
+    ``checkpoint``: when given, each stage (signatures, candidates, pairs,
+    assignments) is written through ``checkpoint.stage`` and a re-run
+    skips every stage whose manifest is complete, so a killed run resumes
+    with the same assignments (tests/test_resume.py). Without it each
+    stage's build runs directly.
     """
-    if url_dedup_first:
-        from rkmh_spark.functions.urls import url_dedup
 
-        pages = url_dedup(pages).drop("canonical_url")
+    def run(name: str, build: Callable[[], DataFrame]) -> DataFrame:
+        if checkpoint is None:
+            return build()
+        return checkpoint.stage(pages.sparkSession, name, build)
+
     to_unpersist: list = []
-    if cfg.min_occ is not None:
-        # F4 (rkmh -M): global-occurrence filter — relational rebuild (the
-        # keep-set is unbroadcastable at scale); composes -I when both set
-        sigs = compute_signatures_min_occ(pages, cfg)
-    elif cfg.max_doc_freq is not None:
+
+    def signatures() -> DataFrame:
+        if cfg.min_occ is not None:
+            # F4 (rkmh -M): global-occurrence filter — relational rebuild
+            # (the keep-set is unbroadcastable at scale); composes -I when
+            # both set
+            return compute_signatures_min_occ(pages, cfg)
+        if cfg.max_doc_freq is None:
+            return compute_signatures(pages, cfg)
         # -I: the hot set is small by construction for sane thresholds
         # (boilerplate), but COUNT before collecting — a low threshold on
         # a huge corpus would otherwise OOM the driver. Past the guard,
@@ -89,30 +129,32 @@ def dedup_pages(
         if n_hot > cfg.hot_broadcast_limit:
             # dfreq feeds the lazy doc-freq join — unpersist only after
             # the pairs count materializes the whole signature chain
-            sigs = compute_signatures_min_occ(pages, cfg, doc_freq=dfreq)
             to_unpersist.append(dfreq)
-        else:
-            drop = hot_shingles(dfreq, cfg.max_doc_freq)
-            sigs = compute_signatures(pages, cfg, drop_hashes=drop)
-            dfreq.unpersist()
-    else:
-        sigs = compute_signatures(pages, cfg)
-    sigs = sigs.persist()
+            return compute_signatures_min_occ(pages, cfg, doc_freq=dfreq)
+        drop = hot_shingles(dfreq, cfg.max_doc_freq)
+        sigs = compute_signatures(pages, cfg, drop_hashes=drop)
+        dfreq.unpersist()
+        return sigs
 
-    multi_use = containment_threshold is not None
+    sigs = run("signatures", signatures).persist()
+
+    cands = None
     if use_lsh:
-        buckets = band_buckets(sigs, cfg)
         # containment path reads candidates twice → eager checkpoint;
         # plain dedup consumes them once → lazy (checkpoint measured 2×
         # the candidate-stage wall), with the census persist handed back
         # for unpersist after pairs materialize
-        cands = candidate_pairs(
-            buckets, cfg, materialize=multi_use, cleanup=to_unpersist
+        cands = run(
+            "candidates",
+            lambda: candidate_pairs(
+                band_buckets(sigs, cfg), cfg,
+                materialize=containment_threshold is not None,
+                cleanup=to_unpersist,
+            ),
         )
-        pairs = verify_pairs(cands, sigs, cfg)
+        pairs = run("pairs", lambda: verify_pairs(cands, sigs, cfg))
     else:
-        cands = None
-        pairs = brute_force_pairs(sigs, cfg)
+        pairs = run("pairs", lambda: brute_force_pairs(sigs, cfg))
 
     # ONE count job both materializes the persisted pairs and hands the
     # edge count to connected_components (skips its limit().count() job)
@@ -120,8 +162,11 @@ def dedup_pages(
     n_pairs = pairs.count()
     for h in to_unpersist:
         h.unpersist()
-    edges = pairs.select("url_a", "url_b")
-    if containment_threshold is not None and cands is not None:
+
+    def assignments() -> DataFrame:
+        edges = pairs.select("url_a", "url_b")
+        if containment_threshold is None or cands is None:
+            return assign_clusters(pages.select("url"), edges, cfg, n_pairs)
         from rkmh_spark.operators.containment import (
             confirm_substring,
             containment_candidates,
@@ -138,15 +183,8 @@ def dedup_pages(
         edges = edges.unionByName(
             confirmed.select("url_a", "url_b")
         ).distinct()
-        n_pairs = None  # containment edges added — count no longer known
+        return assign_clusters(pages.select("url"), edges, cfg)
 
-    labels = connected_components(
-        edges, cfg.max_cc_iterations, n_edges=n_pairs,
-        driver_threshold=cfg.cc_driver_threshold,
+    return DedupResult(
+        signatures=sigs, pairs=pairs, assignments=run("assignments", assignments)
     )
-    assignments = (
-        pages.select("url")
-        .join(labels.withColumnRenamed("node", "url"), "url", "left")
-        .select("url", F.coalesce("label", "url").alias("cluster_id"))
-    )
-    return DedupResult(signatures=sigs, pairs=pairs, assignments=assignments)

@@ -1,19 +1,15 @@
 """Multimodal column plumbing — image/audio/video as opaque binary + typed
-metadata (task brief: Spark-side plumbing real and tested; codec decode
-REAL for stdlib-decodable formats as of r3 — PCM WAV, 8-bit PNG, binary
-PPM/PGM via functions/codecs.py — and honestly stubbed for formats that
-need external codec libraries, JPEG/MP4/...).
+metadata. Decode is an honest stub: no image, audio or video codec ships
+with this text near-dup engine.
 
 Pattern: media rows carry (url, kind, payload binary, meta map). Feature
 extraction runs as mapInPandas over Arrow batches — binary columns arrive
 as zero-copy buffers, outputs are fixed-width float vectors, so the
-shuffle after extraction is narrow regardless of payload size. Partitioning
-guidance at scale: repartition by url-bucket BEFORE extraction so payload
-bytes move once, then only features flow.
+shuffle after extraction is narrow regardless of payload size.
 
-``decode`` is the single seam: real codecs plug in behind it (PIL/ffmpeg
-import-gated); the default is a deterministic fake (seeded from payload
-bytes) so the pipeline shape is fully testable in this sandbox.
+``decode`` is the single seam: a real codec (PIL/ffmpeg) plugs in behind
+it; the default is a deterministic fake (seeded from payload bytes) so
+the pipeline shape is testable without one.
 """
 
 from __future__ import annotations
@@ -41,16 +37,12 @@ def media_schema() -> T.StructType:
 
 
 def _real_decode(payload: bytes, kind: str) -> np.ndarray:
-    """REAL decode for stdlib-decodable formats (r3 — was a full stub):
-    PCM WAV (manual RIFF parse), 8-bit PNG (zlib + filter
-    reconstruction), binary PPM/PGM — see functions/codecs.py. Formats
-    that need external codec libraries (JPEG, MP4, ...) still raise, with
-    an honest message; PIL/ffmpeg would plug in here."""
-    from rkmh_spark.functions.codecs import real_decode_features
-
-    if payload is None:
-        return np.zeros(FEATURE_DIM, dtype=np.float32)
-    return real_decode_features(payload, kind, dim=FEATURE_DIM)
+    """Real decode needs an external codec library (PIL/ffmpeg), which
+    is not a dependency; plug one in here."""
+    raise NotImplementedError(
+        f"no {kind} codec available: pass a decode callable backed by a "
+        "real codec library to extract_features"
+    )
 
 
 def deterministic_fake_decode(payload: bytes, kind: str) -> np.ndarray:

@@ -1,3 +1,3 @@
-from rkmh_spark.plans.checkpoint import CheckpointManager, resumable_dedup
+from rkmh_spark.plans.checkpoint import CheckpointManager
 
-__all__ = ["CheckpointManager", "resumable_dedup"]
+__all__ = ["CheckpointManager"]

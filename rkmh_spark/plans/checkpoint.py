@@ -6,7 +6,8 @@ kill (north_rule: "resumable from checkpoint with per-partition lineage +
 metrics"). The reference's closest analog is the declared-but-unbuilt
 sketch JSON reload (-F/-R, /root/reference/src/rkmh.cpp:552-582,639-640) —
 resume is a first-class goal here precisely because the reference left it
-unfinished.
+unfinished. The flagship runs its stages through ``CheckpointManager.stage``
+via ``dedup_pages(pages, cfg, checkpoint=mgr)``.
 
 Table format: Iceberg when a catalog is configured (production posture —
 hidden partitioning, snapshot rollback); this sandbox has vanilla PySpark
@@ -194,40 +195,3 @@ class CheckpointManager:
         total = int(sum(r["rows"] for r in per_part))
         return lineage, checksum, total
 
-
-def resumable_dedup(
-    spark: SparkSession,
-    pages: DataFrame,
-    cfg,
-    ckpt: CheckpointManager,
-):
-    """The flagship pipeline with a checkpoint boundary after each stage.
-
-    Stages: signatures → candidates → pairs → assignments. Each is
-    skipped on re-run if its manifest is complete; killing between any
-    two stages and re-running produces byte-equivalent outputs
-    (tests/test_resume.py).
-    """
-    from rkmh_spark.operators.components import connected_components
-    from rkmh_spark.operators.lsh import band_buckets, candidate_pairs
-    from rkmh_spark.operators.signatures import compute_signatures
-    from rkmh_spark.operators.verify import verify_pairs
-
-    sigs = ckpt.stage(spark, "signatures", lambda: compute_signatures(pages, cfg))
-    cands = ckpt.stage(
-        spark, "candidates", lambda: candidate_pairs(band_buckets(sigs, cfg), cfg)
-    )
-    pairs = ckpt.stage(spark, "pairs", lambda: verify_pairs(cands, sigs, cfg))
-
-    def _assign() -> DataFrame:
-        labels = connected_components(
-            pairs.select("url_a", "url_b"), cfg.max_cc_iterations
-        )
-        return (
-            pages.select("url")
-            .join(labels.withColumnRenamed("node", "url"), "url", "left")
-            .select("url", F.coalesce("label", "url").alias("cluster_id"))
-        )
-
-    assignments = ckpt.stage(spark, "assignments", _assign)
-    return assignments

@@ -337,7 +337,7 @@ def process_incremental_batch(
     replays of a batch would double-count its shingles."""
     from pyspark.sql import functions as F
 
-    from rkmh_spark.operators.components import connected_components
+    from rkmh_spark.operators.dedup import assign_clusters
     from rkmh_spark.operators.lsh import band_buckets
     from rkmh_spark.operators.verify import verify_pairs
 
@@ -363,29 +363,28 @@ def process_incremental_batch(
     )
     verified = verify_pairs(pairs, combined, cfg)
 
-    labels = connected_components(
-        verified.select("url_a", "url_b"), cfg.max_cc_iterations,
-        driver_threshold=cfg.cc_driver_threshold,
-    )
     # cluster-id stability: if any component member already holds an
     # assignment from an earlier batch, the whole component adopts the
     # smallest such id (assignments are append-only; a later bridge
     # between two old clusters is recorded through the new pages only —
     # documented incremental-CC tradeoff).
     prev = _read_all(spark, assignments_dir, latest_per="url")
-    if prev is not None:
-        inherit = (
+
+    def inherit(labels: DataFrame) -> DataFrame:
+        old_ids = (
             labels.join(prev.withColumnRenamed("url", "node"), "node", "left")
             .groupBy("label")
             .agg(F.min("cluster_id").alias("old_id"))
         )
-        labels = labels.join(inherit, "label").select(
+        return labels.join(old_ids, "label").select(
             "node", F.coalesce("old_id", "label").alias("label")
         )
-    assign = (
-        sigs_new.select("url")
-        .join(labels.withColumnRenamed("node", "url"), "url", "left")
-        .select("url", F.coalesce("label", "url").alias("cluster_id"))
+
+    assign = assign_clusters(
+        sigs_new.select("url"),
+        verified.select("url_a", "url_b"),
+        cfg,
+        relabel=None if prev is None else inherit,
     )
     _write_batch(assign, assignments_dir, batch_id)
     _write_batch(sigs_new, signatures_dir, batch_id)
@@ -420,7 +419,7 @@ def compact_assignments(
     """
     from pyspark.sql import functions as F
 
-    from rkmh_spark.operators.components import connected_components
+    from rkmh_spark.operators.dedup import assign_clusters
     from rkmh_spark.operators.lsh import candidate_pairs
     from rkmh_spark.operators.verify import verify_pairs
 
@@ -438,17 +437,9 @@ def compact_assignments(
     else:
         pairs = candidate_pairs(bands.drop("band_bucket"), cfg)
         verified = verify_pairs(pairs, sigs, cfg)
-        labels = connected_components(
-            verified.select("url_a", "url_b"),
-            cfg.max_cc_iterations,
-            driver_threshold=cfg.cc_driver_threshold,
-        )
-        assign = (
-            sigs.select("url").distinct()
-            .join(labels.withColumnRenamed("node", "url"), "url", "left")
-            .select("url", F.coalesce("label", "url").alias("cluster_id"))
-            .localCheckpoint(eager=True)  # materialize before any delete
-        )
+        assign = assign_clusters(
+            sigs.select("url").distinct(), verified.select("url_a", "url_b"), cfg
+        ).localCheckpoint(eager=True)  # materialize before any delete
     jvm = spark._jvm
     root = jvm.org.apache.hadoop.fs.Path(assignments_dir)
     fs = root.getFileSystem(spark._jsc.hadoopConfiguration())

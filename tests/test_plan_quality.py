@@ -185,3 +185,30 @@ def test_filter_pushdown_reaches_scan(spark):
         if "PushedFilters" in l and "vec_id" in l and "LessThan" in l
     ]
     assert pushed, plan[:2000]
+
+
+# Spark jobs of one dedup_pages run at TEST_CONFIG, forced by one collect
+# of its assignments, on pages_dataframe(n_clusters=12, dup_rate=0.6,
+# seed=3) in this suite's local[4] session (Spark 4.1.2, cold cache):
+# 19, measured on the tree before the checkpoint argument was folded into
+# dedup_pages. A run without a checkpoint manager must not add jobs.
+DEDUP_PAGES_MAX_JOBS = 19
+
+
+def test_dedup_pages_job_count(spark):
+    from rkmh_spark.config import TEST_CONFIG
+    from rkmh_spark.operators.dedup import dedup_pages
+    from rkmh_spark.sources.pages import pages_dataframe
+
+    sc = spark.sparkContext
+    pages = pages_dataframe(spark, n_clusters=12, dup_rate=0.6, seed=3)
+    spark.catalog.clearCache()
+    group = "test_dedup_pages_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        dedup_pages(pages, TEST_CONFIG).assignments.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= DEDUP_PAGES_MAX_JOBS, n_jobs

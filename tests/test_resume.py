@@ -1,13 +1,17 @@
 """Resumability: kill-after-stage-k then re-run → identical outputs,
-completed stages skipped (BASELINE.md resumability metric)."""
+completed stages skipped (BASELINE.md resumability metric). The
+checkpointed run is dedup_pages(checkpoint=) itself, so it must give the
+same assignments as the plain run under every filter and pass."""
 
+import dataclasses
 import json
 import os
 
 import pytest
 
 from rkmh_spark.config import TEST_CONFIG
-from rkmh_spark.plans.checkpoint import CheckpointManager, resumable_dedup
+from rkmh_spark.operators.dedup import dedup_pages
+from rkmh_spark.plans.checkpoint import CheckpointManager
 from rkmh_spark.sources.pages import pages_dataframe
 
 
@@ -16,10 +20,14 @@ def pages(spark):
     return pages_dataframe(spark, n_clusters=12, dup_rate=0.6, seed=3)
 
 
-def _assignments(spark, pages, root):
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _assignments(spark, pages, root, cfg=TEST_CONFIG, **kw):
     ckpt = CheckpointManager(str(root))
-    df = resumable_dedup(spark, pages, TEST_CONFIG, ckpt)
-    return sorted(map(tuple, df.collect())), ckpt
+    res = dedup_pages(pages, cfg, checkpoint=ckpt, **kw)
+    return _rows(res.assignments), ckpt
 
 
 def test_full_run_then_rerun_identical(spark, pages, tmp_path):
@@ -29,6 +37,27 @@ def test_full_run_then_rerun_identical(spark, pages, tmp_path):
         assert ckpt.is_complete(st), st
     a2, _ = _assignments(spark, pages, tmp_path / "ck")
     assert a1 == a2
+
+
+@pytest.mark.parametrize(
+    "cfg,containment",
+    [
+        (TEST_CONFIG, None),
+        (dataclasses.replace(TEST_CONFIG, max_doc_freq=3), None),  # -I
+        (dataclasses.replace(TEST_CONFIG, min_occ=2), None),  # -M
+        (TEST_CONFIG, 0.9),
+    ],
+    ids=["test_config", "max_doc_freq", "min_occ", "containment"],
+)
+def test_checkpointed_run_matches_plain_run(
+    spark, pages, tmp_path, cfg, containment
+):
+    kw = dict(containment_threshold=containment)
+    a1, ckpt = _assignments(spark, pages, tmp_path / "ck", cfg, **kw)
+    for st in ("signatures", "candidates", "pairs", "assignments"):
+        assert ckpt.is_complete(st), st
+    # checkpointing changes where stages land, never what they compute
+    assert a1 == _rows(dedup_pages(pages, cfg, **kw).assignments)
 
 
 def test_kill_after_stage_resumes_with_same_result(spark, pages, tmp_path):
@@ -129,8 +158,8 @@ def test_iceberg_branch_write_manifest_resume(spark, pages, tmp_path, monkeypatc
         ckpt = CheckpointManager(
             str(root), table_format="iceberg", catalog="ice", spark=spark
         )
-        df = resumable_dedup(spark, pages, TEST_CONFIG, ckpt)
-        return sorted(map(tuple, df.collect())), ckpt
+        res = dedup_pages(pages, TEST_CONFIG, checkpoint=ckpt)
+        return _rows(res.assignments), ckpt
 
     a1, ckpt = _run()
     for st in ("signatures", "candidates", "pairs", "assignments"):

@@ -90,8 +90,8 @@ def test_canonical_url_is_pure_relational(spark):
 
 
 def test_dedup_pages_url_pre_pass(spark):
-    """url_dedup_first: refetch spellings collapse BEFORE sketching; the
-    content pipeline then clusters the survivors exactly as usual."""
+    """url_dedup before dedup_pages: refetch spellings collapse BEFORE
+    sketching; the content pipeline then clusters the survivors as usual."""
     import datetime
 
     from rkmh_spark.config import TEST_CONFIG
@@ -110,7 +110,7 @@ def test_dedup_pages_url_pre_pass(spark):
         ("http://b.example/y", t0, b"", text_b, "en"),
     ]
     pages = spark.createDataFrame(rows, schema=pages_schema())
-    res = dedup_pages(pages, TEST_CONFIG, url_dedup_first=True)
+    res = dedup_pages(url_dedup(pages).drop("canonical_url"), TEST_CONFIG)
     urls = {r["url"] for r in res.assignments.collect()}
     assert "http://a.example/x?utm_source=feed" not in urls  # pre-pass drop
     assert len(urls) == 3
