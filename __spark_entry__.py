@@ -460,19 +460,16 @@ def q_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_simhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup candidates via 16-bit band collisions.
 
-    materialize=True: the census relation feeds both the normal and the
-    hot-bucket branch — the eager-checkpoint path computes it once and
-    unpersists (the r2 lazy default either leaked a cached relation or,
-    after the ADVICE fix, recomputed the census per branch: measured 3×
-    on this query)."""
+    The census relation feeds both sides of the sharded self-join; the
+    default eager-checkpoint path computes it once and unpersists (the
+    r2 lazy spelling either leaked a cached relation or recomputed the
+    census per branch: measured 3× on this query)."""
     from rkmh_spark.operators.dedup_exact import (
         simhash_band_candidates,
         simhash_signatures,
     )
 
-    return simhash_band_candidates(
-        simhash_signatures(_docs(spark, sf_dir)), materialize=True
-    )
+    return simhash_band_candidates(simhash_signatures(_docs(spark, sf_dir)))
 
 
 def q_simhash_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -5,7 +5,9 @@ session config) but runs every headline query TWICE: the first run pays
 the query's whole-stage-codegen/JIT compile of its unique operators, the
 second measures steady-state execution. The delta isolates compile cost
 from data-path cost (guide §1: decide whether time goes to compute or
-overhead before optimizing).
+overhead before optimizing). The Spark cache is cleared before each
+query and again between its two runs, so a relation the cold run left
+persisted cannot serve the warm run.
 
 Usage: python bench_extra.py [query ...]   (default: bench.py's headline set)
 """
@@ -59,10 +61,12 @@ def main() -> None:
 
     out: dict[str, dict[str, float]] = {}
     for name in names:
+        spark.catalog.clearCache()
         spark.sparkContext.setJobDescription(f"{name} cold")
         t0 = time.perf_counter()
         _run(qfns[name](spark, sf_dir))
         cold = round(time.perf_counter() - t0, 3)
+        spark.catalog.clearCache()
         spark.sparkContext.setJobDescription(f"{name} warm")
         t0 = time.perf_counter()
         _run(qfns[name](spark, sf_dir))

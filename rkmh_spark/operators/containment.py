@@ -25,6 +25,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from rkmh_spark.config import DedupConfig
+from rkmh_spark.operators.lsh import bucket_pairs
 
 
 @pandas_udf(T.DoubleType())
@@ -68,37 +69,16 @@ def containment_candidates(
     smallest hash of B is the smallest of A's hashes restricted to B — its
     rank in A's order is Geometric(f) for containment fraction f, so B's
     bottom anchor lands in A's bottom-m with P = 1-(1-f)^m (m=16, f=0.2 →
-    0.97). Docs sharing ANY bottom-m hash become candidates; the census/
-    cap/salt handling mirrors the LSH bucket path — hot anchors are NOT
-    dropped (boilerplate-heavy corpora put the most-contained pages in
-    exactly those anchors) but sharded through the salted triangle join.
+    0.97). Docs sharing ANY bottom-m hash become candidates, through the
+    same ``bucket_pairs`` generator as the LSH bands — hot anchors are
+    NOT dropped (boilerplate-heavy corpora put the most-contained pages
+    in exactly those anchors) but sharded over ~(sz/cap)² tasks. The
+    pair set comes back eagerly checkpointed.
     """
-    from rkmh_spark.operators.lsh import _salted_triangle_pairs, bucket_census
-
     anchors = signatures.select(
         "url", F.explode(F.slice("sketch", 1, n_anchors)).alias("anchor")
     )
-    # census via groupBy + join back (bucket_census, r6): hot anchors are
-    # exactly the ones a count window would buffer whole in one task
-    sized = bucket_census(anchors, ["anchor"]).persist()
-    normal = sized.where(F.col("sz") <= cfg.bucket_cap)
-    a, b = normal.alias("a"), normal.alias("b")
-    normal_pairs = (
-        a.join(b, "anchor")
-        .where(F.col("a.url") < F.col("b.url"))
-        .select(F.col("a.url").alias("url_a"), F.col("b.url").alias("url_b"))
-    )
-    hot = sized.where(F.col("sz") > cfg.bucket_cap)
-    hot_pairs = _salted_triangle_pairs(hot, cfg.bucket_cap, keys=["anchor"])
-    try:
-        pairs = (
-            normal_pairs.unionByName(hot_pairs)
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        sized.unpersist()
-    return pairs
+    return bucket_pairs(anchors, ["anchor"], cfg.bucket_cap)
 
 
 def containment_pairs(

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from rkmh_spark.functions.text import tokens
+from rkmh_spark.operators.lsh import bucket_pairs
 
 
 def exact_duplicate_groups(documents: DataFrame, text_col: str = "text") -> DataFrame:
@@ -85,7 +86,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     max_gram_df: int = 1000,
     hash_keys: bool = False,
-    cleanup: list | None = None,
 ) -> DataFrame:
     """Doc pairs with distinct-token-n-gram Jaccard >= threshold, computed
     over the gram space EXCLUDING grams present in more than
@@ -130,13 +130,8 @@ def ngram_jaccard_pairs(
     )
     # raw is generated twice (census + join side) — map-side-only work;
     # the FILTERED relation keeps the persist because three plan branches
-    # (sizes + both self-join sides) read it, as in r5. ``cleanup``:
-    # long-lived callers append-receive the persist handle and unpersist
-    # after their action materializes the result (the candidate_pairs
-    # pattern); one-shot callers may leave it to session teardown.
+    # (sizes + both self-join sides) read it, as in r5.
     grams = raw.join(keep, key).persist()
-    if cleanup is not None:
-        cleanup.append(grams)
     sizes = grams.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
     a, b = grams.alias("a"), grams.alias("b")
     shared = (
@@ -225,10 +220,12 @@ def simhash_dup_pairs(
     extra shuffle beyond the two id-key joins. The signature relation
     feeds three branches (banding + both verify joins); with
     ``materialize=True`` (the execution path) it is persisted for the
-    duration of the call and the result eagerly checkpointed before the
-    caches are released — same hygiene as ``simhash_band_candidates``.
-    ``materialize=False`` returns the fully lazy plan (signatures
-    recomputed per branch) for plan inspection and tiny inputs.
+    duration of the call, the candidates stay lazy, and the result is
+    eagerly checkpointed before the caches are released.
+    ``materialize=False`` returns the verify join lazy (signatures
+    recomputed per branch) over eagerly checkpointed candidates — for
+    plan inspection of the verify and tiny inputs; the candidate plan
+    is gated on ``bucket_pairs`` directly.
     """
     if max_hamming > 3:
         raise ValueError(
@@ -236,14 +233,11 @@ def simhash_dup_pairs(
             f"got max_hamming={max_hamming}"
         )
     sigs = simhash_signatures(documents, text_col)
-    cleanup: list = []
+    cleanup: list | None = None
     if materialize:
         sigs = sigs.persist()
-        cand = simhash_band_candidates(
-            sigs, bucket_cap=bucket_cap, cleanup=cleanup
-        )
-    else:
-        cand = simhash_band_candidates(sigs, bucket_cap=bucket_cap)
+        cleanup = []
+    cand = simhash_band_candidates(sigs, bucket_cap=bucket_cap, cleanup=cleanup)
     sa = sigs.withColumnsRenamed({"doc_id": "doc_a", "simhash": "sim_a"})
     sb = sigs.withColumnsRenamed({"doc_id": "doc_b", "simhash": "sim_b"})
     out = (
@@ -272,7 +266,6 @@ def simhash_dup_pairs(
 def simhash_band_candidates(
     signatures: DataFrame,
     bucket_cap: int = 200,
-    materialize: bool = False,
     cleanup: list | None = None,
 ) -> DataFrame:
     """Pairs colliding on any 16-bit quarter of the SimHash (≤3-bit
@@ -281,15 +274,15 @@ def simhash_band_candidates(
     Skew guard: 16-bit band keys mean an expected bucket size of
     n/65536 per band — at 10⁹ docs that is ~15k docs per bucket and a
     naive self-join puts ~10⁸ pair rows on ONE key. Same defense as the
-    MinHash-LSH path: groupBy+join-back census on the (band, key) bucket
-    (bucket_census — not a count window, which would buffer a hot band's
-    whole membership in one WindowExec task), size-1 buckets pruned,
-    ≤cap buckets take the plain join, hot buckets go through the salted
-    triangle join (every pair still produced, spread over ~(sz/cap)²
-    tasks).
-    """
-    from rkmh_spark.operators.lsh import _salted_triangle_pairs, bucket_census
+    MinHash-LSH path: the (band, key) buckets go through
+    ``lsh.bucket_pairs`` (groupBy census, size-1 buckets pruned, every
+    bucket sharded into ceil(sz/cap) salt shards — every pair still
+    produced, a hot bucket's spread over ~(sz/cap)² tasks).
 
+    ``cleanup``: as in ``bucket_pairs`` — with a list the pairs stay lazy
+    and the census handle is appended for the caller to unpersist;
+    without one they are eagerly checkpointed and the census released.
+    """
     banded = signatures.select(
         "doc_id",
         F.explode(
@@ -306,37 +299,11 @@ def simhash_band_candidates(
             )
         ).alias("bk"),
     ).select("doc_id", "bk.band", "bk.key")
-
-    # the census relation feeds both pair branches; persist only when a
-    # handle owner exists (materialize unpersists here, cleanup hands the
-    # handle to the caller) — the bare-lazy path forgoes the persist
-    # rather than leak a cached relation per call (ADVICE r2)
-    sized = bucket_census(banded, ["band", "key"])
-    if materialize or cleanup is not None:
-        sized = sized.persist()
-    normal = sized.where(F.col("sz") <= bucket_cap)
-    a, b = normal.alias("a"), normal.alias("b")
-    normal_pairs = (
-        a.join(b, ["band", "key"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-    )
-    hot = sized.where(F.col("sz") > bucket_cap)
-    hot_pairs = _salted_triangle_pairs(
-        hot,
+    return bucket_pairs(
+        banded,
+        ["band", "key"],
         bucket_cap,
-        keys=["band", "key"],
-        node_col="doc_id",
-        out_cols=("doc_a", "doc_b"),
+        node="doc_id",
+        out=("doc_a", "doc_b"),
+        cleanup=cleanup,
     )
-    pairs = normal_pairs.unionByName(hot_pairs).distinct()
-    if materialize:  # for callers that reuse the pair set across branches
-        try:
-            pairs = pairs.localCheckpoint(eager=True)
-        finally:
-            sized.unpersist()
-    elif cleanup is not None:
-        cleanup.append(sized)
-    return pairs

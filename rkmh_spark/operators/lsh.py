@@ -13,9 +13,11 @@ Skew ("salted explode-groupBy", north_rule): Zipfian shingles make hot
 buckets whose naive self-join is O(sz²) in ONE task. Defenses, in order:
 1. the doc-frequency hot-shingle filter upstream (the reference's own
    answer, ``-I`` /root/reference/src/rkmh.cpp:835-836);
-2. a bucket-size census; buckets over ``bucket_cap`` get a deterministic
-   salt shard per member and pair generation runs as a sharded triangle
-   join — the same pair set, spread over ~(sz/cap)² tasks;
+2. a bucket-size census, then ONE sharded self-join for every bucket
+   (``bucket_pairs``): each member gets a deterministic salt shard out
+   of m = ceil(sz/cap), so a bucket within ``bucket_cap`` is a plain
+   self-join (m = 1) and a hot one yields the same pair set spread over
+   ~(sz/cap)² tasks;
 3. AQE skew-join splitting for residual imbalance.
 """
 
@@ -33,6 +35,11 @@ def bucket_census(
 ) -> DataFrame:
     """members + per-key ``sz`` column, keys with < ``min_sz`` members
     dropped — the groupBy + join-back spelling, NOT a count window.
+
+    Precondition: no key column is null. groupBy counts null keys as one
+    group, but the equi-join back never matches a null, so members with
+    a null key silently drop out (every ``bucket_pairs`` caller keys on
+    hashes or bit patterns of non-null values).
 
     ``count(*) over (partition by key)`` ships every row of a hot key to
     ONE WindowExec task and buffers it — a one-reducer spill bomb on a
@@ -76,102 +83,89 @@ def candidate_pairs(
     materialize: bool = True,
     cleanup: list | None = None,
 ) -> DataFrame:
-    """buckets → distinct (url_a, url_b) with url_a < url_b.
-
-    Census first: size-1 buckets are pruned before any join (most buckets,
-    at web scale); 2..cap buckets take the plain self-equi-join; > cap
-    buckets take the salted triangle join.
+    """buckets(url, band_id, band_hash) → distinct (url_a, url_b) with
+    url_a < url_b, through ``bucket_pairs`` at ``cfg.bucket_cap``.
 
     ``materialize=True`` (default): the pair set is localCheckpointed
-    eagerly and the intermediate ``sized`` census relation is unpersisted
-    before returning — the persist is needed because both pair branches
-    read it, but leaving it cached leaked one relation per call in the
-    streaming loop (ADVICE r1). The returned DataFrame is already
-    computed, lineage-free, and safe to reuse across plan branches.
-
-    ``materialize=False``: single-consumer callers (the batch dedup
-    pipeline consumes candidates exactly once, in verify) skip the eager
-    checkpoint — measured 2× the candidate-stage wall at sf0.1 — and take
-    the ``sized`` persist handle via ``cleanup`` (a list the caller
-    unpersists after its own action materializes the chain).
+    eagerly and the census is released before returning — lineage-free
+    and safe to reuse across plan branches. ``materialize=False``: the
+    pairs come back lazy and the census persist handle goes to
+    ``cleanup`` (a list the caller unpersists after its own action) —
+    single-consumer callers skip the eager checkpoint, measured 2× the
+    candidate-stage wall at sf0.1. Without a ``cleanup`` list there is no
+    owner for that handle, so the pairs are checkpointed eagerly as well.
     """
-    # bucket sizes via groupBy + join back (bucket_census): one more
-    # exchange than the r5 window spelling, but no single-task buffering
-    # of a hot band's whole membership (VERDICT r5 #1 — the window census
-    # was the flagship's one scale-killer-class caveat). The sized
-    # relation is persisted because both pair branches read it.
-    sized = bucket_census(buckets, _BUCKET_KEY).persist()
-
-    normal = sized.where(F.col("sz") <= cfg.bucket_cap).drop("sz")
-    a, b = normal.alias("a"), normal.alias("b")
-    normal_pairs = (
-        a.join(b, _BUCKET_KEY)
-        .where(F.col("a.url") < F.col("b.url"))
-        .select(F.col("a.url").alias("url_a"), F.col("b.url").alias("url_b"))
+    return bucket_pairs(
+        buckets,
+        _BUCKET_KEY,
+        cfg.bucket_cap,
+        cleanup=None if materialize else cleanup,
     )
 
-    hot = sized.where(F.col("sz") > cfg.bucket_cap)
-    hot_pairs = _salted_triangle_pairs(hot, cfg.bucket_cap)
 
-    pairs = normal_pairs.unionByName(hot_pairs).distinct()
-    if materialize:
-        try:
-            pairs = pairs.localCheckpoint(eager=True)
-        finally:
-            sized.unpersist()
-    elif cleanup is not None:
-        cleanup.append(sized)
-    return pairs
-
-
-def _salted_triangle_pairs(
-    hot: DataFrame,
+def bucket_pairs(
+    members: DataFrame,
+    keys: list[str],
     cap: int,
-    keys: list[str] | None = None,
-    node_col: str = "url",
-    out_cols: tuple[str, str] = ("url_a", "url_b"),
+    node: str = "url",
+    out: tuple[str, str] = ("url_a", "url_b"),
+    cleanup: list | None = None,
 ) -> DataFrame:
-    """Cover all intra-bucket pairs of hot buckets without one giant task.
+    """members(node, *keys) → distinct (out[0], out[1]) with
+    out[0] < out[1]: every pair of nodes sharing a bucket. The one pair
+    generator behind the LSH, SimHash, containment-anchor and
+    embedding-bucket candidate passes.
 
-    Each member gets shard = xxhash64(url) mod m (m = ceil(sz/cap),
-    deterministic, no window). For every unordered shard pair (i ≤ j),
-    members of shard i meet members of shard j: the left relation
-    replicates each member to keys (i=shard, j ∈ [shard, m)), the right to
-    keys (i ∈ [0, shard], j=shard); the equi-join on (bucket, i, j) then
-    emits each member pair exactly once per bucket.
+    Census first (``bucket_census``): size-1 buckets are pruned before
+    any join. Each member then gets m = ceil(sz/cap) and a deterministic
+    shard = xxhash64(node) mod m (no window). For every unordered shard
+    pair (i ≤ j), members of shard i meet members of shard j: the left
+    relation replicates each member to (i=shard, j ∈ [shard, m)), the
+    right to (i ∈ [0, shard], j=shard), and ONE equi-join on
+    (keys, i, j) emits each member pair exactly once per bucket. A
+    bucket of at most ``cap`` members is the m = 1 case — the plain
+    self-join; a hot bucket's O(sz²) pairs spread over ~(sz/cap)²/2
+    tasks instead of one.
 
-    ``keys``: the bucket-key columns (default: LSH band key). The
-    containment anchor pass reuses this with keys=["anchor"].
+    The census relation feeds both join sides, so it is persisted.
+    With a ``cleanup`` list the pairs come back lazy and the census
+    handle is appended to the list; the caller unpersists it after its
+    own action. Without one the pairs are localCheckpointed eagerly and
+    the census is released before returning.
     """
-    if keys is None:
-        keys = _BUCKET_KEY
-    node = node_col
-    hot = hot.withColumn(
-        "m", F.ceil(F.col("sz") / F.lit(cap)).cast("long")
-    ).withColumn("shard", F.pmod(F.xxhash64(node), F.col("m")))
-
-    left = hot.select(
+    sized = bucket_census(members, keys).persist()
+    if cleanup is not None:
+        cleanup.append(sized)
+    m = F.ceil(F.col("sz") / F.lit(cap)).cast("long")
+    sharded = sized.select(*keys, node, m.alias("m")).withColumn(
+        "shard", F.pmod(F.xxhash64(node), F.col("m"))
+    )
+    left = sharded.select(
         *keys,
-        F.col(node),
+        node,
         F.col("shard").alias("i"),
         F.explode(F.sequence(F.col("shard"), F.col("m") - 1)).alias("j"),
     )
-    right = hot.select(
+    right = sharded.select(
         *keys,
-        F.col(node),
+        node,
         F.explode(F.sequence(F.lit(0).cast("long"), F.col("shard"))).alias("i"),
         F.col("shard").alias("j"),
     )
-    # NB: cannot filter a.node < b.node here — a pair whose smaller node
-    # sits in the HIGHER shard only ever joins in the (bigger, smaller)
-    # orientation (left side carries shard i, right side shard j, i <= j).
-    # Normalize with least/greatest instead; callers dedup.
-    return (
+    a, b = F.col(f"a.{node}"), F.col(f"b.{node}")
+    # within one shard (i = j) both orientations join, so keep a < b;
+    # across shards (i < j) each pair joins once, in whichever
+    # orientation its shards give — normalise with least/greatest
+    pairs = (
         left.alias("a")
         .join(right.alias("b"), keys + ["i", "j"])
-        .where(F.col(f"a.{node}") != F.col(f"b.{node}"))
-        .select(
-            F.least(F.col(f"a.{node}"), F.col(f"b.{node}")).alias(out_cols[0]),
-            F.greatest(F.col(f"a.{node}"), F.col(f"b.{node}")).alias(out_cols[1]),
-        )
+        .where((F.col("i") < F.col("j")) | (a < b))
+        .select(F.least(a, b).alias(out[0]), F.greatest(a, b).alias(out[1]))
+        .distinct()
     )
+    if cleanup is not None:
+        return pairs
+    try:
+        return pairs.localCheckpoint(eager=True)
+    finally:
+        sized.unpersist()

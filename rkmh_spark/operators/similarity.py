@@ -13,6 +13,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 
+from rkmh_spark.operators.lsh import bucket_pairs
+
 
 def _dot(a, b, dim: int | None = None):
     """Dot product. With ``dim`` known, an UNROLLED codegen expression
@@ -21,15 +23,15 @@ def _dot(a, b, dim: int | None = None):
     bit-identical, but it stays inside whole-stage codegen where the
     higher-order-function spelling runs interpreted per element (r6).
 
-    CONTRACT: ``dim`` must equal the true vector width. Smaller silently
-    computes a truncated dot product (no error); larger raises
-    INVALID_ARRAY_INDEX under ANSI mode (pinned true in get_spark).
-    Pass dim=None (HOF fold) for ragged/unknown-width columns."""
+    CONTRACT: ``dim`` must equal the true vector width; a row whose
+    vector has another width raises instead of scoring a truncated dot
+    product (``_width_checked``). Pass dim=None (HOF fold) for
+    ragged/unknown-width columns."""
     if dim is not None:
         s = F.lit(0.0).cast("double")
         for i in range(dim):
             s = s + a[i] * b[i]
-        return s
+        return _width_checked(s, dim, a, b)
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0).cast("double"),
@@ -42,10 +44,23 @@ def _norm(a, dim: int | None = None):
         s = F.lit(0.0).cast("double")
         for i in range(dim):
             s = s + a[i] * a[i]
-        return F.sqrt(s)
+        return F.sqrt(_width_checked(s, dim, a))
     return F.sqrt(
         F.aggregate(a, F.lit(0.0).cast("double"), lambda acc, v: acc + v * v)
     )
+
+
+def _width_checked(expr, dim: int, *vecs):
+    """``expr`` (read at indices [0, dim) of ``vecs``), or a runtime error
+    when a vector's width is not ``dim`` — an under-declared width would
+    otherwise score a silently truncated cosine, an over-declared one
+    fail on an index. A null vector stays null."""
+    bad = F.size(vecs[0]) != dim
+    for v in vecs[1:]:
+        bad = bad | (F.size(v) != dim)
+    return F.when(
+        bad, F.raise_error(F.lit(f"vector width differs from dim={dim}"))
+    ).otherwise(expr)
 
 
 def with_cosine(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame:
@@ -158,40 +173,6 @@ def embedding_near_dup_pairs(
     )
 
 
-def _bucket_pairs_capped(
-    buckets: DataFrame, bucket_cap: int, id_col: str = "id"
-) -> DataFrame:
-    """All intra-bucket id pairs (id_a < id_b) with the same census/cap/
-    salt defense as the MinHash-LSH path: size-1 buckets pruned, ≤cap
-    buckets plain self-join, hot buckets through the salted triangle join
-    (every pair still produced — anisotropic embeddings can pile a large
-    fraction of vectors into a few sign-pattern buckets). Census via
-    groupBy + join back (bucket_census, r6) — a count window would
-    buffer a dominant sign-pattern bucket's whole membership in one
-    WindowExec task before the cap/salt machinery could help."""
-    from rkmh_spark.operators.lsh import _salted_triangle_pairs, bucket_census
-
-    sized = bucket_census(buckets, ["bucket"]).persist()
-    normal = sized.where(F.col("sz") <= bucket_cap)
-    a, b = normal.alias("a"), normal.alias("b")
-    normal_pairs = (
-        a.join(b, "bucket")
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-    )
-    hot = sized.where(F.col("sz") > bucket_cap)
-    hot_pairs = _salted_triangle_pairs(
-        hot, bucket_cap, keys=["bucket"], node_col=id_col, out_cols=("id_a", "id_b")
-    )
-    try:
-        pairs = normal_pairs.unionByName(hot_pairs).localCheckpoint(eager=True)
-    finally:
-        sized.unpersist()
-    return pairs
-
-
 def embedding_near_dup_pairs_lsh(
     embeddings: DataFrame,
     threshold: float = 0.95,
@@ -205,16 +186,20 @@ def embedding_near_dup_pairs_lsh(
 ) -> DataFrame:
     """Scale path: multi-table hyperplane buckets → candidates → exact
     re-check. P(bucket match | angle θ) = (1-θ/π)^n_planes per table;
-    cos 0.95 → θ≈18° → ~0.66/table, 4 tables → ~0.987 capture. Hot
-    buckets go through the census/cap/salt guard (r2 — r1 self-joined
-    buckets uncapped)."""
+    cos 0.95 → θ≈18° → ~0.66/table, 4 tables → ~0.987 capture. Each
+    table's buckets go through ``lsh.bucket_pairs`` (census, size-1
+    buckets pruned, hot buckets sharded — anisotropic embeddings can
+    pile a large fraction of vectors into a few sign-pattern buckets),
+    one eagerly checkpointed pair set per table."""
     e = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     cands = None
     for t in range(n_tables):
         b = hyperplane_buckets(
             embeddings, dim, n_planes, seed + 1000 * t, id_col, vec_col
         ).withColumnRenamed("vec_id", "id")
-        p = _bucket_pairs_capped(b, bucket_cap)
+        p = bucket_pairs(
+            b, ["bucket"], bucket_cap, node="id", out=("id_a", "id_b")
+        )
         cands = p if cands is None else cands.unionByName(p)
     cands = cands.distinct()
     j = (
@@ -299,11 +284,11 @@ def lsh_topk(
     ``bucket_cap``: neighbor-shard size for the bipartite skew guard —
     hot buckets are split into ceil(size/cap) shards.
     ``dim`` must equal the actual vector width (the r1 bug class). Since
-    r6's unrolled dot: dim SMALLER than the vectors silently buckets on
-    the leading components only (coarser but valid); dim LARGER fails
-    loudly with INVALID_ARRAY_INDEX under ANSI mode — no silent
-    all-in-one-bucket collapse in either direction
-    (test_embedding_lsh.py pins both).
+    r6's unrolled dot: dim SMALLER than the vectors buckets on the
+    leading components only (coarser but valid) and the exact re-rank
+    then raises on the width mismatch; dim LARGER fails loudly with
+    INVALID_ARRAY_INDEX under ANSI mode — no silent all-in-one-bucket
+    collapse in either direction (test_embedding_lsh.py pins both).
     """
     e = embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec"))
     qe = (

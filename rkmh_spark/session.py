@@ -37,8 +37,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_size))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # Spark 4 default, pinned explicitly: operators rely on ANSI's
-        # loud INVALID_ARRAY_INDEX for mis-declared vector widths
-        # (similarity._dot contract) rather than silent null collapse
+        # loud INVALID_ARRAY_INDEX for over-declared vector widths
+        # (similarity.hyperplane_buckets) rather than silent null collapse
         .config("spark.sql.ansi.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

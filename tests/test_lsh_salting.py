@@ -54,3 +54,56 @@ def test_duplicate_membership_single_bucket(spark):
     }
     assert got == _expected_pairs(buckets)
     assert len(got) == 15
+
+
+# The four call shapes of lsh.bucket_pairs: bucket key columns (with the
+# caller's types), node column and type, output columns.
+_SHAPES = {
+    "lsh": ("band_id int, band_hash long", "url string", ("url_a", "url_b")),
+    "containment": ("anchor long", "url string", ("url_a", "url_b")),
+    "simhash": ("band int, key long", "doc_id long", ("doc_a", "doc_b")),
+    "embedding": ("bucket long", "id long", ("id_a", "id_b")),
+}
+
+_CAP = 3
+# member node numbers per bucket: a singleton, sz = cap (m = 1),
+# sz = cap + 1 (m = 2), sz = 4·cap (m = 4), and node 1 in two buckets
+_BUCKETS = [[1], [1, 2, 3], [4, 5, 6, 7], list(range(20, 32))]
+
+
+@pytest.mark.parametrize("lazy", [False, True], ids=["eager", "cleanup"])
+@pytest.mark.parametrize("shape", sorted(_SHAPES))
+def test_bucket_pairs_equal_brute_force(spark, shape, lazy):
+    from rkmh_spark.operators.lsh import bucket_pairs
+
+    key_schema, node_schema, out = _SHAPES[shape]
+    keys = [c.split(" ")[0] for c in key_schema.split(", ")]
+    node = node_schema.split(" ")[0]
+    as_node = (lambda i: f"u{i:02d}") if "string" in node_schema else int
+    # bucket b's key: (b % 2, 100 + b) for two key columns, (100 + b,) for one
+    rows = [
+        (as_node(i), *([b % 2] if len(keys) == 2 else []), 100 + b)
+        for b, ms in enumerate(_BUCKETS)
+        for i in ms
+    ]
+    members = spark.createDataFrame(rows, f"{node_schema}, {key_schema}")
+    expected = _expected_pairs(
+        {b: [as_node(i) for i in ms] for b, ms in enumerate(_BUCKETS)}
+    )
+
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cleanup = [] if lazy else None
+    pairs = bucket_pairs(members, keys, _CAP, node=node, out=out, cleanup=cleanup)
+    try:
+        got = [tuple(r) for r in pairs.select(*out).collect()]
+    finally:
+        for h in cleanup or []:
+            h.unpersist()
+    assert len(got) == len(set(got))  # distinct
+    assert set(got) == expected
+    assert all(a < b for a, b in got)
+    # the census persist is released by bucket_pairs itself (eager) or
+    # handed to the caller as the one entry of ``cleanup``
+    assert cleanup is None or len(cleanup) == 1
+    assert cache.isEmpty()

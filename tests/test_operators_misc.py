@@ -1,9 +1,8 @@
-"""Tests: containment, merge sketch, search, fingerprint, sinks, multimodal."""
+"""Tests: containment, merge sketch, search, fingerprint, sinks."""
 
 import datetime
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from rkmh_spark.config import TEST_CONFIG
@@ -158,38 +157,3 @@ def test_vw_lines(spark):
     line = vowpal_wabbit_lines(compute_signatures(pages, TEST_CONFIG)).first()["line"]
     assert line.startswith("1.0 v://a_b|sketch ")
     assert len(line.split(" ")) > 3
-
-
-# ---------------------------------------------------------------------- multimodal
-def test_multimodal_feature_plumbing(spark):
-    from rkmh_spark.operators.multimodal import (
-        FEATURE_DIM,
-        extract_features,
-        media_schema,
-        sample_frames,
-    )
-
-    rows = [
-        ("m://img1", "image", b"\x89PNG fake bytes " * 40, {"w": "640"}),
-        ("m://img1dup", "image", b"\x89PNG fake bytes " * 40, {"w": "640"}),
-        ("m://vid", "video", bytes(range(256)) * 8, {"fps": "30"}),
-        ("m://empty", "audio", None, None),
-    ]
-    media = spark.createDataFrame(rows, schema=media_schema())
-    feats = {r["url"]: r for r in extract_features(media).collect()}
-    assert all(len(r["features"]) == FEATURE_DIM for r in feats.values())
-    # deterministic: identical payloads → identical features
-    assert feats["m://img1"]["features"] == feats["m://img1dup"]["features"]
-    assert feats["m://img1"]["features"] != feats["m://vid"]["features"]
-    assert feats["m://empty"]["payload_bytes"] == 0
-
-    frames = sample_frames(media, n_frames=4).where(F.col("url") == "m://vid").collect()
-    assert len(frames) == 4
-    assert [f["frame_idx"] for f in sorted(frames, key=lambda r: r["frame_idx"])] == [0, 1, 2, 3]
-
-
-def test_real_decode_raises_not_implemented():
-    from rkmh_spark.operators.multimodal import _real_decode
-
-    with pytest.raises(NotImplementedError):
-        _real_decode(b"bytes", "image")

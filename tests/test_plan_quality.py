@@ -129,37 +129,55 @@ def test_no_window_census_on_content_keys(spark, name):
 
 def test_no_window_census_in_candidate_builders(spark):
     """The LSH / SimHash / containment / embedding-bucket candidate
-    builders checkpoint their pair sets, so the benched queries' final
-    plans don't show the census — gate the builders' lazy plans."""
+    passes share one generator, ``lsh.bucket_pairs``, whose default
+    checkpoints the pair set, so the benched queries' final plans don't
+    show the census — gate its lazy plan (``cleanup`` mode) on each of
+    the four call shapes instead."""
+    from pyspark.sql import functions as F
+
     from rkmh_spark.config import TEST_CONFIG
-    from rkmh_spark.operators.containment import containment_candidates
     from rkmh_spark.operators.dedup_exact import (
         simhash_band_candidates,
         simhash_signatures,
     )
-    from rkmh_spark.operators.lsh import band_buckets, candidate_pairs
+    from rkmh_spark.operators.lsh import band_buckets, bucket_pairs, candidate_pairs
     from rkmh_spark.operators.signatures import compute_signatures
+    from rkmh_spark.operators.similarity import hyperplane_buckets
     from rkmh_spark.sources.pages import documents_as_pages
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    pages = documents_as_pages(docs)
-    sigs = compute_signatures(pages, TEST_CONFIG)
+    sigs = compute_signatures(documents_as_pages(docs), TEST_CONFIG)
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    cap = TEST_CONFIG.bucket_cap
+    cleanup: list = []
     lazy_plans = {
         "lsh_candidate_pairs": candidate_pairs(
-            band_buckets(sigs, TEST_CONFIG), TEST_CONFIG, materialize=False
+            band_buckets(sigs, TEST_CONFIG), TEST_CONFIG,
+            materialize=False, cleanup=cleanup,
         ),
         "simhash_band_candidates": simhash_band_candidates(
-            simhash_signatures(docs.select("doc_id", "text"))
+            simhash_signatures(docs.select("doc_id", "text")), cleanup=cleanup
+        ),
+        "containment_anchors": bucket_pairs(
+            sigs.select("url", F.explode(F.slice("sketch", 1, 16)).alias("anchor")),
+            ["anchor"], cap, cleanup=cleanup,
+        ),
+        "embedding_buckets": bucket_pairs(
+            hyperplane_buckets(emb, 64).withColumnRenamed("vec_id", "id"),
+            ["bucket"], cap, node="id", out=("id_a", "id_b"), cleanup=cleanup,
         ),
     }
-    for name, df in lazy_plans.items():
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        _assert_no_census_partition_keys(name, plan)
-    # containment_candidates checkpoints internally — source-level gate:
-    import inspect
-
-    src = inspect.getsource(containment_candidates)
-    assert "bucket_census" in src and "Window" not in src
+    try:
+        assert len(cleanup) == len(lazy_plans)  # one census handle each
+        for name, df in lazy_plans.items():
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "functions=[count(1)]" in plan, name  # the groupBy census
+            assert "CartesianProduct" not in plan, name
+            assert "BroadcastNestedLoopJoin" not in plan, name
+            _assert_no_census_partition_keys(name, plan)
+    finally:
+        for h in cleanup:
+            h.unpersist()
 
 
 def test_parquet_scan_prunes_columns(spark):
@@ -190,9 +208,11 @@ def test_filter_pushdown_reaches_scan(spark):
 # Spark jobs of one dedup_pages run at TEST_CONFIG, forced by one collect
 # of its assignments, on pages_dataframe(n_clusters=12, dup_rate=0.6,
 # seed=3) in this suite's local[4] session (Spark 4.1.2, cold cache):
-# 19, measured on the tree before the checkpoint argument was folded into
-# dedup_pages. A run without a checkpoint manager must not add jobs.
-DEDUP_PAGES_MAX_JOBS = 19
+# 16 since every bucket goes through the one sharded self-join of
+# lsh.bucket_pairs (19 with the separate plain-join + salted-hot-bucket
+# branches and their union). A run without a checkpoint manager must not
+# add jobs.
+DEDUP_PAGES_MAX_JOBS = 16
 
 
 def test_dedup_pages_job_count(spark):

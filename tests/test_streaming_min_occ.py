@@ -34,8 +34,8 @@ def test_incremental_cms_min_occ_matches_batch(spark, tmp_path):
     rows = generate_pages(n_clusters=8, dup_rate=1.0, seed=77)
     cfg = dataclasses.replace(TEST_CONFIG, min_occ=2)
 
-    # offline-built counter (the ST2 stateful counter / corpus-scan
-    # posture); deliberately NOT updated inside the batch loop —
+    # offline-built counter (the corpus-scan posture); deliberately
+    # NOT updated inside the batch loop —
     # at-least-once replays would double-count
     cms = CountMinSketchNP(seed=7)
     for r in rows:
