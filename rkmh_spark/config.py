@@ -37,7 +37,7 @@ class DedupConfig:
 
     # --- LSH banding (over K = num_bands*band_rows independent minhashes) ---
     num_bands: int = 32         # b ; capture prob = 1-(1-j^r)^b
-    band_rows: int = 4          # r ; K=128: capture ≥ 0.999 for j ≥ 0.55
+    band_rows: int = 4          # r ; K=128: capture 0.954 at j=0.55, ≥ 0.999 from j≈0.67
     bucket_cap: int = 200       # census cap before salting a hot bucket
 
     # --- verification ---

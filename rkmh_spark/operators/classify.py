@@ -19,11 +19,28 @@ too large to band-join cheaply, use the dedup pipeline instead.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from rkmh_spark.config import DedupConfig
 from rkmh_spark.operators.lsh import band_buckets
-from rkmh_spark.operators.verify import _shared_count
+from rkmh_spark.operators.verify import shared_count, with_repeats
+
+
+def _scored_sides(
+    query_sigs: DataFrame, ref_sigs: DataFrame
+) -> tuple[DataFrame, DataFrame, Column]:
+    """(url, q_sketch, q_rep), (ref, r_sketch, r_rep) — both sides with
+    their per-document repeated-value structs — and the multiset shared
+    count of a joined (query, reference) row."""
+    q = with_repeats(
+        query_sigs.select(F.col("url"), F.col("sketch").alias("q_sketch")),
+        "q_sketch", "q_rep",
+    )
+    r = with_repeats(
+        ref_sigs.select(F.col("url").alias("ref"), F.col("sketch").alias("r_sketch")),
+        "r_sketch", "r_rep",
+    )
+    return q, r, shared_count("q_sketch", "q_rep", "r_sketch", "r_rep")
 
 
 def classify_pages(
@@ -39,15 +56,10 @@ def classify_pages(
     full nested-loop comparison (for parity tests); default goes through
     LSH bands (same result when capture probability ~1 at the match level).
     """
-    q = query_sigs.select(
-        F.col("url"), F.col("sketch").alias("q_sketch"), "minhash"
-    )
-    r = ref_sigs.select(
-        F.col("url").alias("ref"), F.col("sketch").alias("r_sketch"), "minhash"
-    )
+    q, r, pair_shared = _scored_sides(query_sigs, ref_sigs)
 
     if exhaustive:
-        cand = q.crossJoin(F.broadcast(r.drop("minhash"))).drop("minhash")
+        cand = q.crossJoin(F.broadcast(r))
     else:
         qb = band_buckets(query_sigs, cfg)
         rb = band_buckets(
@@ -58,17 +70,12 @@ def classify_pages(
             .select("url", "ref")
             .distinct()
         )
-        cand = (
-            pairs.join(q.drop("minhash"), "url")
-            .join(F.broadcast(r.drop("minhash")), "ref")
-        )
+        cand = pairs.join(q, "url").join(F.broadcast(r), "ref")
 
-    scored = cand.withColumn(
-        "shared", _shared_count("q_sketch", "r_sketch")
-    ).select(
+    scored = cand.select(
         "url",
         "ref",
-        "shared",
+        pair_shared.alias("shared"),
         F.size("q_sketch").alias("q_len"),
         F.size("r_sketch").alias("r_len"),
     )
@@ -118,11 +125,10 @@ def ranked_similarity(
 ) -> DataFrame:
     """J3/T4: the full similarity-ranked reference list per query
     (sort_by_similarity, /root/reference/src/rkmh.cpp:2688-2701)."""
-    q = query_sigs.select(F.col("url"), F.col("sketch").alias("q_sketch"))
-    r = ref_sigs.select(F.col("url").alias("ref"), F.col("sketch").alias("r_sketch"))
+    q, r, pair_shared = _scored_sides(query_sigs, ref_sigs)
     scored = (
         q.crossJoin(F.broadcast(r))
-        .withColumn("shared", _shared_count("q_sketch", "r_sketch"))
+        .withColumn("shared", pair_shared)
         .withColumn(
             "sim",
             F.round(

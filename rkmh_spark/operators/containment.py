@@ -28,7 +28,6 @@ from rkmh_spark.config import DedupConfig
 from rkmh_spark.operators.lsh import bucket_pairs
 
 
-@pandas_udf(T.DoubleType())
 def _containment_est(a: pd.Series, b: pd.Series) -> pd.Series:
     """Broder bottom-k containment estimate, max over both directions.
 
@@ -57,6 +56,12 @@ def _containment_est(a: pd.Series, b: pd.Series) -> pd.Series:
                 best = max(best, hits / restricted.size)
         out[i] = round(best, 6)
     return pd.Series(out)
+
+
+# Marked nondeterministic only so the optimizer keeps the threshold filter
+# ABOVE the projection that computes it: pushed below, the filter copies
+# the UDF call and every candidate pays the Python kernel twice.
+_containment_udf = pandas_udf(_containment_est, T.DoubleType()).asNondeterministic()
 
 
 def containment_candidates(
@@ -104,7 +109,7 @@ def containment_pairs(
         )
     )
     scored = joined.withColumn(
-        "containment", _containment_est("sketch_a", "sketch_b")
+        "containment", _containment_udf("sketch_a", "sketch_b")
     )
     return scored.where(
         F.col("containment") >= containment_threshold

@@ -2,8 +2,18 @@
 
 Reference kernel: hash_intersection_size, a merge-count over two sorted
 u64 sketches with multiplicity (/root/reference/src/rkmh.cpp:869,922;
-equiv.hpp:308). ``F.array_intersect`` is set-semantics, so multiset parity
-lives in a vectorized pandas UDF (SURVEY.md §7.4 risk 1).
+equiv.hpp:308). ``F.array_intersect`` is set-semantics, so the multiset
+count is rebuilt from it with an exact identity, all in JVM column
+expressions (no Python UDF, nothing crosses the Arrow boundary):
+
+    Σ_v min(c_a(v), c_b(v))
+        = |set(a) ∩ set(b)| + Σ_{v ∈ R_a ∩ R_b} min(c_a(v) − 1, c_b(v) − 1)
+
+where c_x(v) is v's multiplicity in sketch x and R_x the values that
+repeat in x (every common value contributes 1 through the set term; only
+values repeated on BOTH sides contribute more). R_x and c_x − 1 are
+derived once per document (``with_repeats``), so the per-pair work is one
+set intersection plus a fold over the common repeated values.
 
 Acceptance (reference filters F1/F2 + threshold):
   - both sketches non-empty (depth filter, rkmh.cpp:888)
@@ -13,49 +23,48 @@ Acceptance (reference filters F1/F2 + threshold):
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql import Column, DataFrame, functions as F
 
 from rkmh_spark.config import DedupConfig
 
 
-def _occ_ranks(values: np.ndarray) -> np.ndarray:
-    """Occurrence index within runs of equal values (input sorted)."""
-    n = values.shape[0]
-    new = np.empty(n, dtype=bool)
-    new[0] = True
-    new[1:] = values[1:] != values[:-1]
-    starts = np.flatnonzero(new)
-    reps = np.diff(np.append(starts, n))
-    return np.arange(n, dtype=np.int64) - np.repeat(starts, reps)
+def with_repeats(df: DataFrame, sketch: str, rep: str) -> DataFrame:
+    """df + ``rep`` = struct(dv, dc) of the sorted array column ``sketch``:
+    ``dv`` the distinct values that occur more than once, ``dc`` their
+    multiplicity − 1, aligned with ``dv``.
 
-
-@pandas_udf(T.LongType())
-def _shared_count(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Multiset |a ∩ b| per pair — reference merge-count parity
-    (/root/reference/src/rkmh.cpp:869) on sorted u64 sketches.
-
-    Per pair: element i of a (the k-th duplicate of its value, k =
-    occ_rank) matches iff b holds that value at least k+1 times —
-    Σ [occ_rank < count_in_b] = Σ_v min(cnt_a, cnt_b). Two searchsorted
-    calls + a run-rank per pair; arrays are ~sketch_size long, so the
-    numpy-per-pair overhead beats any batch-flattened structured sort
-    (measured 29x vs structured-dtype intersect1d, whose void-record
-    comparisons are ~100x slower per element than native sorts).
+    Sketches are sorted (in u64 order; any total order keeps equal values
+    adjacent), so the repeated values are the adjacent-equal ones, and a
+    value's multiplicity − 1 is its last position minus its first.
+    ``slice(sk, 2, n)`` is empty for n ≤ 1, and ``zip_with`` pads it with
+    a null at the end, so the last element never pairs with a value.
     """
-    out = np.zeros(len(a), dtype=np.int64)
-    for i in range(len(a)):
-        xa = np.asarray(a.iloc[i], dtype=np.int64).view(np.uint64)
-        xb = np.asarray(b.iloc[i], dtype=np.int64).view(np.uint64)
-        if xa.size == 0 or xb.size == 0:
-            continue
-        lo = np.searchsorted(xb, xa, "left")
-        hi = np.searchsorted(xb, xa, "right")
-        out[i] = int((_occ_ranks(xa) < (hi - lo)).sum())
-    return pd.Series(out)
+    sk = sketch
+    dv = (
+        f"array_distinct(array_compact(zip_with({sk}, slice({sk}, 2, size({sk})),"
+        f" (x, y) -> IF(x = y, x, NULL))))"
+    )
+    dc = (
+        f"transform({rep}, v -> size({sk}) + 1"
+        f" - array_position(reverse({sk}), v) - array_position({sk}, v))"
+    )
+    return df.withColumn(rep, F.expr(dv)).withColumn(
+        rep, F.struct(F.col(rep).alias("dv"), F.expr(dc).alias("dc"))
+    )
+
+
+def shared_count(a: str, rep_a: str, b: str, rep_b: str) -> Column:
+    """Multiset |a ∩ b| of two sorted sketch columns (bigint), given their
+    ``with_repeats`` columns — the identity in the module docstring."""
+
+    def extra(rep: str) -> str:
+        return f"element_at({rep}.dc, CAST(array_position({rep}.dv, v) AS INT))"
+
+    return F.expr(
+        f"size(array_intersect({a}, {b}))"
+        f" + aggregate(array_intersect({rep_a}.dv, {rep_b}.dv), 0L,"
+        f" (acc, v) -> acc + least({extra(rep_a)}, {extra(rep_b)}))"
+    )
 
 
 def verify_pairs(
@@ -63,57 +72,31 @@ def verify_pairs(
 ) -> DataFrame:
     """(url_a, url_b) ⋈ signatures ×2 → verified pairs with shared/est_jaccard.
 
-    Two-stage verify: a JVM-side EXACT-SAFE prefilter, then the multiset
-    pandas kernel only on survivors. The LSH candidate set inflates on
-    short documents (OPH densification correlation when n_shingles < K
-    bins — a small-doc artifact absent at real page sizes), and the
-    Python-kernel cost was ~µs × every candidate. The prefilter uses the
-    bound   multiset_shared ≤ |set ∩| + min(dup_a, dup_b)
-    (each duplicated value in a adds at most its extra multiplicity:
-    Σ_v(min(ca,cb)−1) ≤ Σ_v(ca−1) = dup_a, likewise dup_b), so dropping
-    pairs whose UPPER BOUND misses the threshold removes only pairs the
-    exact kernel would reject — acceptance semantics are bit-identical
-    (pinned by the brute-force == NumPy-oracle tests). array_intersect +
-    size are whole-stage-codegen expressions; measured ~75% of candidate
-    rows never reach Python.
+    One exact filter over the joined candidates. The repeated-value
+    struct is built per document before the joins, so each candidate row
+    carries both sides' structs and pays only the per-pair fold. The LSH
+    candidate set inflates on short documents (OPH densification
+    correlates bins when n_shingles < K — a small-doc artifact absent at
+    real page sizes), and every candidate is scored here; in the JVM a
+    rejected one costs no Arrow round trip.
     """
-    sig = signatures.select(
-        "url",
-        "sketch",
-        (F.size("sketch") - F.size(F.array_distinct("sketch"))).alias("dups"),
-    )
-    joined = (
-        pairs.join(
-            sig.select(
-                F.col("url").alias("url_a"),
-                F.col("sketch").alias("sketch_a"),
-                F.col("dups").alias("dups_a"),
-            ),
-            "url_a",
-        ).join(
-            sig.select(
-                F.col("url").alias("url_b"),
-                F.col("sketch").alias("sketch_b"),
-                F.col("dups").alias("dups_b"),
-            ),
-            "url_b",
+    sig = with_repeats(signatures.select("url", "sketch"), "sketch", "rep")
+
+    def side(s: str) -> DataFrame:
+        return sig.select(
+            F.col("url").alias(f"url_{s}"),
+            F.col("sketch").alias(f"sketch_{s}"),
+            F.col("rep").alias(f"rep_{s}"),
         )
-    )
+
+    joined = pairs.join(side("a"), "url_a").join(side("b"), "url_b")
+    shared = shared_count("sketch_a", "rep_a", "sketch_b", "rep_b")
     denom = F.least(
         F.lit(cfg.sketch_size), F.size("sketch_a"), F.size("sketch_b")
     )
-    upper = F.size(F.array_intersect("sketch_a", "sketch_b")) + F.least(
-        "dups_a", "dups_b"
-    )
-    prefiltered = joined.where(
-        (F.size("sketch_a") > 0)
-        & (F.size("sketch_b") > 0)
-        & (upper >= F.lit(cfg.min_matches))
-        & (upper >= F.lit(cfg.jaccard_threshold) * denom)
-    )
     scored = (
-        prefiltered.withColumn("shared", _shared_count("sketch_a", "sketch_b"))
-        .withColumn("denom", denom)
+        joined.where((F.size("sketch_a") > 0) & (F.size("sketch_b") > 0))
+        .select("url_a", "url_b", shared.alias("shared"), denom.alias("denom"))
         .withColumn("est_jaccard", F.col("shared") / F.col("denom"))
     )
     return scored.where(

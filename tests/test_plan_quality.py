@@ -205,6 +205,81 @@ def test_filter_pushdown_reaches_scan(spark):
     assert pushed, plan[:2000]
 
 
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+# Python evaluation nodes in the optimized plan of each candidate scorer.
+# The multiset shared count is a JVM expression, so verify and classify
+# run no Python at all. Containment's estimator is the one Python UDF and
+# runs once per candidate: a threshold filter pushed below the projection
+# that computes it would copy the call (2 nodes, every candidate pays the
+# Arrow round trip twice).
+PYTHON_EVALS = {
+    "verify_pairs": 0,
+    "classify_pages": 0,
+    "classify_pages_exhaustive": 0,
+    "ranked_similarity": 0,
+    "containment_pairs": 1,
+}
+
+
+def test_python_evals_per_candidate_scorer(spark):
+    from rkmh_spark.config import TEST_CONFIG
+    from rkmh_spark.operators.classify import classify_pages, ranked_similarity
+    from rkmh_spark.operators.containment import containment_pairs
+    from rkmh_spark.operators.signatures import compute_signatures
+    from rkmh_spark.operators.verify import verify_pairs
+    from rkmh_spark.sources.pages import pages_dataframe
+
+    sigs = compute_signatures(
+        pages_dataframe(spark, n_clusters=4, dup_rate=0.6, seed=3), TEST_CONFIG
+    )
+    pairs = spark.createDataFrame([("a", "b")], "url_a string, url_b string")
+    plans = {
+        "verify_pairs": verify_pairs(pairs, sigs, TEST_CONFIG),
+        "classify_pages": classify_pages(sigs, sigs, TEST_CONFIG),
+        "classify_pages_exhaustive": classify_pages(
+            sigs, sigs, TEST_CONFIG, exhaustive=True
+        ),
+        "ranked_similarity": ranked_similarity(sigs, sigs, TEST_CONFIG),
+        "containment_pairs": containment_pairs(pairs, sigs, TEST_CONFIG),
+    }
+    for name, df in plans.items():
+        plan = _optimized(df)
+        assert plan.count("ArrowEvalPython") == PYTHON_EVALS[name], (name, plan)
+        assert "BatchEvalPython" not in plan, name
+
+
+def test_band_buckets_plan_is_the_per_band_slice_plan(spark):
+    """band_buckets parses its band array as ONE expression; the optimized
+    plan must equal the spelling with one F.slice column per band."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from rkmh_spark.config import TEST_CONFIG
+    from rkmh_spark.operators.lsh import band_buckets
+    from rkmh_spark.operators.signatures import compute_signatures
+    from rkmh_spark.sources.pages import pages_dataframe
+
+    sigs = compute_signatures(
+        pages_dataframe(spark, n_clusters=4, dup_rate=0.6, seed=3), TEST_CONFIG
+    )
+    b, r = TEST_CONFIG.num_bands, TEST_CONFIG.band_rows
+    per_band = F.array(*[F.slice("minhash", i * r + 1, r) for i in range(b)])
+    expected = (
+        sigs.select("url", F.posexplode(per_band).alias("band_id", "band"))
+        .where(F.size("band") == r)
+        .select("url", "band_id", F.xxhash64("band").alias("band_hash"))
+    )
+
+    def shape(df) -> str:
+        return re.sub(r"#\d+L?", "", _optimized(df))
+
+    assert shape(band_buckets(sigs, TEST_CONFIG)) == shape(expected)
+
+
 # Spark jobs of one dedup_pages run at TEST_CONFIG, forced by one collect
 # of its assignments, on pages_dataframe(n_clusters=12, dup_rate=0.6,
 # seed=3) in this suite's local[4] session (Spark 4.1.2, cold cache):
