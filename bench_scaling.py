@@ -127,7 +127,7 @@ from rkmh_spark.operators.dedup import dedup_pages
 
 cores = int(sys.argv[1])
 cfg = DedupConfig(k=12, sketch_size=128, num_bands=36, band_rows=4,
-                  jaccard_threshold=0.6, shuffle_partitions=cores * 4)
+                  jaccard_threshold=0.6)
 spark = get_spark(app_name=f"scal{{cores}}", cores=cores,
                   shuffle_partitions=cores * 4)
 # prune to the columns the pipeline reads BEFORE the repartition shuffle:

@@ -57,10 +57,6 @@ class DedupConfig:
     # fixed job latency dominates far past this size
     cc_driver_threshold: int = 2_000_000
 
-    # --- execution ---
-    shuffle_partitions: int = 32
-    arrow_batch_size: int = 2048
-
     @property
     def num_perms(self) -> int:
         """K — width of the independent-minhash vector used for banding."""

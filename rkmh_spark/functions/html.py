@@ -26,7 +26,7 @@ visibility, no DOM reordering. Semantics, each step visible in tests:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 _BLOCK_BREAK_RE = (
     r"(?i)<(?:br\s*/?|/(?:p|div|li|tr|h[1-6]|ul|ol|table|section|article"
@@ -51,15 +51,6 @@ def html_to_text(col: Column | str) -> Column:
     c = F.regexp_replace(c, r" ?\n ?", "\n")
     c = F.regexp_replace(c, r"\n{2,}", "\n")
     return F.regexp_replace(c, r"^\s+|\s+$", "")
-
-
-def extract_text(
-    pages: DataFrame, html_col: str = "html", out_col: str = "text"
-) -> DataFrame:
-    """Add ``out_col`` with the extracted visible text. Zero shuffle —
-    one projection; at 10^12 pages this is a map-only stage that fuses
-    into whatever scan feeds it."""
-    return pages.withColumn(out_col, html_to_text(html_col))
 
 
 def extract_links(col: Column | str) -> Column:

@@ -25,6 +25,9 @@ from numpy.lib.stride_tricks import sliding_window_view
 
 from rkmh_spark.functions.murmur3 import murmur3_x64_128_low64
 
+# Shingles per murmur pass in sketch_texts_batch (see its docstring).
+MAX_CHUNK_SHINGLES = 1 << 17
+
 
 def shingle_matrix(text: str, k: int) -> np.ndarray:
     """All overlapping k-byte shingles of utf-8 ``text`` as an (N, k) uint8 view."""
@@ -83,7 +86,6 @@ def sketch_texts_batch(
     seed: int = 42,
     drop_hashes: np.ndarray | None = None,
     num_bins: int | None = None,
-    max_chunk_shingles: int = 1 << 17,
 ):
     """Sketch a whole Arrow batch of texts with ONE murmur pass.
 
@@ -101,7 +103,7 @@ def sketch_texts_batch(
     vectors for LSH banding (computed from the SAME sorted hash array the
     bottom-s sketch uses — one sort serves both signatures).
 
-    The murmur pass runs over sub-chunks capped at ``max_chunk_shingles``
+    The murmur pass runs over sub-chunks capped at ``MAX_CHUNK_SHINGLES``
     regardless of how many documents Arrow delivered: vstacking a whole
     2048-doc batch of multi-KB pages produced ~GB-scale numpy temporaries
     whose allocation/page-fault churn made the stage 7x slower than the
@@ -162,7 +164,7 @@ def sketch_texts_batch(
             chunk_mats.append(m)
             chunk_docs.append((i, m.shape[0]))
             chunk_total += m.shape[0]
-            if chunk_total >= max_chunk_shingles:
+            if chunk_total >= MAX_CHUNK_SHINGLES:
                 flush()
     flush()
     return sketches, minhashes, counts
@@ -223,43 +225,6 @@ def oph_minhash(sorted_hashes: np.ndarray, num_bins: int) -> np.ndarray:
         empty_pos = ~filled
         vals[empty_pos] = vals[src[empty_pos]]
     return vals.view(np.int64)
-
-
-def minhash_permutation_params(num_perms: int, seed: int = 42):
-    """Deterministic (a, b) coefficients for K bijective u64 mixers.
-
-    π_i(x) = a_i * x + b_i (mod 2^64) with a_i odd is a bijection of u64
-    space, so min over a document's shingle-hash set is a classic MinHash
-    value. The bottom-s sketch (reference parity) is NOT suitable for
-    banding — a single differing small hash shifts every later sketch
-    position, so band collision probability collapses; K independent
-    minima restore the standard 1-(1-j^r)^b capture curve.
-    """
-    rng = np.random.default_rng(seed)
-    a = rng.integers(1, 2**63, size=num_perms, dtype=np.uint64) * np.uint64(2) + np.uint64(1)
-    b = rng.integers(0, 2**63, size=num_perms, dtype=np.uint64)
-    return a, b
-
-
-def minhash_vector(hashes: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """(K,) int64 minhash vector of one document's shingle hashes.
-
-    Empty input → empty vector (the doc can never collide in any band —
-    the LSH analog of the reference depth filter F1).
-    """
-    h = hashes[hashes != 0]
-    if h.size == 0:
-        return np.empty(0, dtype=np.int64)
-    # Chunk the (n, K) mixed matrix so the intermediate stays cache-resident
-    # instead of streaming n*K*8 bytes through DRAM per document — the
-    # unchunked version left the signature stage memory-bandwidth-bound
-    # (no speedup 8→32 cores).
-    chunk = max(1, 65536 // max(1, a.shape[0]))
-    mins = np.full(a.shape[0], np.iinfo(np.uint64).max, dtype=np.uint64)
-    for i in range(0, h.shape[0], chunk):
-        mixed = h[i : i + chunk, None] * a[None, :] + b[None, :]
-        np.minimum(mins, mixed.min(axis=0), out=mins)
-    return mins.view(np.int64)
 
 
 def multiset_intersection_size(a: np.ndarray, b: np.ndarray) -> int:

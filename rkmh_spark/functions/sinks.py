@@ -27,18 +27,10 @@ from pyspark.sql import types as T
 from rkmh_spark.config import DedupConfig
 
 
-def sketch_json(
-    signatures: DataFrame, cfg: DedupConfig, include_minhash: bool = False
-) -> DataFrame:
-    """signatures → one JSON-ready row per doc with rkmh-compatible metadata.
-
-    ``include_minhash`` additionally serializes the OPH banding vector as
-    an extension field ``minhashes`` — not part of the reference's
-    dump_hash_json schema (rkmh.cpp:489-525), but required for the read
-    side to resume LSH banding without re-hashing the corpus.
-    """
+def sketch_json(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """signatures → one JSON-ready row per doc with rkmh-compatible metadata."""
     k_field = cfg.k if isinstance(cfg.k, int) else ",".join(map(str, cfg.k))
-    cols = [
+    return signatures.select(
         F.col("url").alias("name"),
         F.lit(k_field).alias("kmer"),
         F.lit("utf8-bytes").alias("alphabet"),
@@ -49,83 +41,6 @@ def sketch_json(
         F.lit(cfg.sketch_size).alias("sketchSize"),
         F.col("n_shingles").alias("seqLen"),
         F.col("sketch").alias("sketches"),
-    ]
-    if include_minhash:
-        cols.append(F.col("minhash").alias("minhashes"))
-    return signatures.select(*cols)
-
-
-def write_sketch_json(
-    signatures: DataFrame,
-    cfg: DedupConfig,
-    path: str,
-    include_minhash: bool = True,
-) -> None:
-    sketch_json(signatures, cfg, include_minhash).write.mode("overwrite").json(
-        path
-    )
-
-
-def read_sketch_json(spark, path: str, cfg: DedupConfig | None = None) -> DataFrame:
-    """S10 SOURCE — read sketches back into the signatures shape.
-
-    The reference DECLARES this direction (-F/-R pre-calculated hashes)
-    but left ``load_hashes`` unimplemented — it exits(1)
-    (/root/reference/src/rkmh.cpp:552-582,639-640); here it is real.
-
-    When ``cfg`` is given, every row's hash metadata must match it —
-    mixing sketches hashed under different k/seed/sketch_size silently
-    produces zero intersections, so mismatches raise instead (checked
-    DISTRIBUTED: one limit(1) count, no driver scan).
-
-    Rows written by ``write_sketch_json(include_minhash=True)`` restore
-    the LSH banding vector; legacy rows without it get an empty minhash
-    (exhaustive classify still works — banding needs a re-sketch).
-    """
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("name", T.StringType()),
-            T.StructField("kmer", T.StringType()),
-            T.StructField("alphabet", T.StringType()),
-            T.StructField("hashType", T.StringType()),
-            T.StructField("hashBits", T.LongType()),
-            T.StructField("hashSeed", T.LongType()),
-            T.StructField("canonical", T.BooleanType()),
-            T.StructField("sketchSize", T.LongType()),
-            T.StructField("seqLen", T.LongType()),
-            T.StructField("sketches", T.ArrayType(T.LongType())),
-            T.StructField("minhashes", T.ArrayType(T.LongType())),
-        ]
-    )
-    df = spark.read.schema(schema).json(path)
-    if cfg is not None:
-        k_field = (
-            str(cfg.k) if isinstance(cfg.k, int) else ",".join(map(str, cfg.k))
-        )
-        # eqNullSafe negation: a row with NULL kmer/hashSeed/sketchSize
-        # (corrupt or foreign JSON) must FAIL validation, not three-value-
-        # logic its way past the != predicate (ADVICE r3)
-        bad = df.where(
-            ~F.col("kmer").eqNullSafe(F.lit(k_field))
-            | ~F.col("hashSeed").eqNullSafe(F.lit(cfg.hash_seed))
-            | ~F.col("sketchSize").eqNullSafe(F.lit(cfg.sketch_size))
-            | ~F.col("hashType").eqNullSafe(F.lit("MurmurHash3_x64_128"))
-        )
-        if bad.limit(1).count():
-            r = bad.first()
-            raise ValueError(
-                "sketch JSON metadata mismatch vs DedupConfig: "
-                f"kmer={r['kmer']!r} seed={r['hashSeed']} "
-                f"sketchSize={r['sketchSize']} (expected {k_field!r}/"
-                f"{cfg.hash_seed}/{cfg.sketch_size})"
-            )
-    return df.select(
-        F.col("name").alias("url"),
-        F.col("sketches").alias("sketch"),
-        F.coalesce("minhashes", F.array().cast("array<long>")).alias("minhash"),
-        F.col("seqLen").alias("n_shingles"),
     )
 
 

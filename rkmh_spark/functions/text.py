@@ -33,18 +33,6 @@ def tokens(text: Column | str) -> Column:
     return F.array_remove(F.split(c, " "), "")
 
 
-def token_count(text: Column | str) -> Column:
-    return F.size(tokens(text))
-
-
-def stopword_ratio(text: Column | str, lang: str = "en") -> Column:
-    """share of tokens in the language's stopword panel."""
-    toks = tokens(text)
-    sw = F.array(*[F.lit(w) for w in LANG_STOPWORDS[lang]])
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-    return hits / F.greatest(F.size(toks), F.lit(1))
-
-
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Length / token / mean-token-length quality features (F6 analog —
     the reference tosses reads by length at
@@ -333,38 +321,3 @@ def gopher_quality_filter(
         ),
     )
 
-
-def lang_score_columns(text_col: str = "text") -> dict[str, Column]:
-    """Per-language stopword hit counts — the n-gram-panel language-ID
-    heuristic (discriminative-token classification, rkmh hpv16 analog
-    /root/reference/src/rkmh.cpp:2666-2678)."""
-    out: dict[str, Column] = {}
-    toks = tokens(F.col(text_col))
-    for lang, words in LANG_STOPWORDS.items():
-        sw = F.array(*[F.lit(w) for w in words])
-        out[f"score_{lang}"] = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-    return out
-
-
-def predict_lang(text_col: str = "text") -> Column:
-    """argmax language by stopword hits; ties → lexicographically first
-    language (deterministic, oracle-mirrorable)."""
-    scores = lang_score_columns(text_col)
-    pairs = F.array(
-        *[
-            F.struct(c.alias("score"), F.lit(lang).alias("lang"))
-            for lang, c in sorted(scores.items(), key=lambda kv: kv[0].split("_")[1])
-        ]
-    )
-    # max by (score, reversed-lang) then take lang: sort desc by score,
-    # asc by lang — array_sort on struct sorts ascending field-wise, so
-    # negate score.
-    best = F.array_sort(
-        F.transform(
-            pairs,
-            lambda p: F.struct(
-                (-p["score"]).alias("neg"), p["lang"].alias("lang")
-            ),
-        )
-    )[0]["lang"]
-    return best

@@ -20,11 +20,7 @@ incident.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 
 def word_ngrams(words: Column, n: int) -> Column:
@@ -105,150 +101,4 @@ def flag_contaminated(
                 "contaminated"
             ),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Bloom-filter scale path (one-sided, like the reference's approximate
-# counter family — A5's HASHTCounter accepts hash-collision overcounts;
-# this accepts false-positive membership, never false negatives)
-
-
-def _bloom_params(n_keys: int, bits_per_key: int) -> tuple[int, int]:
-    """(m, k): power-of-two bit count and probe count (k = bits·ln2,
-    clamped to [1, 8] — beyond 8 probes the CPU cost outruns the FP
-    gain at these sizes)."""
-    m = 1
-    target = max(64, n_keys * bits_per_key)
-    while m < target:
-        m <<= 1
-    k = min(8, max(1, round(0.693 * bits_per_key)))
-    return m, k
-
-
-def _bloom_probes(h: "np.ndarray", m: int, k: int) -> "np.ndarray":
-    """(len(h), k) bit indices via Kirsch-Mitzenmacher double hashing
-    over the two independent 32-bit HALVES of the 64-bit hash:
-    idx_i = (lo + i*hi) mod m, hi forced odd (a unit mod power-of-two
-    m). Deriving h2 from h1 by multiplication was a real bug: with m a
-    power of two, (a*MIX)|1 mod m depends only on a's low log2(m) bits,
-    so any two keys congruent mod m shared their ENTIRE probe sequence
-    — measured 4% FP where theory says 0.006%. Split halves make a
-    full-sequence collision require both halves to collide mod m."""
-    h64 = h.astype(np.uint64)
-    lo = h64 & np.uint64(0xFFFFFFFF)
-    hi = (h64 >> np.uint64(32)) | np.uint64(1)
-    i = np.arange(k, dtype=np.uint64)
-    return (lo[:, None] + i[None, :] * hi[:, None]) & np.uint64(m - 1)
-
-
-def build_bloom(hashes: "np.ndarray", bits_per_key: int = 16):
-    """Bit array (np.uint8) + probe count for an int64/uint64 hash set."""
-    m, k = _bloom_params(max(len(hashes), 1), bits_per_key)
-    bits = np.zeros(m >> 3, dtype=np.uint8)
-    if len(hashes):
-        idx = _bloom_probes(np.asarray(hashes), m, k).ravel()
-        np.bitwise_or.at(bits, idx >> np.uint64(3),
-                         np.uint8(1) << (idx & np.uint64(7)).astype(np.uint8))
-    return bits, k
-
-
-def bloom_contains(bits: "np.ndarray", k: int, h: "np.ndarray") -> "np.ndarray":
-    """Vectorized membership test: all k probe bits set."""
-    if len(h) == 0:
-        return np.zeros(0, dtype=bool)
-    m = int(bits.shape[0]) << 3
-    idx = _bloom_probes(np.asarray(h), m, k)
-    probed = (bits[(idx >> np.uint64(3)).astype(np.int64)]
-              >> (idx & np.uint64(7)).astype(np.uint8)) & np.uint8(1)
-    return probed.all(axis=1)
-
-
-def flag_contaminated_bloom(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    n: int = 13,
-    min_hits: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bench_text_col: str | None = None,
-    bits_per_key: int = 16,
-    max_bench_grams: int = 20_000_000,
-) -> DataFrame:
-    """Same report schema as ``flag_contaminated`` with a broadcast
-    Bloom filter standing in for the exact gram set: n_hit may
-    OVER-count (false positives at ~0.04% per gram with the default 16
-    bits/key), never under-count — the conservative direction for a
-    contamination scrub (flags a handful of extra docs, leaks none).
-
-    Scale shape: ZERO shuffle. The benchmark grams reduce driver-side
-    to a bit array (16 bits/key: a 10^8-gram suite is 200 MB — far
-    past any broadcast-join comfort zone, fine as one immutable
-    broadcast buffer), and the corpus side is a single map stage: gram
-    hashes stay an ARRAY per document (no explode, no per-doc
-    groupBy), one Arrow-batched pandas_udf counts members per row.
-    ``max_bench_grams`` bounds the driver collect (same guard contract
-    as hot_shingles)."""
-    from rkmh_spark.functions.text import tokens
-
-    bcol = bench_text_col or text_col
-    bench_hashes_df = (
-        benchmark.select(
-            F.explode_outer(
-                F.array_distinct(word_ngrams(tokens(bcol), n))
-            ).alias("_g")
-        )
-        .where(F.col("_g").isNotNull())
-        .select(F.xxhash64("_g").alias("_h"))
-        .distinct()
-    )
-    n_bench = bench_hashes_df.count()
-    if n_bench > max_bench_grams:
-        raise ValueError(
-            f"benchmark has {n_bench} distinct {n}-grams > "
-            f"max_bench_grams={max_bench_grams}; raise the cap (driver "
-            "memory permitting) or pre-shard the benchmark"
-        )
-    bench_np = bench_hashes_df.toPandas()["_h"].to_numpy(dtype=np.int64)
-    bits, k = build_bloom(bench_np.view(np.uint64), bits_per_key)
-    sc = docs.sparkSession.sparkContext
-    b_bits = sc.broadcast(bits)
-
-    @pandas_udf(T.IntegerType())
-    def _n_members(grams: pd.Series) -> pd.Series:
-        bb = b_bits.value
-        lens = grams.map(len).to_numpy()
-        if lens.sum() == 0:
-            return pd.Series(np.zeros(len(grams), dtype=np.int32))
-        flat = np.concatenate([np.asarray(g, dtype=np.int64) for g in grams])
-        member = bloom_contains(bb, k, flat.view(np.uint64))
-        ends = np.cumsum(lens)
-        per_doc = np.add.reduceat(
-            np.concatenate([member.astype(np.int32), [0]]),
-            np.concatenate([[0], ends[:-1]]),
-        )
-        per_doc[lens == 0] = 0
-        return pd.Series(per_doc.astype(np.int32))
-
-    # NULL text must report 0/0/false like the exact path (whose explode
-    # simply emits no rows) — without the coalesce, _gh is NULL and the
-    # pandas_udf's len() would fail the whole task.
-    gram_hashes = F.coalesce(
-        F.transform(
-            F.array_distinct(word_ngrams(tokens(text_col), n)),
-            lambda g: F.xxhash64(g),
-        ),
-        F.array().cast("array<bigint>"),
-    )
-    return docs.select(
-        id_col, gram_hashes.alias("_gh")
-    ).select(
-        id_col,
-        F.size("_gh").alias("n_grams"),
-        _n_members("_gh").alias("n_hit"),
-    ).select(
-        id_col,
-        "n_grams",
-        F.col("n_hit").cast("long").alias("n_hit"),
-        (F.col("n_hit") >= min_hits).alias("contaminated"),
     )

@@ -68,28 +68,6 @@ def domain_link_graph(
     )
 
 
-def host_degrees(graph: DataFrame) -> DataFrame:
-    """-> (host, out_hosts, out_links, in_hosts, in_links) from a
-    (src_host, dst_host, n_links) graph — the degree summary crawl
-    schedulers rank by. Self-links (intra-domain navigation) count on
-    both sides, as both degrees describe the same edge set. Two bounded
-    aggregations + one full-outer hash join on host."""
-    out_d = graph.groupBy(F.col("src_host").alias("host")).agg(
-        F.count("*").alias("out_hosts"), F.sum("n_links").alias("out_links")
-    )
-    in_d = graph.groupBy(F.col("dst_host").alias("host")).agg(
-        F.count("*").alias("in_hosts"), F.sum("n_links").alias("in_links")
-    )
-    j = out_d.join(in_d, "host", "full_outer")
-    return j.select(
-        "host",
-        *[
-            F.coalesce(F.col(c), F.lit(0)).alias(c)
-            for c in ("out_hosts", "out_links", "in_hosts", "in_links")
-        ],
-    )
-
-
 def anchor_text_agg(
     pages: DataFrame,
     url_col: str = "url",

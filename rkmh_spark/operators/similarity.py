@@ -63,14 +63,6 @@ def _width_checked(expr, dim: int, *vecs):
     ).otherwise(expr)
 
 
-def with_cosine(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame:
-    ca, cb = F.col(a), F.col(b)
-    return df.withColumn(
-        out,
-        F.round(_dot(ca, cb) / (_norm(ca) * _norm(cb)), 6),
-    )
-
-
 def brute_force_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -185,8 +177,12 @@ def embedding_near_dup_pairs_lsh(
     bucket_cap: int = 1000,
 ) -> DataFrame:
     """Scale path: multi-table hyperplane buckets → candidates → exact
-    re-check. P(bucket match | angle θ) = (1-θ/π)^n_planes per table;
-    cos 0.95 → θ≈18° → ~0.66/table, 4 tables → ~0.987 capture. Each
+    re-check. P(bucket match | angle θ) = (1-θ/π)^n_planes per table, so a
+    pair at cos exactly 0.95 (θ≈18.2°) meets in one 8-plane table with
+    p = 0.426 and is captured with 1-(1-p)^n_tables: 0.892 at 4 tables,
+    0.964 at 6 (``q_semantic_dedup``), and 0.99 needs 9. Pairs further
+    above the threshold are captured more often; a captured pair is then
+    scored exactly, so the shortfall is missed pairs, never false ones. Each
     table's buckets go through ``lsh.bucket_pairs`` (census, size-1
     buckets pruned, hot buckets sharded — anisotropic embeddings can
     pile a large fraction of vectors into a few sign-pattern buckets),

@@ -69,7 +69,17 @@ def _hash_ngram_keys(token_hashes: Column, n: int) -> Column:
     fold step is O(1) per element, vs the O(gram-chars) copy of the
     concat_ws string build, so the n-1 zip_with passes cost O(n) longs
     per position instead of O(n²) chars (measured ~4× on the benched
-    20-gram dup_spans build)."""
+    20-gram dup_spans build).
+
+    Collision bound: n distinct grams hashed to 64 bits give about
+    n²/2⁶⁵ colliding pairs (birthday bound) — about 0.03 at 10⁹ distinct
+    grams and about 2.7·10⁴ at 10¹². Equal grams always get equal keys,
+    so a collision can only make two different grams look equal: it adds
+    a false shared gram and never loses a true one. In ``span_dedup`` it
+    can mark a unique position as duplicated, in ``line_dedup`` (xxhash64
+    line keys, same bound) it can drop a unique line as a repeat, and in
+    ``ngram_jaccard_pairs`` it can raise a pair's shared count by one (or,
+    inside one document, fold two of its grams into one key)."""
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
     m = F.size(token_hashes) - F.lit(n - 1)  # gram count (may be <= 0)

@@ -1,4 +1,4 @@
-"""TF-IDF term weighting + top informative terms per document.
+"""TF-IDF term weighting per document.
 
 Scale shape: the tf table (doc, token, tf) joins the df table (token,
 df) on token — the Zipf-skew trap again. Here the guard IS the
@@ -8,14 +8,11 @@ join's per-key fan-in at max_df rows of the doc side, so after the cut
 no hot key exists BY CONSTRUCTION and the equi-join needs no further
 salting. The df aggregate itself is a plain count-distinct-docs groupBy
 with map-side partials.
-
-``top_terms`` ranks per-doc by (tfidf desc, token asc) — one window
-over the doc id, deterministic tie-break.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def tfidf(
@@ -54,25 +51,3 @@ def tfidf(
         ).alias("tfidf"),
     )
 
-
-def top_terms(
-    docs: DataFrame,
-    k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_df: int | None = None,
-    n_docs: int | None = None,
-) -> DataFrame:
-    """Top-k informative terms per doc by tfidf (ties → token asc,
-    deterministic). One window shuffle on the doc id."""
-    w = Window.partitionBy(id_col).orderBy(
-        F.desc("tfidf"), F.asc("token")
-    )
-    scored = tfidf(
-        docs, text_col=text_col, id_col=id_col, max_df=max_df, n_docs=n_docs
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(id_col, "rank", "token", "tfidf")
-    )

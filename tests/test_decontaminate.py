@@ -1,7 +1,5 @@
 """Benchmark decontamination (operators/decontaminate.py)."""
 
-from pyspark.sql import functions as F
-
 
 def _ref_ngrams(text, n):
     w = [t for t in text.split(" ") if t]
@@ -43,6 +41,8 @@ def test_flag_contaminated_counts_and_flag(spark):
             (11, "completely different words here now"),
             (12, "fox jumps over the lazy dog indeed"),  # shares 4
             (13, "ab"),                                  # zero grams
+            (14, ""),                                    # empty text
+            (15, None),                                  # NULL text
         ],
         "doc_id long, text string",
     )
@@ -63,6 +63,8 @@ def test_flag_contaminated_counts_and_flag(spark):
         assert out[11]["n_hit"] == 0 and out[11]["contaminated"] is False
         assert out[12]["n_hit"] == 4 and out[12]["contaminated"] is True
         assert out[13] == (13, 0, 0, False)
+        assert out[14] == (14, 0, 0, False)
+        assert out[15] == (15, 0, 0, False)  # NULL text: 0/0, no task crash
 
 
 def test_flag_contaminated_min_hits_threshold(spark):
@@ -97,80 +99,3 @@ def test_flag_contaminated_plan_broadcasts_bench(spark):
     assert "BroadcastNestedLoop" not in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastExchange" in plan
-
-
-def test_bloom_structure_no_false_negatives_and_low_fp():
-    """build_bloom/bloom_contains: every inserted key is a member (no
-    false negatives — structural guarantee); false-positive rate on
-    10k absent keys stays near the 16-bits/key design point (~0.04%)."""
-    import numpy as np
-
-    from rkmh_spark.operators.decontaminate import (
-        bloom_contains,
-        build_bloom,
-    )
-
-    rng = np.random.default_rng(7)
-    keys = rng.integers(0, 2**63, size=5000, dtype=np.int64).view(np.uint64)
-    bits, k = build_bloom(keys, bits_per_key=16)
-    assert bloom_contains(bits, k, keys).all()
-    absent = rng.integers(0, 2**63, size=10000, dtype=np.int64).view(
-        np.uint64
-    )
-    absent = absent[~np.isin(absent, keys)]
-    fp = bloom_contains(bits, k, absent).mean()
-    assert fp < 0.005, fp
-
-
-def test_flag_contaminated_bloom_matches_exact(spark):
-    """On a fixture with no adversarial collisions the bloom report is
-    IDENTICAL to the exact join's (false positives at these sizes are
-    ~10^-4 per gram — none expected over ~200 grams); empty and
-    too-short docs report 0/0."""
-    from rkmh_spark.operators.decontaminate import (
-        flag_contaminated,
-        flag_contaminated_bloom,
-    )
-
-    def words(prefix, n, start=0):
-        return " ".join(f"{prefix}{i:03d}" for i in range(start, start + n))
-
-    docs = spark.createDataFrame(
-        [
-            (1, words("a", 30)),                      # clean
-            (2, words("b", 20)),                      # = bench doc
-            (3, words("a", 10) + " " + words("b", 10)),  # partial overlap
-            (4, ""),                                  # degenerate
-            (5, words("c", 5)),                       # shorter than n
-            (6, None),                                # NULL text
-        ],
-        "doc_id long, text string",
-    )
-    bench = docs.where("doc_id = 2")
-    exact = sorted(
-        map(tuple, flag_contaminated(docs, bench, n=13).collect())
-    )
-    bloom = sorted(
-        map(tuple, flag_contaminated_bloom(docs, bench, n=13).collect())
-    )
-    assert bloom == exact
-    by_id = {t[0]: t for t in bloom}
-    assert by_id[2][3] is True          # benchmark doc self-flags
-    assert by_id[1][3] is False
-    assert by_id[4][1:] == (0, 0, False)
-    assert by_id[5][1:] == (0, 0, False)
-    assert by_id[6][1:] == (0, 0, False)   # NULL text: 0/0, no task crash
-
-
-def test_flag_contaminated_bloom_plan_is_shuffle_free(spark):
-    """The corpus side is one map stage: no Exchange anywhere in the
-    plan (grams stay an array per doc; membership is a pandas_udf)."""
-    from rkmh_spark.operators.decontaminate import flag_contaminated_bloom
-
-    docs = spark.createDataFrame(
-        [(1, "w x y z " * 10)], "doc_id long, text string"
-    )
-    out = flag_contaminated_bloom(docs, docs, n=5)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    assert "ArrowEvalPython" in plan or "BatchEvalPython" in plan

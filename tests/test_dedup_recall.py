@@ -95,15 +95,18 @@ def test_assignments_invariant_across_parallelism(spark):
     assignments (observed at 2/8/32 cores on the 400k-page bench; this
     guards the min-label CC rule and banding against partition-order
     nondeterminism)."""
-    import dataclasses
-
     from rkmh_spark.operators.dedup import dedup_pages
     from rkmh_spark.sources.pages import pages_dataframe
 
     pages = pages_dataframe(spark, n_clusters=20, dup_rate=0.6, seed=77)
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
     outs = []
-    for parts in (3, 17):
-        cfg = dataclasses.replace(TEST_CONFIG, shuffle_partitions=parts)
-        res = dedup_pages(pages.repartition(parts), cfg)
-        outs.append(sorted(map(tuple, res.assignments.collect())))
+    try:
+        for parts in (3, 17):
+            spark.conf.set(key, str(parts))
+            res = dedup_pages(pages.repartition(parts), TEST_CONFIG)
+            outs.append(sorted(map(tuple, res.assignments.collect())))
+    finally:
+        spark.conf.set(key, saved)
     assert outs[0] == outs[1]

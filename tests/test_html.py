@@ -2,7 +2,7 @@
 
 import pytest
 
-from rkmh_spark.functions.html import extract_text, html_to_text
+from rkmh_spark.functions.html import html_to_text
 
 
 @pytest.mark.parametrize(
@@ -30,20 +30,11 @@ from rkmh_spark.functions.html import extract_text, html_to_text
     ],
 )
 def test_html_to_text_rules(spark, html, expect):
-    got = (
-        spark.createDataFrame([(html,)], "html string")
-        .select(html_to_text("html").alias("t"))
-        .collect()[0]["t"]
+    df = spark.createDataFrame([(html,)], "html string").select(
+        html_to_text("html").alias("t")
     )
-    assert got == expect, (html, got, expect)
-
-
-def test_extract_text_zero_shuffle_pure_relational(spark):
-    """The extraction must stay a single codegen'd projection: no Python
-    UDF evaluator and no Exchange in the executed plan."""
-    df = extract_text(
-        spark.createDataFrame([("<p>a</p>",)], "html string")
-    )
+    # one codegen'd projection: no Python UDF evaluator, no Exchange
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "Exchange" not in plan
+    assert "EvalPython" not in plan and "Exchange" not in plan
+    got = df.collect()[0]["t"]
+    assert got == expect, (html, got, expect)

@@ -1,10 +1,10 @@
 """Link extraction + domain link graph: href forms, resolution rules,
-degree summary, plan shape."""
+plan shape."""
 
 from pyspark.sql import functions as F
 
 from rkmh_spark.functions.html import extract_links
-from rkmh_spark.operators.linkgraph import domain_link_graph, host_degrees
+from rkmh_spark.operators.linkgraph import domain_link_graph
 
 
 def test_extract_links_forms(spark):
@@ -52,32 +52,14 @@ def test_domain_link_graph_resolution(spark):
     }
 
 
-def test_host_degrees(spark):
-    g = spark.createDataFrame(
-        [
-            ("a.ex", "b.ex", 3),
-            ("a.ex", "c.ex", 1),
-            ("b.ex", "a.ex", 2),
-        ],
-        "src_host string, dst_host string, n_links long",
-    )
-    got = {r["host"]: r for r in host_degrees(g).collect()}
-    assert (got["a.ex"]["out_hosts"], got["a.ex"]["out_links"]) == (2, 4)
-    assert (got["a.ex"]["in_hosts"], got["a.ex"]["in_links"]) == (1, 2)
-    assert (got["c.ex"]["out_hosts"], got["c.ex"]["out_links"]) == (0, 0)
-    assert (got["c.ex"]["in_hosts"], got["c.ex"]["in_links"]) == (1, 1)
-
-
 def test_linkgraph_plan_no_quadratic(spark):
     df = spark.createDataFrame(
         [("https://a.ex/1", '<a href="https://b.ex/x">l</a>')],
         "url string, html string",
     )
-    g = domain_link_graph(df)
-    for q in (g, host_degrees(g)):
-        plan = q._jdf.queryExecution().executedPlan().toString()
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
+    plan = domain_link_graph(df)._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_extract_anchors_pairs_and_cleaning(spark):

@@ -28,6 +28,18 @@ CFG = dataclasses.replace(
 )
 
 
+def scan_has_partition_pruning(df) -> bool:
+    """True iff the executed plan pushes a non-empty partition filter
+    into a file scan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for line in plan.splitlines():
+        if "PartitionFilters" in line:
+            inner = line.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+            if inner.strip():
+                return True
+    return False
+
+
 def _mk(spark, rows):
     return spark.createDataFrame(
         [(u, TS, b"", t, "en") for u, t in rows], schema=pages_schema()
@@ -237,13 +249,12 @@ def test_stream_auto_compaction_converges(spark, tmp_path):
 def test_streaming_probe_plan_prunes_and_no_quadratic_join(spark, tmp_path):
     """VERDICT r3 #8: the per-batch probe's executed plan must (a) prune
     the stored band table to the new batch's band_bucket partitions
-    (PartitionFilters, mirroring test_layout), (b) contain no
+    (non-empty PartitionFilters in the scan), (b) contain no
     CartesianProduct and no BNL beyond the sanctioned broadcast of the
     new-batch bands, and (c) return the same pairs as an unpruned
     full-history join."""
     from rkmh_spark.operators.lsh import band_buckets
     from rkmh_spark.operators.signatures import compute_signatures
-    from rkmh_spark.plans.layout import scan_has_partition_pruning
     from rkmh_spark.streaming.stream_classify import _band_bucket_col
 
     t1, t2, bridge = _texts()

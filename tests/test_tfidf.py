@@ -45,28 +45,6 @@ def test_tfidf_max_df_drops_boilerplate(spark):
     assert {r["token"] for r in out} == {"special0", "special1"}
 
 
-def test_top_terms_rank_and_tiebreak(spark):
-    from rkmh_spark.operators.tfidf import top_terms
-
-    df = spark.createDataFrame(
-        [
-            (0, "zz aa zz aa qq"),   # zz/aa tie on tf → token asc
-            (1, "qq rr"),
-        ],
-        "doc_id long, text string",
-    )
-    rows = top_terms(df, k=2).collect()
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r["doc_id"], []).append((r["rank"], r["token"]))
-    for v in by_doc.values():
-        v.sort()
-    # doc 0: aa and zz tie (tf=2, df=1) → aa first
-    assert by_doc[0] == [(1, "aa"), (2, "zz")]
-    # doc 1: rr (df=1, idf=ln2) beats qq (df=2, idf=0)
-    assert by_doc[1] == [(1, "rr"), (2, "qq")]
-
-
 def test_tfidf_n_docs_param_skips_count_and_matches(spark):
     from rkmh_spark.operators.tfidf import tfidf
 
