@@ -94,15 +94,14 @@ def q_hot_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1 relational spelling: 3-gram Jaccard >= 0.5 doc pairs.
 
-    hash_keys=True is the exercised default (r6): census/drop/self-join
-    all shuffle 8-byte xxhash64 fold keys, gram strings never built —
-    identical output on collision-free data (this oracle +
-    test_skew_guards.py::test_ngram_hash_keys_identical pin it)."""
+    Census/drop/self-join all shuffle 8-byte xxhash64 fold keys and gram
+    strings are never built (this oracle and
+    test_skew_guards.py::test_ngram_jaccard_matches_python pin the
+    output). The result comes back eagerly checkpointed, with no cached
+    relation left in the session."""
     from rkmh_spark.operators.dedup_exact import ngram_jaccard_pairs
 
-    return ngram_jaccard_pairs(
-        _docs(spark, sf_dir), n=3, threshold=0.5, hash_keys=True
-    )
+    return ngram_jaccard_pairs(_docs(spark, sf_dir), n=3, threshold=0.5)
 
 
 def q_lang_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -596,8 +595,13 @@ def q_containment_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pages = documents_as_pages(_docs(spark, sf_dir))
     sigs = compute_signatures(pages, TEST_CONFIG).persist()
-    cands = candidate_pairs(band_buckets(sigs, TEST_CONFIG), TEST_CONFIG)
-    return containment_pairs(cands, sigs, TEST_CONFIG, containment_threshold=0.9)
+    try:
+        cands = candidate_pairs(band_buckets(sigs, TEST_CONFIG), TEST_CONFIG)
+        return containment_pairs(
+            cands, sigs, TEST_CONFIG, containment_threshold=0.9
+        ).localCheckpoint(eager=True)
+    finally:
+        sigs.unpersist()
 
 
 def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -778,14 +782,12 @@ def q_sketch_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet/C4 line-level dedup: window each doc into 10-word lines
     (testdata text has no newlines), drop lines shared by 2+ docs, keep
-    per-doc line order. Fully relational — no UDF."""
+    per-doc line order. Fully relational — no UDF; the df census and join
+    back shuffle xxhash64(line), 8 bytes, instead of the line text."""
     from rkmh_spark.operators.line_dedup import line_dedup, window_text_lines
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    # hash_keys=True is the exercised default (r6): df census + join back
-    # shuffle xxhash64(line) — 8 bytes — instead of the line text
-    # (identical output on collision-free data; pytest-pinned)
-    return line_dedup(window_text_lines(docs), max_line_df=1, hash_keys=True)
+    return line_dedup(window_text_lines(docs), max_line_df=1)
 
 
 def q_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1111,13 +1113,10 @@ def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # posexplode positions are int32; the DuckDB oracle's generate_subscripts
     # arithmetic is BIGINT — cast so the compared schemas agree exactly.
-    # hash_keys=True is the exercised default (r6): the gram census and
-    # join back shuffle 8-byte xxhash64 fold keys instead of raw 20-word
-    # gram strings — identical output on collision-free data (pinned by
-    # test_span_dedup.py::test_hash_keys_path_identical + this oracle).
+    # The gram census and join back shuffle 8-byte xxhash64 fold keys
+    # instead of raw 20-word gram strings (this oracle pins the output).
     return duplicated_spans(
-        _docs(spark, sf_dir).select("doc_id", "text"), min_len=20,
-        hash_keys=True,
+        _docs(spark, sf_dir).select("doc_id", "text"), min_len=20
     ).select(
         "doc_id",
         F.col("span_start").cast("long").alias("span_start"),
@@ -1136,7 +1135,7 @@ def q_strip_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rkmh_spark.operators.span_dedup import duplicated_spans, strip_spans
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    spans = duplicated_spans(docs, min_len=20, hash_keys=True)
+    spans = duplicated_spans(docs, min_len=20)
     return strip_spans(docs, spans).select("doc_id", "text_stripped")
 
 

@@ -33,6 +33,59 @@ def tokens(text: Column | str) -> Column:
     return F.array_remove(F.split(c, " "), "")
 
 
+def ngram_keys(
+    df: DataFrame, n: int, text_col: str, *cols: Column | str
+) -> tuple[DataFrame, Column]:
+    """→ (frame, keys): ``frame`` is ``df`` projected to (*cols, _th) and
+    ``keys`` is the array column, over that frame, of each row's word
+    n-grams as 8-byte keys in token order — the one gram identity of
+    span_dedup, ngram_jaccard_pairs and flag_contaminated. key[i] =
+    fold(th[i], ..., th[i+n-1]) over the per-token xxhash64 values
+    ``_th`` of ``tokens(text)``, with xxhash64(a, b) as the
+    order-sensitive combiner. Empty when the text has fewer than n
+    tokens (or is NULL).
+
+    ``_th`` is projected as its own column first, so the n slice
+    references share ONE tokenize+hash pass instead of n re-evaluations
+    of the tokens() subtree. The chained zip_with over shifted slices
+    keeps every slice an evaluated-once ARGUMENT of the higher-order
+    function (never an element_at inside the lambda — the quadratic
+    interpreted path of _adjacent_bigrams' note), and each fold step is
+    O(1) per element, vs the O(gram-chars) copy of a concat_ws string
+    build (measured ~4× on the benched 20-gram dup_spans build).
+
+    ``keys`` is returned as an expression for the caller's explode, not
+    as a projected column: a generator over a bare column makes the
+    optimizer infer a ``size(keys) > 0`` filter and push it below the
+    ``_th`` projection, which re-evaluates the tokenize+hash once per
+    slice (dup_spans at sf0.1 went from ~3 s to ~11 s that way).
+
+    Collision bound: n distinct grams hashed to 64 bits give about
+    n²/2⁶⁵ colliding pairs (birthday bound) — about 0.03 at 10⁹ distinct
+    grams and about 2.7·10⁴ at 10¹². Equal grams always get equal keys,
+    so a collision can only make two different grams look equal: it adds
+    a false shared gram and never loses a true one. In ``span_dedup`` it
+    can mark a unique position as duplicated, in ``line_dedup`` (xxhash64
+    line keys, same bound) it can drop a unique line as a repeat, in
+    ``ngram_jaccard_pairs`` it can raise a pair's shared count by one,
+    and in ``flag_contaminated`` it can add a false benchmark hit. Inside
+    one document it can also fold two of its grams into one key, which
+    lowers that document's distinct-gram count by one."""
+    if n < 1:
+        raise ValueError(f"n must be >= 1, got {n}")
+    th = df.select(
+        *cols, F.transform(tokens(text_col), lambda w: F.xxhash64(w)).alias("_th")
+    )
+    m = F.size("_th") - F.lit(n - 1)  # gram count (may be <= 0)
+    safe_m = F.greatest(m, F.lit(0))
+    acc = F.slice("_th", 1, safe_m)
+    for j in range(1, n):
+        acc = F.zip_with(
+            acc, F.slice("_th", j + 1, safe_m), lambda a, b: F.xxhash64(a, b)
+        )
+    return th, F.when(m >= 1, acc).otherwise(F.array().cast("array<bigint>"))
+
+
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Length / token / mean-token-length quality features (F6 analog —
     the reference tosses reads by length at
@@ -75,35 +128,10 @@ def _adjacent_bigrams(words: Column) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def _max_run_length(sorted_arr: Column) -> Column:
-    """Longest run of equal adjacent elements in a SORTED array = the
-    multiset's top count — computed with one F.aggregate scan (JVM,
-    zero shuffle). Empty array → 0."""
-    init = F.struct(
-        F.lit(0).alias("run"),
-        F.lit(0).alias("mx"),
-        F.lit(None).cast("string").alias("prev"),
-    )
-
-    def step(acc, w):
-        run = F.when(acc["prev"].eqNullSafe(w), acc["run"] + 1).otherwise(
-            F.lit(1)
-        )
-        return F.struct(
-            run.alias("run"),
-            F.greatest(acc["mx"], run).alias("mx"),
-            w.alias("prev"),
-        )
-
-    return F.aggregate(sorted_arr, init, step, lambda acc: acc["mx"])
-
-
 def repetition_signals(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_keys: bool = False,
-    impl: str = "groupby",
 ) -> DataFrame:
     """Gopher-style repetition filters (Rae et al. 2021 §A1.1 — public:
     documents dominated by one repeated n-gram are low-quality) as
@@ -113,35 +141,12 @@ def repetition_signals(
     n_words / n_distinct_words / top_word_count,
     n_bigrams / n_distinct_bigrams / top_bigram_count.
 
-    Two spellings, identical output (pytest-pinned):
-
-    - ``impl="groupby"`` (default): explode → codegen'd hash aggregation.
-      Measured FASTER at bench scale (3.0 s vs 5.0 s at sf0.1/local[32]):
-      whole-stage codegen beats the projection's interpreted higher-order
-      lambdas. ``hash_keys=True`` makes its shuffle key xxhash64(gram) —
-      8 bytes instead of the string (VERDICT r3 #3).
-    - ``impl="project"``: ZERO-EXCHANGE projection — every signal is a
-      per-doc array expression (size / array_distinct / longest-equal-run
-      over the sorted array via one F.aggregate scan). No shuffle at all,
-      so on a network-bound cluster at 10^12 docs this trades ~1.6× map
-      CPU for zero exchange — the right spelling when the shuffle tier,
-      not CPU, is the bottleneck. Higher-order functions run interpreted
-      (outside codegen), which is the measured CPU cost.
+    Spelled explode → codegen'd hash aggregation on the gram string.
+    Measured faster at bench scale than a zero-exchange projection
+    (3.0 s vs 5.0 s at sf0.1/local[32]): whole-stage codegen beats the
+    projection's interpreted higher-order lambdas.
     """
     words = F.split(F.col(text_col), " ")
-    if impl == "project":
-        bigrams2 = _adjacent_bigrams(words)
-        return df.select(
-            F.col(id_col),
-            F.size(words).alias("n_words"),
-            F.size(F.array_distinct(words)).alias("n_distinct_words"),
-            _max_run_length(F.array_sort(words)).alias("top_words_count"),
-            F.size(bigrams2).alias("n_bigrams"),
-            F.size(F.array_distinct(bigrams2)).alias("n_distinct_bigrams"),
-            _max_run_length(F.array_sort(bigrams2)).alias("top_bigrams_count"),
-        )
-    if impl != "groupby":
-        raise ValueError(f"impl must be 'project' or 'groupby', got {impl!r}")
     base = df.select(
         F.col(id_col).alias("id"),
         words.alias("w"),
@@ -149,18 +154,8 @@ def repetition_signals(
     )
 
     def _stats(col: str, prefix: str) -> DataFrame:
-        exploded = base.select("id", F.explode_outer(col).alias("g"))
-        if hash_keys:
-            # explode_outer's null marker (empty array) must STAY null —
-            # xxhash64(null) is the seed hash, which would count as a gram
-            exploded = exploded.select(
-                "id",
-                F.when(
-                    F.col("g").isNotNull(), F.xxhash64("g")
-                ).alias("g"),
-            )
         g = (
-            exploded
+            base.select("id", F.explode_outer(col).alias("g"))
             .groupBy("id", "g")
             .agg(F.count("g").alias("c"))  # count(g): null rows → 0
         )
@@ -210,8 +205,8 @@ def gopher_quality_filter(
     review finding: the earlier spelling mixed raw-split grams with
     filtered-token denominators). Repetition top-counts use the
     explode → codegen'd groupBy shape (measured ~2× faster than the
-    interpreted sorted-array run-length scan at sf0.1, same lesson as
-    repetition_signals' impl choice), left-joined back per doc. r5: the
+    interpreted sorted-array run-length scan at sf0.1, the same lesson
+    as repetition_signals), left-joined back per doc. r5: the
     word and bigram chains share ONE tagged explode — one scan, one
     tokenization, one shuffle, one join (the r4 spelling ran separate
     word/bigram chains: two extra document scans and an extra join;
@@ -260,9 +255,8 @@ def gopher_quality_filter(
     stats = (
         df.select(F.col(id_col).alias("id"), F.explode(tagged).alias("t"))
         # r6: count on xxhash64(gram) — the shuffle key is 8 bytes
-        # instead of the gram string (same contract as
-        # repetition_signals' hash_keys; a collision could only merge
-        # two grams WITHIN one document's counts). Only the per-doc max
+        # instead of the gram string (a collision could only merge two
+        # grams WITHIN one document's counts). Only the per-doc max
         # count leaves the aggregation, so the gram text is never needed.
         .select("id", F.col("t.k").alias("k"), F.xxhash64("t.g").alias("g"))
         .groupBy("id", "k", "g")

@@ -254,9 +254,6 @@ def _driver_union_find(edges: DataFrame, src_col: str, dst_col: str) -> DataFram
             T.StructField("label", T.StringType(), False),
         ]
     )
-    try:
-        # Spark 4 accepts pyarrow Tables directly — labels never become
-        # Python objects at all
-        return spark.createDataFrame(out_tbl, schema=schema)
-    except Exception:
-        return spark.createDataFrame(out_tbl.to_pandas(), schema=schema)
+    # Spark 4 accepts pyarrow Tables directly — labels never become
+    # Python objects at all
+    return spark.createDataFrame(out_tbl, schema=schema)

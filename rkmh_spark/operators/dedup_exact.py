@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from rkmh_spark.functions.text import tokens
+from rkmh_spark.functions.text import ngram_keys, tokens
 from rkmh_spark.operators.lsh import bucket_pairs
 
 
@@ -38,62 +38,21 @@ def exact_dedup_keep_first(documents: DataFrame, text_col: str = "text") -> Data
     return documents.join(keep, "doc_id", "left_semi")
 
 
-def token_ngrams(documents: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
-    """→ (doc_id, ngram) — distinct token n-grams per document.
-
-    Relational spelling on span_dedup's ``_word_ngrams`` (chained
-    zip_with over shifted slices — argument expressions evaluated once
-    per row). The r5 spelling sliced ``toks`` inside a transform lambda,
-    the interpreted per-element higher-order-function path this repo
-    eliminated everywhere else (text.py r4, span_dedup r5; VERDICT r5
-    #3) — O(n·L) re-evaluations per row instead of n passes.
-    """
-    from rkmh_spark.operators.span_dedup import _word_ngrams
-
-    grams = _word_ngrams(tokens(F.col(text_col)), n)
-    return documents.select(
-        "doc_id", F.explode(F.array_distinct(grams)).alias("ngram")
-    )
-
-
-def _token_ngram_keys(
-    documents: DataFrame, n: int, text_col: str = "text"
-) -> DataFrame:
-    """→ (doc_id, _k) — distinct 8-byte n-gram keys per document
-    (xxhash64 fold of the token hashes, span_dedup._hash_ngram_keys).
-    Key-equal ⇔ gram-equal modulo hash collisions; gram strings are
-    never materialized and every downstream shuffle carries 8 bytes."""
-    from rkmh_spark.operators.span_dedup import _hash_ngram_keys
-
-    toks = documents.select(
-        "doc_id",
-        F.transform(tokens(F.col(text_col)), lambda w: F.xxhash64(w)).alias(
-            "_th"
-        ),
-    )
-    return toks.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(_hash_ngram_keys(F.col("_th"), n))
-        ).alias("_k"),
-    )
-
-
 def ngram_jaccard_pairs(
     documents: DataFrame,
     n: int = 3,
     threshold: float = 0.5,
     text_col: str = "text",
     max_gram_df: int = 1000,
-    hash_keys: bool = False,
+    hash_keys: bool = True,
 ) -> DataFrame:
     """Doc pairs with distinct-token-n-gram Jaccard >= threshold, computed
     over the gram space EXCLUDING grams present in more than
     ``max_gram_df`` documents.
 
-    explode → [df census, drop hot grams] → self-equi-join on ngram →
-    groupBy pair → |∩| ; |∪| by inclusion-exclusion from per-doc counts
-    of the SAME filtered gram space.
+    explode → [df census, drop hot grams] → self-equi-join on the gram
+    key → groupBy pair → |∩| ; |∪| by inclusion-exclusion from per-doc
+    counts of the SAME filtered gram space.
 
     The hot-gram drop is the reference's own ``-I`` frequency defense
     (/root/reference/src/rkmh.cpp:835-836) applied to the relational
@@ -106,43 +65,43 @@ def ngram_jaccard_pairs(
     gram's whole membership in ONE WindowExec task before max_gram_df
     could drop it — the span_dedup.py spill-bomb argument, VERDICT #1).
 
-    ``hash_keys=True``: grams travel as 8-byte xxhash64 fold keys — the
-    census, the drop-join and the self-equi-join all shuffle longs
-    instead of n-word strings, and gram strings are never built
-    (identical output on collision-free data; same contract as
-    line_dedup/span_dedup hash_keys, pytest-pinned).
+    Grams travel as 8-byte keys from ``functions.text.ngram_keys`` (its
+    docstring states the collision bound): the census, the drop-join and
+    the self-equi-join all shuffle longs, and gram strings are never
+    built. ``hash_keys`` accepts only ``True``: it is kept because the
+    benchmark passes it explicitly.
 
-    The gram relation feeds three plan branches (census + both join
-    sides); without a persist Spark recomputes the generation expression
-    per branch — 4× the stage cost measured at sf0.1.
+    The filtered gram relation feeds three plan branches (sizes + both
+    self-join sides); without a persist Spark recomputes the generation
+    expression per branch — 4× the stage cost measured at sf0.1. The
+    result is eagerly checkpointed and the persist released before
+    return, so the call leaves no cached relation behind.
     """
-    key = "_k" if hash_keys else "ngram"
-    raw = (
-        _token_ngram_keys(documents, n, text_col)
-        if hash_keys
-        else token_ngrams(documents, n, text_col)
-    )
+    if hash_keys is not True:
+        raise ValueError("ngram_jaccard_pairs keys grams by 8-byte hash only")
+    th, keys = ngram_keys(documents, n, text_col, "doc_id")
+    raw = th.select("doc_id", F.explode(F.array_distinct(keys)).alias("_k"))
     keep = (
-        raw.groupBy(key)
+        raw.groupBy("_k")
         .agg(F.count("*").alias("gram_df"))
         .where(F.col("gram_df") <= max_gram_df)
-        .select(key)
+        .select("_k")
     )
     # raw is generated twice (census + join side) — map-side-only work;
     # the FILTERED relation keeps the persist because three plan branches
     # (sizes + both self-join sides) read it, as in r5.
-    grams = raw.join(keep, key).persist()
+    grams = raw.join(keep, "_k").persist()
     sizes = grams.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
     a, b = grams.alias("a"), grams.alias("b")
     shared = (
-        a.join(b, key)
+        a.join(b, "_k")
         .where(F.col("a.doc_id") < F.col("b.doc_id"))
         .groupBy(
             F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
         .agg(F.count("*").alias("shared"))
     )
-    return (
+    out = (
         shared.join(sizes.withColumnsRenamed({"doc_id": "doc_a", "n_grams": "na"}), "doc_a")
         .join(sizes.withColumnsRenamed({"doc_id": "doc_b", "n_grams": "nb"}), "doc_b")
         .withColumn(
@@ -155,6 +114,12 @@ def ngram_jaccard_pairs(
         .where(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "shared", "jaccard")
     )
+    # materialize before releasing the cache the plan reads; finally so a
+    # failed checkpoint can't leak it (the simhash_dup_pairs pattern)
+    try:
+        return out.localCheckpoint(eager=True)
+    finally:
+        grams.unpersist()
 
 
 def simhash_signatures(documents: DataFrame, text_col: str = "text") -> DataFrame:

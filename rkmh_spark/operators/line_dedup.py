@@ -7,13 +7,12 @@ training-data-pipeline operator per the task brief. Fully relational —
 split, posexplode, one distinct-doc-count shuffle on the line, ordered
 reassembly — no Python UDF anywhere, so Catalyst plans the whole thing.
 
-Scale notes: with ``hash_keys=True`` the doc-frequency count and the
-join back to lines key on ``xxhash64(line)`` — an 8-byte shuffle/probe
-key instead of the full line text (collision-safe for dedup purposes at
-10^12-doc cardinalities: a collision merely merges two lines' df
-counts). The string-keyed default stays the oracle-checkable spelling;
-both paths produce identical output (pytest-pinned). Reassembly's
-collect_list is bounded by lines-per-document, not corpus size.
+Scale notes: the doc-frequency count and the join back to lines key on
+``xxhash64(line)`` — an 8-byte shuffle/probe key instead of the full
+line text. A collision merges two lines' df counts, so it can drop a
+unique line as a repeat and never keeps a repeated one (the bound is
+stated at ``functions.text.ngram_keys``). Reassembly's collect_list is
+bounded by lines-per-document, not corpus size.
 """
 
 from __future__ import annotations
@@ -27,7 +26,6 @@ def line_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     sep: str = "\n",
-    hash_keys: bool = False,
 ) -> DataFrame:
     """→ (id, n_lines, n_kept, text_dedup).
 
@@ -37,25 +35,18 @@ def line_dedup(
     order with ``sep``. A document whose every line is boilerplate
     yields an empty string — the caller's length filter removes it, same
     as C4's pipeline.
-
-    ``hash_keys=True``: the df count + join shuffle on xxhash64(line)
-    (8 bytes) instead of the line string — the 10^12-doc spelling
-    (VERDICT r3 #3). Identical output on collision-free data.
     """
     lines = documents.select(
         F.col(id_col).alias("id"),
         F.posexplode(F.split(F.col(text_col), sep)).alias("pos", "line"),
-    )
-    if hash_keys:
-        lines = lines.withColumn("_k", F.xxhash64("line"))
-    key = "_k" if hash_keys else "line"
+    ).withColumn("_k", F.xxhash64("line"))
     df_tbl = (
         lines.where(F.trim("line") != "")
-        .groupBy(key)
+        .groupBy("_k")
         .agg(F.count_distinct("id").alias("line_df"))
     )
     kept = (
-        lines.join(df_tbl, key, "left")
+        lines.join(df_tbl, "_k", "left")
         .withColumn(
             "keep", F.coalesce(F.col("line_df"), F.lit(0)) <= max_line_df
         )

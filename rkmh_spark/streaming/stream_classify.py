@@ -236,8 +236,6 @@ def incremental_dedup_stream(
     amortized cost stays a small fraction of per-batch work (hourly /
     daily in production).
     """
-    from pyspark.sql import functions as F  # noqa: F401  (re-export habit)
-
     stream = (
         spark.readStream.schema(pages_schema())
         .format("parquet")

@@ -80,31 +80,55 @@ def test_repetition_signals_fixture(spark):
     assert out[2]["top_words_count"] == 1 and out[2]["n_bigrams"] == 2
 
 
+def _py_line_dedup(rows, max_line_df=1):
+    """Pure-Python line_dedup: (doc_id, n_lines, n_kept, text_dedup)."""
+    df = {}
+    for i, text in rows:
+        for line in set(text.split("\n")):
+            if line.strip():
+                df[line] = df.get(line, 0) + 1
+    out = []
+    for i, text in rows:
+        lines = text.split("\n")
+        kept = [ln for ln in lines if df.get(ln, 0) <= max_line_df]
+        out.append((i, len(lines), len(kept), "\n".join(kept)))
+    return sorted(out)
+
+
 def test_hash_keys_path_identical_and_hashes_in_shuffle(spark):
-    """VERDICT r3 #3: the 8-byte xxhash64 shuffle-key spelling must be
-    code, not commentary — identical output to the string-keyed path on
-    the fixtures, and the executed plan must shuffle on the hash key."""
+    """The xxhash64 line keys give the pure-Python output on the
+    fixtures, and the executed plan shuffles on the hash key."""
     boiler = "subscribe to our newsletter"
     rows = [
         (0, f"alpha one\n{boiler}\nalpha two"),
         (1, f"{boiler}\nbeta one\nbeta two"),
         (2, "gamma only unique lines\ngamma second"),
         (3, ""),
+        (4, "alpha one\n \nalpha one"),
     ]
-    d = _docs(spark, rows)
-    a = sorted(map(tuple, line_dedup(d).collect()))
-    hashed = line_dedup(d, hash_keys=True)
-    b = sorted(map(tuple, hashed.collect()))
-    assert a == b
-    plan = hashed._jdf.queryExecution().executedPlan().toString()
+    out = line_dedup(_docs(spark, rows))
+    assert sorted(map(tuple, out.collect())) == _py_line_dedup(rows)
+    plan = out._jdf.queryExecution().executedPlan().toString()
     assert "xxhash64" in plan  # the count/join shuffle keys on the hash
 
 
-def test_repetition_signals_spellings_identical(spark):
-    """Three spellings, one output: the default zero-shuffle projection,
-    the groupby spelling (oracle shape), and the xxhash64-keyed groupby
-    (8-byte shuffle keys, VERDICT r3 #3). The projection plan must have
-    NO exchange at all; the hashed plan must shuffle on the hash."""
+def _py_repetition(text):
+    words = text.split(" ")
+    bigrams = [f"{a} {b}" for a, b in zip(words, words[1:])]
+
+    def stats(grams):
+        counts = {}
+        for g in grams:
+            counts[g] = counts.get(g, 0) + 1
+        return [len(grams), len(counts), max(counts.values(), default=0)]
+
+    return stats(words) + stats(bigrams)
+
+
+def test_repetition_signals_match_python(spark):
+    """The string-keyed groupby signals equal a pure-Python count over
+    split-on-space words and their adjacent bigrams, including empty
+    text, a single word and runs of spaces."""
     from rkmh_spark.functions.text import repetition_signals
 
     rows = [
@@ -113,18 +137,10 @@ def test_repetition_signals_spellings_identical(spark):
         (2, ""),
         (3, "single"),
         (4, "p q p q p q p q r"),
+        (5, "m  m"),
     ]
-    d = _docs(spark, rows)
-    proj = repetition_signals(d, impl="project")
-    a = sorted(map(tuple, proj.collect()))
-    b = sorted(map(tuple, repetition_signals(d).collect()))
-    hashed = repetition_signals(d, impl="groupby", hash_keys=True)
-    c = sorted(map(tuple, hashed.collect()))
-    assert a == b == c
-    proj_plan = proj._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in proj_plan  # pure map stage, zero shuffle
-    hashed_plan = hashed._jdf.queryExecution().executedPlan().toString()
-    assert "xxhash64" in hashed_plan
+    got = sorted(map(tuple, repetition_signals(_docs(spark, rows)).collect()))
+    assert got == [(i, *_py_repetition(t)) for i, t in rows]
 
 
 def test_gopher_quality_filter_flags(spark):

@@ -67,11 +67,33 @@ def test_query_matches_oracle(spark, duck, name):
     assert not mismatches, f"{name}: first mismatches {mismatches[:5]}"
 
 
+# Entries that still leave a cached relation in the session: dedup_pages
+# persists its signatures and pairs and hands the caller no release
+# handle (ROADMAP item 1). The set may only shrink — the test below also
+# fails when a listed entry stops leaking.
+DEDUP_PAGES_LEAKS = {
+    "dedup_assignments",
+    "cluster_sizes",
+    "cluster_rep_sketches",
+    "cluster_representatives",
+}
+
+
 def test_all_queries_run_rows_only(spark):
-    """Every queries() entry (incl. non-oracle) must execute and be stable."""
+    """Every queries() entry (incl. non-oracle) must execute and be stable,
+    and leave no cached relation that a rebuilt identical plan would
+    silently read (the CacheManager, not getPersistentRDDs(): an eager
+    localCheckpoint is never reused that way and is only freed by GC)."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    leaked = set()
     for name, q in entry_mod.queries().items():
+        spark.catalog.clearCache()
         df = q(spark, "/root/testdata/sf0.001")
         assert df.count() >= 0, name
+        if not cache.isEmpty():
+            leaked.add(name)
+    spark.catalog.clearCache()
+    assert leaked == DEDUP_PAGES_LEAKS
 
 
 # ---------------------------------------------------------------------------

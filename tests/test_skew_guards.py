@@ -8,6 +8,7 @@ the salted triangle shards (containment anchors, LSH buckets).
 """
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -61,10 +62,27 @@ def test_hot_gram_capped_pairs_survive_on_other_grams(spark):
     assert all(a in (0, 1) and b in (0, 1) for a, b in got)
 
 
-def test_ngram_hash_keys_identical(spark):
-    """hash_keys=True (8-byte xxhash64 fold keys, the benched r6 path)
-    must reproduce the string-keyed spelling exactly on collision-free
-    data — pairs, shared counts and jaccard values."""
+def _py_ngram_jaccard(rows, n, threshold):
+    """Brute-force distinct-token-n-gram Jaccard over every doc pair."""
+    grams = {}
+    for i, text in rows:
+        w = [t for t in text.split(" ") if t]
+        grams[i] = {tuple(w[j : j + n]) for j in range(len(w) - n + 1)}
+    out = []
+    for a, ga in grams.items():
+        for b, gb in grams.items():
+            shared = len(ga & gb)
+            if a < b and shared:
+                jac = round(shared / len(ga | gb), 6)
+                if jac >= threshold:
+                    out.append((a, b, shared, jac))
+    return sorted(out)
+
+
+def test_ngram_jaccard_matches_python(spark):
+    """The 8-byte fold-key pass (the benched path) gives the brute-force
+    Python pairs, shared counts and jaccard values; no other key
+    spelling is accepted."""
     rows = [
         (0, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
         (1, "alpha beta gamma delta epsilon zeta eta theta iota lambda"),
@@ -72,18 +90,15 @@ def test_ngram_hash_keys_identical(spark):
         (3, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
         (4, "short"),
         (5, ""),
+        (6, "alpha beta  gamma delta x y z w v u"),
     ]
     df = _docs(spark, rows)
-    s = sorted(
-        map(tuple, ngram_jaccard_pairs(df, n=3, threshold=0.3).collect())
+    got = sorted(
+        map(tuple, ngram_jaccard_pairs(df, n=3, threshold=0.1).collect())
     )
-    h = sorted(
-        map(
-            tuple,
-            ngram_jaccard_pairs(df, n=3, threshold=0.3, hash_keys=True).collect(),
-        )
-    )
-    assert s == h and len(s) > 0
+    assert got == _py_ngram_jaccard(rows, 3, 0.1) and len(got) > 3
+    with pytest.raises(ValueError):
+        ngram_jaccard_pairs(df, hash_keys=False)
 
 
 def _sigs_with_anchor(spark, n_docs: int, anchor: int):

@@ -3,15 +3,36 @@ fixtures, within-doc repeats, island merging, strip reassembly, and the
 hash-keyed scale spelling."""
 
 import pytest
-from pyspark.sql import functions as F
 
-from rkmh_spark.operators.span_dedup import (
-    _word_ngrams,
-    duplicated_spans,
-    strip_spans,
-)
+from rkmh_spark.functions.text import ngram_keys
+from rkmh_spark.functions.xxhash import xxh64
+from rkmh_spark.operators.span_dedup import duplicated_spans, strip_spans
 
 L = 5
+
+
+def _py_keys(text, n):
+    """Pure-Python gram keys: Spark's xxhash64(a, b) over longs is
+    hashLong(b, hashLong(a, 42)), and hashLong is XXH64 of the 8
+    little-endian bytes, so the oracle re-derives every key from bytes."""
+
+    def h2(a, b):
+        s = xxh64(a.to_bytes(8, "little", signed=True))
+        return xxh64(b.to_bytes(8, "little", signed=True), seed=s)
+
+    th = [xxh64(w.encode()) for w in text.split(" ") if w]
+    keys = []
+    for i in range(len(th) - n + 1):
+        k = th[i]
+        for t in th[i + 1 : i + n]:
+            k = h2(k, t)
+        keys.append(k)
+    return keys
+
+
+def _keys(spark, text, n):
+    th, keys = ngram_keys(spark.createDataFrame([(text,)], "text string"), n, "text")
+    return th.select(keys.alias("k")).first()["k"]
 
 
 def _w(prefix, n, start=0):
@@ -31,15 +52,14 @@ def _spans(df, **kw):
 
 
 def test_word_ngrams_basic(spark):
-    df = spark.createDataFrame([("a b c d",)], "text string")
-    got = df.select(
-        _word_ngrams(F.split("text", " "), 2).alias("g2"),
-        _word_ngrams(F.split("text", " "), 4).alias("g4"),
-        _word_ngrams(F.split("text", " "), 5).alias("g5"),
-    ).first()
-    assert got["g2"] == ["a b", "b c", "c d"]
-    assert got["g4"] == ["a b c d"]
-    assert got["g5"] == []
+    """One key per n-token window, in token order, equal to the
+    pure-Python fold; fewer than n tokens gives no key."""
+    for n in (2, 4):
+        got = _keys(spark, "a b c d", n)
+        assert got == _py_keys("a b c d", n) and len(got) == 5 - n
+    assert _keys(spark, "a b c d", 5) == []
+    # order-sensitive: the same tokens in another order are another gram
+    assert _keys(spark, "a b", 2) != _keys(spark, "b a", 2)
 
 
 def test_planted_cross_doc_span(spark):
@@ -98,6 +118,8 @@ def test_short_and_empty_docs_yield_no_spans(spark):
 
 
 def test_hash_keys_path_identical(spark):
+    """The hashed spans equal the hand-computed ones, the plan keys the
+    gram shuffle on xxhash64, and no other key spelling is accepted."""
     shared = _w("s", 9)
     df = _df(
         spark,
@@ -107,14 +129,23 @@ def test_hash_keys_path_identical(spark):
             (3, _w("u", 25)),
         ],
     )
-    assert _spans(df) == _spans(df, hash_keys=True)
+    # the 9-word run holds 5 dup 5-grams: doc1 at words 4..12 -> grams
+    # 4..8 -> span [4, 13); doc2 at words 0..8 -> span [0, 9)
+    assert _spans(df) == [(1, 4, 13, 5), (2, 0, 9, 5)]
+    assert _spans(df, hash_keys=True) == _spans(df)
     plan = (
-        duplicated_spans(df, min_len=L, hash_keys=True)
+        duplicated_spans(df, min_len=L)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
     assert "xxhash64" in plan
+    # one tokenize per gram branch (join side + census): an inferred
+    # explode filter pushed below the token-hash projection would
+    # re-tokenize once per gram slice
+    assert plan.count("split(") == 2
+    with pytest.raises(ValueError):
+        duplicated_spans(df, min_len=L, hash_keys=False)
 
 
 def test_strip_spans_removes_all_occurrences(spark):
@@ -153,11 +184,9 @@ def test_no_quadratic_join_and_two_shuffles(spark):
 @pytest.mark.parametrize("n", [0, 1])
 def test_degenerate_ngram_sizes(spark, n):
     if n == 0:
+        df = spark.createDataFrame([("a",)], "text string")
         with pytest.raises(ValueError):
-            _word_ngrams(F.array(F.lit("a")), 0)
+            ngram_keys(df, 0, "text")
     else:
-        df = spark.createDataFrame([("a b",)], "text string")
-        got = df.select(
-            _word_ngrams(F.split("text", " "), 1).alias("g")
-        ).first()
-        assert got["g"] == ["a", "b"]
+        # n = 1: one key per token, the token's own xxhash64
+        assert _keys(spark, "a b", 1) == [xxh64(b"a"), xxh64(b"b")]
