@@ -398,10 +398,11 @@ def q_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-bit SimHash per doc (JVM xxhash64 token votes). Oracle: an
-    INDEPENDENT pure-Python XXH64 (validated on the public test vectors)
-    re-derives every signature — embedded as literal VALUES because DuckDB
-    has no xxhash64 (r1 had no correctness evidence for SimHash at all)."""
+    """64-bit SimHash per doc (JVM per-token xxhash64, NumPy bit vote per
+    Arrow batch). Oracle: an INDEPENDENT pure-Python XXH64 (validated on
+    the public test vectors) re-derives every signature — embedded as
+    literal VALUES because DuckDB has no xxhash64 (r1 had no correctness
+    evidence for SimHash at all)."""
     from rkmh_spark.operators.dedup_exact import simhash_signatures
 
     return simhash_signatures(_docs(spark, sf_dir))

@@ -5,9 +5,9 @@ parity: k=16 (/root/reference/src/rkmh.cpp:728-731), sketch_size=1000
 (/root/reference/src/rkmh.cpp:722-726), murmur3_x64_128 seed 42
 (/root/reference/src/rkmh.cpp:493-497).
 
-For web text, reverse-complement canonicalization is meaningless, so
-``canonical`` is pinned False (the one deliberate config delta vs the
-reference; see SURVEY.md §7.1).
+Hashing is forward-only: for web text, reverse-complement
+canonicalization is meaningless, so there is no ``canonical`` switch (the
+one deliberate delta vs the reference; see SURVEY.md §7.1).
 """
 
 from __future__ import annotations
@@ -24,7 +24,6 @@ class DedupConfig:
     k: int | tuple[int, ...] = 16
     sketch_size: int = 1000     # bottom-s sketch size ("-s" in rkmh)
     hash_seed: int = 42         # murmur3 seed (src/rkmh.cpp:493-497)
-    canonical: bool = False     # fwd-hash only for text (delta vs reference)
 
     # --- frequency filters (rkmh -I / -M analogs) ---
     max_doc_freq: int | None = None   # drop shingles present in > this many docs (A2/F5)

@@ -37,7 +37,7 @@ def sketch_json(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
         F.lit("MurmurHash3_x64_128").alias("hashType"),
         F.lit(64).alias("hashBits"),
         F.lit(cfg.hash_seed).alias("hashSeed"),
-        F.lit(cfg.canonical).alias("canonical"),
+        F.lit(False).alias("canonical"),  # hashing is forward-only
         F.lit(cfg.sketch_size).alias("sketchSize"),
         F.col("n_shingles").alias("seqLen"),
         F.col("sketch").alias("sketches"),

@@ -1,15 +1,23 @@
 """Text-analysis functions for the training-data pipeline, Spark-native.
 
 Everything here is built from pyspark.sql.functions (JVM-side, whole-stage
-codegen) — no Python UDFs. Each has an exact ANSI-SQL spelling used by the
-DuckDB oracle in __spark_entry__.py, so semantics are pinned cross-engine:
+codegen), except the per-document word and bigram multiset counts of
+``gram_stats``: one ``mapInArrow`` NumPy kernel per Arrow batch, with no
+per-row Python. Each has an exact ANSI-SQL spelling used by the DuckDB
+oracle in __spark_entry__.py, so semantics are pinned cross-engine:
 token = non-empty run split on single spaces; stopword sets are explicit
 literals.
 """
 
 from __future__ import annotations
 
+from typing import Iterator
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import types as T
 
 # tiny deterministic stopword panels per language (oracle-mirrored literals)
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -49,10 +57,10 @@ def ngram_keys(
     references share ONE tokenize+hash pass instead of n re-evaluations
     of the tokens() subtree. The chained zip_with over shifted slices
     keeps every slice an evaluated-once ARGUMENT of the higher-order
-    function (never an element_at inside the lambda — the quadratic
-    interpreted path of _adjacent_bigrams' note), and each fold step is
-    O(1) per element, vs the O(gram-chars) copy of a concat_ws string
-    build (measured ~4× on the benched 20-gram dup_spans build).
+    function (never an element_at inside the lambda, which re-evaluates
+    the array expression per element: quadratic per row), and each fold
+    step is O(1) per element, vs the O(gram-chars) copy of a concat_ws
+    string build (measured ~4× on the benched 20-gram dup_spans build).
 
     ``keys`` is returned as an expression for the caller's explode, not
     as a projected column: a generator over a bare column makes the
@@ -106,26 +114,69 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _adjacent_bigrams(words: Column) -> Column:
-    """Adjacent-pair bigram array ("w1 w2") of a word array; empty for
-    arrays shorter than 2.
+GRAM_STATS = (
+    "n_words", "n_distinct_words", "top_words_count",
+    "n_bigrams", "n_distinct_bigrams", "top_bigrams_count",
+)
 
-    Spelled zip_with(slice(w,1,n-1), slice(w,2,n-1)) rather than
-    transform(sequence, i -> element_at(w, i)…): a higher-order function
-    evaluates its ARGUMENT expressions once per row, but an element_at(w,
-    i) INSIDE the lambda re-evaluates ``w`` per element when ``w`` is
-    itself an expression (split/array_remove) and subexpression
-    elimination doesn't reach the interpreted lambda path — measured as
-    a quadratic-per-row blowup (22.9 s quality_filter) in r4."""
-    n = F.size(words)
-    return F.when(
-        n >= 2,
-        F.zip_with(
-            F.slice(words, 1, n - 1),
-            F.slice(words, 2, n - 1),
-            lambda a, b: F.concat_ws(" ", a, b),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+
+def _multiset_stats(codes: np.ndarray, lengths: np.ndarray) -> list[np.ndarray]:
+    """[count, distinct, top count] per row of the multisets of ``codes``
+    (integers in [0, 2^31)), laid out row after row with ``lengths[i]``
+    codes for row i. Equal (row, code) keys are counted on one sort."""
+    rows = np.repeat(np.arange(len(lengths), dtype=np.int64), lengths)
+    keys, counts = np.unique((rows << 32) | codes, return_counts=True)
+    key_rows = keys >> 32
+    distinct = np.bincount(key_rows, minlength=len(lengths))
+    top = np.zeros(len(lengths), dtype=np.int64)
+    firsts = np.flatnonzero(np.diff(key_rows, prepend=-1))
+    top[key_rows[firsts]] = np.maximum.reduceat(counts, firsts)
+    return [lengths.astype(np.int64), distinct, top]
+
+
+def _gram_stats_batches(
+    batches: Iterator[pa.RecordBatch],
+) -> Iterator[pa.RecordBatch]:
+    """Arrow kernel of ``gram_stats``: the last column is the string list;
+    it is replaced by the six word and bigram counts."""
+    for batch in batches:
+        words = batch.column(batch.num_columns - 1)
+        lengths = pc.list_value_length(words).fill_null(0).to_numpy()
+        codes = pc.dictionary_encode(words.flatten()).indices.to_numpy()
+        # a bigram is the pair of adjacent codes inside one row: position
+        # i starts one unless it is the last element of its row
+        starts = np.ones(len(codes), dtype=bool)
+        starts[np.cumsum(lengths[lengths > 0]) - 1] = False
+        pairs = (codes[:-1].astype(np.int64) << 32) | codes[1:]
+        pair_codes = np.unique(pairs[starts[:-1]], return_inverse=True)[1]
+        stats = _multiset_stats(codes, lengths) + _multiset_stats(
+            pair_codes, np.maximum(lengths - 1, 0)
+        )
+        yield pa.RecordBatch.from_arrays(
+            batch.columns[:-1] + [pa.array(v) for v in stats],
+            names=batch.schema.names[:-1] + list(GRAM_STATS),
+        )
+
+
+def gram_stats(df: DataFrame, words: Column, *cols: Column | str) -> DataFrame:
+    """→ (*cols, n_words, n_distinct_words, top_words_count, n_bigrams,
+    n_distinct_bigrams, top_bigrams_count), one row per input row: the
+    size, distinct count and top count of the multiset of elements of the
+    string array ``words``, and of the multiset of its adjacent element
+    pairs (bigrams). A NULL or empty array gives zeros.
+
+    One JVM projection, then one ``mapInArrow`` pass over each Arrow
+    batch: no explode, no shuffle, no join back. Elements are compared
+    exactly, through Arrow dictionary codes, never through a hash; a
+    bigram is the ordered pair of its two codes, which is the same
+    identity as the string ``"a b"`` when no element holds a space (true
+    of every split-on-space list here)."""
+    proj = df.select(*cols, words.alias("_words"))
+    schema = T.StructType(
+        proj.schema.fields[:-1]
+        + [T.StructField(name, T.LongType()) for name in GRAM_STATS]
+    )
+    return proj.mapInArrow(_gram_stats_batches, schema)
 
 
 def repetition_signals(
@@ -138,45 +189,14 @@ def repetition_signals(
     ALL-INTEGER per-doc signals, ratio-free so the oracle compare never
     touches cross-engine float formatting:
 
-    n_words / n_distinct_words / top_word_count,
-    n_bigrams / n_distinct_bigrams / top_bigram_count.
+    n_words / n_distinct_words / top_words_count,
+    n_bigrams / n_distinct_bigrams / top_bigrams_count.
 
-    Spelled explode → codegen'd hash aggregation on the gram string.
-    Measured faster at bench scale than a zero-exchange projection
-    (3.0 s vs 5.0 s at sf0.1/local[32]): whole-stage codegen beats the
-    projection's interpreted higher-order lambdas.
+    Words are the raw single-space split, empty strings included (so
+    ``"m  m"`` has three words); NULL text gives zeros. One row per input
+    row, from ``gram_stats``: ``id_col`` must be a key of ``df``.
     """
-    words = F.split(F.col(text_col), " ")
-    base = df.select(
-        F.col(id_col).alias("id"),
-        words.alias("w"),
-        _adjacent_bigrams(words).alias("b"),
-    )
-
-    def _stats(col: str, prefix: str) -> DataFrame:
-        g = (
-            base.select("id", F.explode_outer(col).alias("g"))
-            .groupBy("id", "g")
-            .agg(F.count("g").alias("c"))  # count(g): null rows → 0
-        )
-        return g.groupBy("id").agg(
-            F.sum("c").alias(f"n_{prefix}"),
-            F.sum(F.when(F.col("c") > 0, 1).otherwise(0)).alias(
-                f"n_distinct_{prefix}"
-            ),
-            F.max("c").alias(f"top_{prefix}_count"),
-        )
-
-    out = _stats("w", "words").join(_stats("b", "bigrams"), "id")
-    return out.select(
-        F.col("id").alias(id_col),
-        "n_words",
-        "n_distinct_words",
-        "top_words_count",
-        "n_bigrams",
-        "n_distinct_bigrams",
-        "top_bigrams_count",
-    )
+    return gram_stats(df, F.split(F.col(text_col), " "), id_col)
 
 
 # Gopher's English stopword panel for the "must contain ≥2 of these"
@@ -196,21 +216,15 @@ def gopher_quality_filter(
     max_mean_word_len: int = 10,
 ) -> DataFrame:
     """The Gopher keep/drop decision (Rae et al. 2021 §A1.1, public) as
-    ONE zero-shuffle projection — the training-pipeline's end-to-end
-    filtering step (VERDICT r3 #7).
+    one map-only pass: a JVM projection of the per-document signals, the
+    word and bigram top counts from ``gram_stats``, and a JVM projection
+    of the flags. No shuffle and no join; one row per input row, so
+    ``id_col`` must be a key of ``df``.
 
     Every signal here — including the repetition fractions — is computed
     over the SAME empty-filtered token stream (``tokens()``), so runs of
-    whitespace can never register as a dominant repeated "word" (r4
-    review finding: the earlier spelling mixed raw-split grams with
-    filtered-token denominators). Repetition top-counts use the
-    explode → codegen'd groupBy shape (measured ~2× faster than the
-    interpreted sorted-array run-length scan at sf0.1, the same lesson
-    as repetition_signals), left-joined back per doc. r5: the
-    word and bigram chains share ONE tagged explode — one scan, one
-    tokenization, one shuffle, one join (the r4 spelling ran separate
-    word/bigram chains: two extra document scans and an extra join;
-    the two gram-stat chains dominated the query's bench cost).
+    whitespace can never register as a dominant repeated "word". The top
+    counts are exact: tokens are compared as strings, not as hashes.
 
     Per-document fail flags, every threshold spelled as an INTEGER
     cross-multiplication (no ratios cross the oracle gate):
@@ -239,35 +253,9 @@ def gopher_quality_filter(
     n_alpha_words = F.size(F.filter(toks, lambda t: t.rlike("[A-Za-z]")))
     sw = F.array(*[F.lit(w) for w in GOPHER_STOPWORDS])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-    bigrams = _adjacent_bigrams(toks)
-
-    # one tagged gram stream: k=0 words, k=1 bigrams — a single explode/
-    # shuffle computes both per-doc top counts (per-kind max can't mix:
-    # the groupBy key includes k)
-    tagged = F.concat(
-        F.transform(
-            toks, lambda t: F.struct(F.lit(0).alias("k"), t.alias("g"))
-        ),
-        F.transform(
-            bigrams, lambda b: F.struct(F.lit(1).alias("k"), b.alias("g"))
-        ),
-    )
-    stats = (
-        df.select(F.col(id_col).alias("id"), F.explode(tagged).alias("t"))
-        # r6: count on xxhash64(gram) — the shuffle key is 8 bytes
-        # instead of the gram string (a collision could only merge two
-        # grams WITHIN one document's counts). Only the per-doc max
-        # count leaves the aggregation, so the gram text is never needed.
-        .select("id", F.col("t.k").alias("k"), F.xxhash64("t.g").alias("g"))
-        .groupBy("id", "k", "g")
-        .agg(F.count("*").alias("c"))
-        .groupBy("id")
-        .agg(
-            F.max(F.when(F.col("k") == 0, F.col("c"))).alias("top_word"),
-            F.max(F.when(F.col("k") == 1, F.col("c"))).alias("top_bigram"),
-        )
-    )
-    q = df.select(
+    q = gram_stats(
+        df,
+        toks,
         F.col(id_col).alias("id"),
         nw.alias("nw"),
         sum_word_chars.alias("swc"),
@@ -275,32 +263,25 @@ def gopher_quality_filter(
         n_ellipsis.alias("n_ell"),
         n_alpha_words.alias("n_alpha"),
         n_stop.alias("n_stop"),
-        F.size(bigrams).alias("n_bigrams"),
     )
     nw = F.col("nw")
-    out = (
-        q.join(stats, "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            nw.alias("n_words"),
-            ((nw < min_words) | (nw > max_words)).alias("fail_word_count"),
-            (
-                (F.col("swc") < min_mean_word_len * nw)
-                | (F.col("swc") > max_mean_word_len * nw)
-            ).alias("fail_mean_word_len"),
-            (
-                (F.col("n_hash") * 10 > nw) | (F.col("n_ell") * 10 > nw)
-            ).alias("fail_symbol_ratio"),
-            (F.col("n_alpha") * 5 < nw * 4).alias("fail_alpha_ratio"),
-            (F.col("n_stop") < 2).alias("fail_stopwords"),
-            (F.coalesce("top_word", F.lit(0)) * 5 > nw).alias(
-                "fail_top_word"
-            ),
-            (
-                F.coalesce("top_bigram", F.lit(0)) * 50
-                > F.col("n_bigrams") * 9
-            ).alias("fail_top_bigram"),
-        )
+    out = q.select(
+        F.col("id").alias(id_col),
+        nw.alias("n_words"),
+        ((nw < min_words) | (nw > max_words)).alias("fail_word_count"),
+        (
+            (F.col("swc") < min_mean_word_len * nw)
+            | (F.col("swc") > max_mean_word_len * nw)
+        ).alias("fail_mean_word_len"),
+        ((F.col("n_hash") * 10 > nw) | (F.col("n_ell") * 10 > nw)).alias(
+            "fail_symbol_ratio"
+        ),
+        (F.col("n_alpha") * 5 < nw * 4).alias("fail_alpha_ratio"),
+        (F.col("n_stop") < 2).alias("fail_stopwords"),
+        (F.col("top_words_count") * 5 > nw).alias("fail_top_word"),
+        (F.col("top_bigrams_count") * 50 > F.col("n_bigrams") * 9).alias(
+            "fail_top_bigram"
+        ),
     )
     return out.withColumn(
         "keep",

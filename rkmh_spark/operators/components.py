@@ -125,7 +125,9 @@ def connected_components_star(
     Fixed point: each component is a star centered on its min node, so
     labels(node)=center and label = min url in component — identical
     output contract to the other paths. Comparisons are lexicographic on
-    the url strings, matching the min-url rule everywhere else.
+    the url strings, matching the min-url rule everywhere else. Raises
+    ``RuntimeError`` when no fixed point is seen within
+    ``max_iterations`` rounds, instead of returning split labels.
     """
 
     def _sym(e: DataFrame) -> DataFrame:
@@ -174,6 +176,12 @@ def connected_components_star(
         if cur == prev:
             break
         prev = cur
+    else:
+        # unconverged labels split components: never return them
+        raise RuntimeError(
+            "star contraction did not converge within "
+            f"max_iterations={max_iterations}"
+        )
 
     # fixed point: for every node, its min neighbor IS the center
     labels = (

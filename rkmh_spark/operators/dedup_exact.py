@@ -5,14 +5,21 @@ Training-data-pipeline operators complementing the MinHash/LSH path:
 - token n-gram Jaccard: fully relational (explode → equi-join → groupBy),
   the SQL-expressible spelling of the verify stage (J1's relational form,
   SURVEY.md §2.4).
-- SimHash: 64-bit sign-aggregated token hashes banded into 4×16-bit keys;
-  Hamming-adjacent candidates collide on at least one key (for ≤3-bit
-  distance across 4 bands... standard pigeonhole argument at distance ≤3).
+- SimHash: 64-bit per-bit votes over JVM token hashes (one NumPy pass per
+  Arrow batch), banded into 4×16-bit keys; Hamming-adjacent candidates
+  collide on at least one key (for ≤3-bit distance across 4 bands...
+  standard pigeonhole argument at distance ≤3).
 """
 
 from __future__ import annotations
 
+from typing import Iterator
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import types as T
 
 from rkmh_spark.functions.text import ngram_keys, tokens
 from rkmh_spark.operators.lsh import bucket_pairs
@@ -122,45 +129,48 @@ def ngram_jaccard_pairs(
         grams.unpersist()
 
 
+def _simhash_batches(
+    batches: Iterator[pa.RecordBatch],
+) -> Iterator[pa.RecordBatch]:
+    """Arrow kernel of ``simhash_signatures``: (doc_id, th) → (doc_id,
+    simhash), rows with no token hash dropped."""
+    for batch in batches:
+        th = batch.column(1)
+        lengths = pc.list_value_length(th).fill_null(0).to_numpy()
+        keep = lengths > 0
+        starts, n = (np.cumsum(lengths) - lengths)[keep], lengths[keep]
+        h = th.flatten().to_numpy()
+        votes = np.empty((len(n), 64), dtype=bool)
+        for b in range(64):
+            votes[:, b] = 2 * np.add.reduceat((h >> b) & 1, starts) > n
+        sim = np.packbits(votes, axis=1, bitorder="little").view("<i8")
+        yield pa.RecordBatch.from_arrays(
+            [batch.column(0).filter(pa.array(keep)), pa.array(sim.ravel())],
+            names=["doc_id", "simhash"],
+        )
+
+
 def simhash_signatures(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """→ (doc_id, simhash) — 64-bit SimHash over distinct tokens.
 
-    bit_b(doc) = 1 iff sum over tokens of sign(bit_b(xxhash64(token))) > 0.
-    Spelled entirely with JVM expressions: explode distinct tokens,
-    per-bit set-bit counts, one shared token count n, reassemble with
-    bit_b = (2·s_b > n) — algebraically identical to the r5 ±1 vote
-    (v_b = 2·s_b − n > 0).
-
-    The counts are PACKED two per aggregate buffer (r6): buffer b holds
-    s_b in its low 32 bits and s_{b+32} in the high 32 —
-    Σ ((th>>b)&1) + (((th>>b+32)&1) << 32). Carry-safe by construction:
-    a JVM string is < 2^31 chars, so distinct tokens per doc < 2^30 and
-    the low-field sum can never reach 2^32; the high-field sum stays
-    under 2^62. 33 aggregate buffers instead of 65 → roughly half the
-    generated hash-agg code and per-row buffer updates (measured: the
-    65-buffer spelling was this query's dominant cold AND warm cost;
-    cold 4.9→2.1 s, warm 2.1→1.7 s at sf0.1, results bit-identical).
+    bit_b(doc) = 1 iff 2·s_b > n, where n is the number of distinct
+    tokens and s_b the number of them whose xxhash64 has bit b set (the
+    ±1 vote 2·s_b − n > 0). The per-token hash is the JVM xxhash64 of
+    ``ngram_keys``; the vote is one NumPy pass per Arrow batch
+    (``mapInArrow``), with no explode and no shuffle. A document with no
+    token gets no row, and each input row gives its own row, so
+    ``doc_id`` must be a key of ``documents``.
     """
-    tok = documents.select(
-        "doc_id", F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("tok")
-    ).withColumn("th", F.xxhash64("tok"))
-    aggs = []
-    for b in range(32):
-        lo = F.shiftright(F.col("th"), b).bitwiseAND(F.lit(1))
-        hi = F.shiftright(F.col("th"), b + 32).bitwiseAND(F.lit(1))
-        aggs.append(F.sum(lo + F.shiftleft(hi, 32)).alias(f"p{b}"))
-    votes = tok.groupBy("doc_id").agg(F.count("*").alias("_n"), *aggs)
-    sim = F.lit(0).cast("long")
-    for b in range(32):
-        lo = F.col(f"p{b}").bitwiseAND(F.lit(0xFFFFFFFF))
-        hi = F.shiftrightunsigned(F.col(f"p{b}"), 32)
-        sim = sim + F.when(
-            lo * 2 > F.col("_n"), F.shiftleft(F.lit(1).cast("long"), b)
-        ).otherwise(F.lit(0).cast("long"))
-        sim = sim + F.when(
-            hi * 2 > F.col("_n"), F.shiftleft(F.lit(1).cast("long"), b + 32)
-        ).otherwise(F.lit(0).cast("long"))
-    return votes.select("doc_id", sim.alias("simhash"))
+    th = documents.select(
+        "doc_id",
+        F.transform(
+            F.array_distinct(tokens(F.col(text_col))), lambda w: F.xxhash64(w)
+        ).alias("th"),
+    )
+    schema = T.StructType(
+        [th.schema["doc_id"], T.StructField("simhash", T.LongType())]
+    )
+    return th.mapInArrow(_simhash_batches, schema)
 
 
 def simhash_dup_pairs(
@@ -168,7 +178,6 @@ def simhash_dup_pairs(
     max_hamming: int = 3,
     text_col: str = "text",
     bucket_cap: int = 200,
-    materialize: bool = True,
 ) -> DataFrame:
     """→ (doc_a, doc_b, hamming) — verified SimHash near-duplicate pairs
     with Hamming distance ≤ ``max_hamming`` (exact, not approximate).
@@ -183,25 +192,18 @@ def simhash_dup_pairs(
     The verify itself is pure codegen: join the candidate ids back to the
     signature table twice and compute ``bit_count(xor)`` — no Python, no
     extra shuffle beyond the two id-key joins. The signature relation
-    feeds three branches (banding + both verify joins); with
-    ``materialize=True`` (the execution path) it is persisted for the
-    duration of the call, the candidates stay lazy, and the result is
-    eagerly checkpointed before the caches are released.
-    ``materialize=False`` returns the verify join lazy (signatures
-    recomputed per branch) over eagerly checkpointed candidates — for
-    plan inspection of the verify and tiny inputs; the candidate plan
-    is gated on ``bucket_pairs`` directly.
+    feeds three branches (banding + both verify joins), so it is
+    persisted for the duration of the call, the candidates stay lazy,
+    and the result is eagerly checkpointed before the caches are
+    released.
     """
     if max_hamming > 3:
         raise ValueError(
             "4×16-bit banding only guarantees recall for hamming <= 3; "
             f"got max_hamming={max_hamming}"
         )
-    sigs = simhash_signatures(documents, text_col)
-    cleanup: list | None = None
-    if materialize:
-        sigs = sigs.persist()
-        cleanup = []
+    sigs = simhash_signatures(documents, text_col).persist()
+    cleanup: list = []
     cand = simhash_band_candidates(sigs, bucket_cap=bucket_cap, cleanup=cleanup)
     sa = sigs.withColumnsRenamed({"doc_id": "doc_a", "simhash": "sim_a"})
     sb = sigs.withColumnsRenamed({"doc_id": "doc_b", "simhash": "sim_b"})
@@ -215,17 +217,15 @@ def simhash_dup_pairs(
         .where(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
     )
-    if materialize:
-        # materialize before releasing the cached inputs the plan depends
-        # on; finally-cleanup so a failed checkpoint (task failure, OOM)
-        # can't leak the persisted relations for the session (ADVICE r5)
-        try:
-            out = out.localCheckpoint(eager=True)
-        finally:
-            for h in cleanup:
-                h.unpersist()
-            sigs.unpersist()
-    return out
+    # materialize before releasing the cached inputs the plan depends on;
+    # finally-cleanup so a failed checkpoint (task failure, OOM) can't
+    # leak the persisted relations for the session
+    try:
+        return out.localCheckpoint(eager=True)
+    finally:
+        for h in cleanup:
+            h.unpersist()
+        sigs.unpersist()
 
 
 def simhash_band_candidates(

@@ -34,7 +34,6 @@ def lm_score(
     id_col: str = "doc_id",
     hot_df: int = 2,
     round_digits: int = 4,
-    materialize: bool = True,
 ) -> DataFrame:
     """Per-document (n_tokens, bits_per_token) under an add-alpha
     unigram LM trained on ``ref`` (default: ``docs`` itself —
@@ -49,9 +48,7 @@ def lm_score(
     token per doc, and the hot-joined table is eagerly checkpointed
     before it branches into the resolved/unresolved paths (review r5:
     without it the scan+explode+groupBy lineage evaluates once per
-    branch — the _sharded_probe_join recompute class). Set
-    ``materialize=False`` to trade that disk write back for the double
-    compute when the input scan is cheap."""
+    branch — the _sharded_probe_join recompute class)."""
     from rkmh_spark.functions.text import tokens
 
     if ref is None:
@@ -59,12 +56,11 @@ def lm_score(
 
     ref_toks = ref.select(F.explode(tokens(text_col)).alias("tok"))
     vocab = ref_toks.groupBy("tok").agg(F.count("*").alias("c"))
-    if materialize:
-        # vocab feeds THREE consumers (totals row, hot broadcast, tail
-        # join) — without materialization the reference tokenize+count
-        # lineage evaluates once per consumer (r6; measured 3 corpus
-        # passes in one query). O(vocab) compact rows.
-        vocab = vocab.localCheckpoint(eager=True)
+    # vocab feeds THREE consumers (totals row, hot broadcast, tail join) —
+    # without materialization the reference tokenize+count lineage
+    # evaluates once per consumer (r6; measured 3 corpus passes in one
+    # query). O(vocab) compact rows.
+    vocab = vocab.localCheckpoint(eager=True)
     # T (total tokens) and V (vocab size) are one tiny aggregate row,
     # cross-joined as a broadcast literal into the scorer
     totals = F.broadcast(
@@ -84,9 +80,9 @@ def lm_score(
     )
     tail = vocab.where(F.col("c") < hot_df).withColumnRenamed("c", "c_tail")
 
-    with_hot = doc_tf.join(hot, on="tok", how="left")
-    if materialize:
-        with_hot = with_hot.localCheckpoint(eager=True)
+    with_hot = doc_tf.join(hot, on="tok", how="left").localCheckpoint(
+        eager=True
+    )
     resolved = with_hot.where(F.col("c_hot").isNotNull()).select(
         id_col, "tf", F.col("c_hot").alias("c")
     )

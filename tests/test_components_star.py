@@ -59,3 +59,13 @@ def test_hash_min_warns_on_chain_where_star_succeeds(spark):
     )
     assert set(labels.values()) == {"c000"}
     assert len(labels) == n
+
+
+def test_star_raises_when_cap_reached_before_fixed_point(spark):
+    # the 64-node chain needs ~log2(64) rounds; at a cap of 2 the labels
+    # are still split (60 distinct where the answer is 1), so the call
+    # must fail loudly instead of returning them
+    n = 64
+    pairs = [(f"c{i:03d}", f"c{i+1:03d}") for i in range(n - 1)]
+    with pytest.raises(RuntimeError, match="max_iterations=2"):
+        connected_components_star(_edges_df(spark, pairs), max_iterations=2)

@@ -143,6 +143,82 @@ def test_repetition_signals_match_python(spark):
     assert got == [(i, *_py_repetition(t)) for i, t in rows]
 
 
+def _py_gopher(text, min_words):
+    """Pure-Python gopher_quality_filter row (without doc_id) for a
+    non-NULL text: every signal over the empty-filtered tokens."""
+    import re
+
+    from rkmh_spark.functions.text import GOPHER_STOPWORDS
+
+    toks = [t for t in text.split(" ") if t != ""]
+    nw = len(toks)
+    swc = sum(len(t) for t in toks)
+    n_ell = len(text.split("...")) - 1
+    n_alpha = sum(1 for t in toks if re.search("[A-Za-z]", t))
+    n_stop = sum(1 for t in toks if t in GOPHER_STOPWORDS)
+    _, _, top_word, n_bigrams, _, top_bigram = _py_repetition(" ".join(toks))
+    if not toks:
+        top_word = 0
+    flags = (
+        nw < min_words or nw > 100_000,
+        swc < 3 * nw or swc > 10 * nw,
+        text.count("#") * 10 > nw or n_ell * 10 > nw,
+        n_alpha * 5 < nw * 4,
+        n_stop < 2,
+        top_word * 5 > nw,
+        top_bigram * 50 > max(nw - 1, 0) * 9,
+    )
+    return (nw, *flags, not any(flags))
+
+
+# NULL, empty, whitespace-only, one token, one repeated token, runs of
+# spaces, and texts that trip the repetition flags
+EDGE_ROWS = [
+    (0, None),
+    (1, ""),
+    (2, " "),
+    (3, "one"),
+    (4, "a a a"),
+    (5, "x  y  x"),
+    (6, "  the cat and  the dog  "),
+    (7, "the of the of the of the of to be"),
+    (8, "the cat# sat on... the mat and that dog have fun"),
+]
+
+
+def test_repetition_signals_edge_rows_match_python(spark):
+    """NULL text gives zeros; every other row equals the pure-Python
+    count over the raw single-space split, empty strings included."""
+    from rkmh_spark.functions.text import repetition_signals
+
+    got = sorted(
+        map(tuple, repetition_signals(_docs(spark, EDGE_ROWS)).collect())
+    )
+    expected = [
+        (i, *([0] * 6 if t is None else _py_repetition(t)))
+        for i, t in EDGE_ROWS
+    ]
+    assert got == expected
+
+
+def test_gopher_quality_filter_edge_rows_match_python(spark):
+    """Every flag of every non-NULL edge row equals the pure-Python
+    reference; a NULL text keeps its NULL word count and flags, with
+    zero top counts."""
+    from rkmh_spark.functions.text import gopher_quality_filter
+
+    out = {
+        r["doc_id"]: tuple(r)[1:]
+        for r in gopher_quality_filter(
+            _docs(spark, EDGE_ROWS), min_words=2
+        ).collect()
+    }
+    assert out[0] == (None,) * 7 + (False, None)
+    for i, t in EDGE_ROWS[1:]:
+        assert out[i] == _py_gopher(t, min_words=2), (i, t)
+    assert out[4][6] and out[7][6] and out[7][7]  # repetition flags fire
+
+
 def test_gopher_quality_filter_flags(spark):
     """Each Gopher fail flag fires on a doc built to trip exactly it
     (plus word-count side effects where unavoidable)."""

@@ -91,21 +91,24 @@ def test_lm_score_hot_tail_split_identical(spark):
     assert outs[0] == outs[1] == outs[2]
 
 
-def test_lm_score_tail_join_has_no_hot_keys(spark):
+def test_lm_score_tail_join_has_no_hot_keys(spark, monkeypatch):
     """Plan sanity: the hot path is a BroadcastHashJoin; no cartesian
-    anywhere; the doc aggregate keys on doc_id. materialize=False keeps
-    the whole lineage in one plan — the default eagerly checkpoints the
-    hot-joined table, which would truncate the plan under inspection."""
+    anywhere; the doc aggregate keys on doc_id. lm_score eagerly
+    checkpoints its vocabulary and the hot-joined table, which would
+    truncate the plan under inspection, so localCheckpoint is stubbed to
+    return the frame unchanged and the whole lineage stays in one plan."""
     from rkmh_spark.operators.lm_score import lm_score
 
     df = spark.createDataFrame(
         [(i, "w x y z") for i in range(10)], "doc_id long, text string"
     )
-    plan = (
-        lm_score(df, materialize=False)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    monkeypatch.setattr(
+        type(df), "localCheckpoint", lambda self, *a, **k: self
     )
+    try:
+        lazy = lm_score(df)
+    finally:
+        monkeypatch.undo()
+    plan = lazy._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan

@@ -33,9 +33,9 @@ SCALE_PATH_QUERIES = [
     "pricing_summary",
     "brand_revenue",
     "line_dedup",          # r3: CCNet line dedup — one df shuffle, no BNL
-    "repetition_scores",   # r3: Gopher signals — groupBys only
+    "repetition_scores",   # Gopher signals — one map-only Arrow pass
     "embedding_ivf_topk",  # r4: sharded centroid probe join, no BNL
-    "quality_filter",      # r4: Gopher composite — projections + groupBys
+    "quality_filter",      # Gopher composite — projections + one Arrow pass
     # r5 additions. lm_score is exempt: its single totals row rides a
     # deliberate 1-row broadcast cross join (free at any scale — same
     # sanction class as two_tier_classify's resident panel); its
@@ -315,20 +315,63 @@ def test_band_buckets_plan_is_the_per_band_slice_plan(spark):
 DEDUP_PAGES_MAX_JOBS = 16
 
 
+def _jobs_of(spark, group, action) -> int:
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_dedup_pages_job_count(spark):
     from rkmh_spark.config import TEST_CONFIG
     from rkmh_spark.operators.dedup import dedup_pages
     from rkmh_spark.sources.pages import pages_dataframe
 
-    sc = spark.sparkContext
     pages = pages_dataframe(spark, n_clusters=12, dup_rate=0.6, seed=3)
-    spark.catalog.clearCache()
-    group = "test_dedup_pages_job_count"
-    sc.setJobGroup(group, group)
-    try:
-        dedup_pages(pages, TEST_CONFIG).assignments.collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    n_jobs = _jobs_of(
+        spark,
+        "test_dedup_pages_job_count",
+        lambda: dedup_pages(pages, TEST_CONFIG).assignments.collect(),
+    )
     assert 0 < n_jobs <= DEDUP_PAGES_MAX_JOBS, n_jobs
+
+
+def test_per_document_statistics_are_one_map_only_arrow_pass(spark):
+    """SimHash, the Gopher filter and the repetition signals each give one
+    row per document: a JVM projection and ONE mapInArrow kernel, with no
+    Exchange (no explode, groupBy or join back)."""
+    from rkmh_spark.functions.text import gopher_quality_filter, repetition_signals
+    from rkmh_spark.operators.dedup_exact import simhash_signatures
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    for name, df in {
+        "simhash_signatures": simhash_signatures(docs),
+        "gopher_quality_filter": gopher_quality_filter(docs, min_words=10),
+        "repetition_signals": repetition_signals(docs),
+    }.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, (name, plan)
+        assert plan.count("MapInArrow") == 1, (name, plan)
+        assert "Generate" not in plan, (name, plan)
+
+
+# Spark jobs of one collect of each query at sf0.001 in this suite's
+# local[4] session (Spark 4.1.2, cold cache). simhash_dup_pairs: 13 with
+# the Arrow SimHash vote (14 with the token explode + groupBy);
+# quality_filter: 2 with the map-only pass (5 with the gram groupBys and
+# the join back).
+QUERY_MAX_JOBS = {"simhash_dup_pairs": 13, "quality_filter": 2}
+
+
+@pytest.mark.parametrize("name", sorted(QUERY_MAX_JOBS))
+def test_query_job_count(spark, name):
+    fn = entry_mod.queries()[name]
+    n_jobs = _jobs_of(
+        spark, f"test_query_job_count_{name}", lambda: fn(spark, SF).collect()
+    )
+    assert 0 < n_jobs <= QUERY_MAX_JOBS[name], n_jobs

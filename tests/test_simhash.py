@@ -46,6 +46,33 @@ def test_simhash_signatures_match_vote_oracle(spark):
     assert got[0] != got[2]
 
 
+EDGE_DOCS = [
+    (0, None),
+    (1, ""),
+    (2, " "),
+    (3, "one"),
+    (4, "a a a"),
+    (5, "x  y  x"),
+    (6, "  lead and  trail  "),
+]
+
+
+def test_simhash_edge_rows_match_vote_oracle(spark):
+    """NULL, empty and whitespace-only texts get no row; a single token
+    (here "a", whose xxhash64 has bit 63 set) votes its own hash; repeated
+    tokens and runs of spaces count each distinct token once."""
+    assert xxh64(b"a") < 0
+    df = spark.createDataFrame(EDGE_DOCS, "doc_id long, text string")
+    got = sorted(map(tuple, simhash_signatures(df).collect()))
+    expected = []
+    for doc_id, text in EDGE_DOCS:
+        toks = [t for t in (text or "").split(" ") if t != ""]
+        if toks:
+            expected.append((doc_id, simhash64(toks)))
+    assert got == expected
+    assert dict(got)[4] == xxh64(b"a")
+
+
 def _sig_df(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, simhash long")
 
@@ -122,12 +149,11 @@ def test_dup_pairs_match_bruteforce_hamming(spark):
     from rkmh_spark.operators.dedup_exact import simhash_dup_pairs
 
     df = spark.createDataFrame(DUP_DOCS, "doc_id long, text string")
-    for materialize in (True, False):
-        got = {
-            (r["doc_a"], r["doc_b"]): r["hamming"]
-            for r in simhash_dup_pairs(df, materialize=materialize).collect()
-        }
-        assert got == _brute_pairs(3), f"materialize={materialize}"
+    got = {
+        (r["doc_a"], r["doc_b"]): r["hamming"]
+        for r in simhash_dup_pairs(df).collect()
+    }
+    assert got == _brute_pairs(3)
     # non-vacuity: the exact dup (0,4) must be present at hamming 0
     assert _brute_pairs(3)[(0, 4)] == 0
 
@@ -144,18 +170,22 @@ def test_dup_pairs_rejects_hamming_above_band_guarantee(spark):
         raise AssertionError("max_hamming=4 must be rejected")
 
 
-def test_dup_pairs_lazy_plan_has_no_quadratic_join(spark):
-    # the materialize=True execution path ends in a localCheckpoint scan,
-    # so the global plan gate (test_plan_quality) would be vacuous on it;
-    # gate the un-truncated lazy plan here instead
+def test_dup_pairs_lazy_plan_has_no_quadratic_join(spark, monkeypatch):
+    # the result is a localCheckpoint scan, so the global plan gate
+    # (test_plan_quality) would be vacuous on it; gate the plan the
+    # checkpoint runs instead, with localCheckpoint stubbed to return the
+    # frame unchanged (the released caches are replanned from source)
     from rkmh_spark.operators.dedup_exact import simhash_dup_pairs
 
     df = spark.createDataFrame(DUP_DOCS, "doc_id long, text string")
-    plan = (
-        simhash_dup_pairs(df, materialize=False)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    monkeypatch.setattr(
+        type(df), "localCheckpoint", lambda self, *a, **k: self
     )
+    try:
+        lazy = simhash_dup_pairs(df)
+    finally:
+        monkeypatch.undo()
+    plan = lazy._jdf.queryExecution().executedPlan().toString()
+    assert "Join" in plan, plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
