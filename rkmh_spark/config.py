@@ -28,11 +28,6 @@ class DedupConfig:
     # --- frequency filters (rkmh -I / -M analogs) ---
     max_doc_freq: int | None = None   # drop shingles present in > this many docs (A2/F5)
     min_occ: int | None = None        # keep hash iff global count >= this (F4)
-    # max hot-shingle (-I) drop-set size the driver may collect+broadcast;
-    # beyond this the pipeline switches to the relational anti-join
-    # spelling (a low max_doc_freq on a 100-TB corpus would otherwise OOM
-    # the driver — VERDICT r2 "what's wrong" #1)
-    hot_broadcast_limit: int = 1_000_000
 
     # --- LSH banding (over K = num_bands*band_rows independent minhashes) ---
     num_bands: int = 32         # b ; capture prob = 1-(1-j^r)^b

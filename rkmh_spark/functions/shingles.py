@@ -20,6 +20,8 @@ BEFORE the cast (SURVEY.md §7.4 risk 2).
 
 from __future__ import annotations
 
+from typing import Callable
+
 import numpy as np
 from numpy.lib.stride_tricks import sliding_window_view
 
@@ -84,7 +86,7 @@ def sketch_texts_batch(
     k: int,
     s: int,
     seed: int = 42,
-    drop_hashes: np.ndarray | None = None,
+    keep: Callable[[np.ndarray], np.ndarray] | None = None,
     num_bins: int | None = None,
 ):
     """Sketch a whole Arrow batch of texts with ONE murmur pass.
@@ -94,10 +96,11 @@ def sketch_texts_batch(
     the analog of the reference's OpenMP hashing loop at
     /root/reference/src/rkmh.cpp:845-860), then takes per-document bottom-s.
 
-    ``drop_hashes``: optional sorted uint64 array of banned hashes (the
-    hot-shingle / max-doc-freq filter, rkmh ``-I``
-    /root/reference/src/rkmh.cpp:835-836) removed BEFORE bottom-s selection,
-    matching minhashes_frequency_filter semantics.
+    ``keep``: optional keep mask over uint64 hashes — a callable mapping a
+    hash array to a same-length bool array; hashes it rejects are removed
+    BEFORE bottom-s selection (the Count-Min ``-M`` filter,
+    /root/reference/src/rkmh.cpp:1256-1267). The single-k path calls it
+    once per murmur chunk, not once per document.
 
     ``num_bins``: when given, also returns per-doc K-wide OPH minhash
     vectors for LSH banding (computed from the SAME sorted hash array the
@@ -128,8 +131,8 @@ def sketch_texts_batch(
         for i, t in enumerate(texts):
             h = shingle_hashes(t if t is not None else "", k, seed)
             counts[i] = h.size
-            if drop_hashes is not None and drop_hashes.size and h.size:
-                h = h[~np.isin(h, drop_hashes)]
+            if keep is not None and h.size:
+                h = h[keep(h)]
             hs = np.sort(h[h != 0])
             sketches[i] = hs[:s].view(np.int64)
             if minhashes is not None:
@@ -145,12 +148,13 @@ def sketch_texts_batch(
         if not chunk_mats:
             return
         all_hashes = murmur3_x64_128_low64(np.vstack(chunk_mats), seed=seed)
+        kept = keep(all_hashes) if keep is not None else None
         pos = 0
         for i, cnt in chunk_docs:
             h = all_hashes[pos : pos + cnt]
+            if kept is not None:
+                h = h[kept[pos : pos + cnt]]
             pos += cnt
-            if drop_hashes is not None and drop_hashes.size and h.size:
-                h = h[~np.isin(h, drop_hashes)]
             hs = np.sort(h[h != 0])
             sketches[i] = hs[:s].view(np.int64)
             if minhashes is not None:

@@ -1,5 +1,4 @@
 from rkmh_spark.operators.signatures import compute_signatures, signatures_schema
-from rkmh_spark.operators.docfreq import shingle_doc_frequency, hot_shingles
 from rkmh_spark.operators.lsh import band_buckets, candidate_pairs
 from rkmh_spark.operators.verify import verify_pairs, brute_force_pairs
 from rkmh_spark.operators.components import connected_components
@@ -9,8 +8,6 @@ from rkmh_spark.operators.line_dedup import line_dedup, window_text_lines
 __all__ = [
     "compute_signatures",
     "signatures_schema",
-    "shingle_doc_frequency",
-    "hot_shingles",
     "band_buckets",
     "candidate_pairs",
     "verify_pairs",

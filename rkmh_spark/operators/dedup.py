@@ -1,6 +1,6 @@
 """End-to-end near-duplicate detection pipeline (the flagship dataflow).
 
-pages → signatures → [doc-freq hot-shingle filter] → LSH candidates →
+pages → signatures [-I/-M frequency filters] → LSH candidates →
 exact verification → connected components → assignments(url, cluster_id).
 
 Mirrors rkmh stream/classify's lifecycle (/root/reference/src/rkmh.cpp:584-948)
@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from rkmh_spark.config import DedupConfig
 from rkmh_spark.operators.components import connected_components
-from rkmh_spark.operators.docfreq import hot_shingles, shingle_doc_frequency
 from rkmh_spark.operators.lsh import band_buckets, candidate_pairs
 from rkmh_spark.operators.signatures import (
     compute_signatures,
@@ -108,33 +107,10 @@ def dedup_pages(
     to_unpersist: list = []
 
     def signatures() -> DataFrame:
-        if cfg.min_occ is not None:
-            # F4 (rkmh -M): global-occurrence filter — relational rebuild
-            # (the keep-set is unbroadcastable at scale); composes -I when
-            # both set
-            return compute_signatures_min_occ(pages, cfg)
-        if cfg.max_doc_freq is None:
+        if cfg.min_occ is None and cfg.max_doc_freq is None:
             return compute_signatures(pages, cfg)
-        # -I: the hot set is small by construction for sane thresholds
-        # (boilerplate), but COUNT before collecting — a low threshold on
-        # a huge corpus would otherwise OOM the driver. Past the guard,
-        # the relational anti-join spelling (same machinery as -M) drops
-        # hot shingles with a shuffle instead of a broadcast.
-        dfreq = shingle_doc_frequency(pages, cfg).persist()
-        n_hot = (
-            dfreq.where(F.col("df") > cfg.max_doc_freq)
-            .limit(cfg.hot_broadcast_limit + 1)
-            .count()
-        )
-        if n_hot > cfg.hot_broadcast_limit:
-            # dfreq feeds the lazy doc-freq join — unpersist only after
-            # the pairs count materializes the whole signature chain
-            to_unpersist.append(dfreq)
-            return compute_signatures_min_occ(pages, cfg, doc_freq=dfreq)
-        drop = hot_shingles(dfreq, cfg.max_doc_freq)
-        sigs = compute_signatures(pages, cfg, drop_hashes=drop)
-        dfreq.unpersist()
-        return sigs
+        # rkmh -M / -I: corpus-wide counts, one relational pass
+        return compute_signatures_min_occ(pages, cfg)
 
     sigs = run("signatures", signatures).persist()
 

@@ -1,17 +1,18 @@
-"""Global shingle document-frequency + hot-shingle (boilerplate) table.
+"""Global shingle occurrence counters: the exact depth table and the
+Count-Min sketch.
 
-Reference analogs: global k-mer counting `rkmh count`
-(/root/reference/src/rkmh.cpp:2268-2360) and the per-hash distinct-sample
-count feeding ``-I max_samples`` (/root/reference/src/rkmh.cpp:340-358,
-404-421). The reference serializes this through an ``omp critical`` shared
-map or a lossy fixed-size HASHTCounter; here it is an exact distributed
-hash aggregation — partial (map-side) combine then a single shuffle on the
-hash key, which Catalyst plans automatically for groupBy().count().
+Reference analogs: global k-mer counting (`rkmh count`,
+/root/reference/src/rkmh.cpp:2268-2360) and the ``-M``/``call`` hash depth
+counter (/root/reference/src/rkmh.cpp:1256-1267,1784). The reference
+serializes this through an ``omp critical`` shared map or a lossy
+fixed-size HASHTCounter (/root/reference/src/rkmh.cpp:340-421); here the
+exact table is a distributed hash aggregation — partial (map-side) combine
+then a single shuffle on the hash key — and the lossy one is a proper
+Count-Min sketch built per partition and summed on the driver.
 
-The python worker emits each document's DISTINCT hashes only (A6
-semantics: count documents containing the shingle, not occurrences), so
-the exploded relation is bounded by sum(distinct shingles per doc), and
-the groupBy sees pre-deduplicated input.
+The exact document frequency behind ``-I`` is not spelled here: the
+signature pass derives it together with the depth from its own per-doc
+relation (signatures.compute_signatures_min_occ).
 """
 
 from __future__ import annotations
@@ -27,32 +28,6 @@ from rkmh_spark.config import DedupConfig
 from rkmh_spark.functions.shingles import shingle_hashes
 
 
-def shingle_doc_frequency(
-    pages: DataFrame, cfg: DedupConfig, text_col: str = "text"
-) -> DataFrame:
-    """→ DataFrame(hash: long, df: long) — #documents containing each shingle."""
-    k, seed = cfg.k, cfg.hash_seed
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            chunks = []
-            for t in pdf[text_col].tolist():
-                h = shingle_hashes(t if t is not None else "", k, seed)
-                if h.size:
-                    chunks.append(np.unique(h))  # distinct within the doc
-            out = (
-                np.concatenate(chunks).view(np.int64)
-                if chunks
-                else np.empty(0, dtype=np.int64)
-            )
-            yield pd.DataFrame({"hash": out})
-
-    exploded = pages.select(text_col).mapInPandas(
-        kernel, schema=T.StructType([T.StructField("hash", T.LongType(), False)])
-    )
-    return exploded.groupBy("hash").agg(F.count("*").alias("df"))
-
-
 def hash_depth_table(
     pages: DataFrame, cfg: DedupConfig, text_col: str = "text"
 ) -> DataFrame:
@@ -60,8 +35,8 @@ def hash_depth_table(
 
     Reference parity: the ``-M``/``call`` global counter counts every hash
     occurrence across all reads, with multiplicity (read_hash_counter /
-    read_hash_to_depth, /root/reference/src/rkmh.cpp:1256-1267,1784), unlike
-    the distinct-document ``df`` of shingle_doc_frequency. The kernel emits
+    read_hash_to_depth, /root/reference/src/rkmh.cpp:1256-1267,1784), not
+    the number of documents containing the hash. The kernel emits
     per-doc (hash, cnt) pairs — the exploded relation is bounded by
     Σ distinct shingles/doc, and the shuffle carries counts, not rows.
     """
@@ -110,9 +85,9 @@ class CountMinSketchNP:
     estimates only ever OVER-count, so a keep-if-count≥M filter keeps a
     superset — the same failure direction the reference documents.
 
-    Vectorized NumPy throughout; the table is a few hundred KB and
-    BROADCASTS into the signature kernel, so the -M filter runs with zero
-    shuffle — the Spark reshaping of the reference holding its counter
+    Vectorized NumPy throughout; the table is a few hundred KB and rides
+    the signature kernel's closure (compute_signatures(..., cms=)), so the
+    -M filter runs with zero shuffle — the Spark reshaping of the reference holding its counter
     resident in shared memory (rkmh.cpp:1256: counter lookup per hash).
     """
 
@@ -188,16 +163,3 @@ def approx_hash_depth_cms(
     for r in parts.collect():
         out.table += np.array(r["table"], dtype=np.int64).reshape(depth, width)
     return out
-
-
-def hot_shingles(doc_freq: DataFrame, max_doc_freq: int) -> np.ndarray:
-    """Hashes present in more than ``max_doc_freq`` documents (rkmh -I analog).
-
-    Collected to the driver: the hot set is small by construction (web
-    boilerplate), and it is re-broadcast into the signature kernel the same
-    way rkmh keeps its counter resident (/root/reference/src/rkmh.cpp:835-836).
-    """
-    rows = (
-        doc_freq.where(F.col("df") > max_doc_freq).select("hash").collect()
-    )
-    return np.array([r["hash"] for r in rows], dtype=np.int64)

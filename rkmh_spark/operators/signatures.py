@@ -22,9 +22,11 @@ Two signatures per page, from the same murmur pass:
 Scale notes:
 - Output is O(s + K) longs/doc regardless of document size, so the
   signatures table for 10^12 docs is shuffle-friendly and checkpointable.
-- The hot-shingle filter arrives as a broadcast (driver-collected) int64
-  array — by construction it only contains shingles present in more than
-  ``max_doc_freq`` documents, so it stays small (it is the boilerplate set).
+- Frequency filters (rkmh ``-I`` max samples per hash, ``-M`` min
+  occurrence) need corpus-wide counts, so their exact spelling is one
+  relational pass (compute_signatures_min_occ). The stream's Count-Min
+  ``-M`` counter is the one filter that rides the sketch kernel: a keep
+  mask over the hashes of each murmur chunk.
 """
 
 from __future__ import annotations
@@ -58,16 +60,44 @@ def signatures_schema() -> T.StructType:
 def compute_signatures(
     pages: DataFrame,
     cfg: DedupConfig,
-    drop_hashes: np.ndarray | None = None,
+    cms=None,
     url_col: str = "url",
     text_col: str = "text",
 ) -> DataFrame:
-    """pages → (url, sketch, minhash, n_shingles); arrays bit-cast u64→i64."""
+    """pages → (url, sketch, minhash, n_shingles); arrays bit-cast u64→i64.
+
+    ``cms``: the A5 Count-Min counter (docfreq.CountMinSketchNP), read only
+    when cfg.min_occ is set: a hash is kept iff ``cms.estimate(h) >=
+    min_occ`` — the reference's doReadDepth counter lookup
+    (/root/reference/src/rkmh.cpp:1256-1267) with the counter riding the
+    kernel closure (~0.5 MB) instead of shared memory; zero shuffles.
+    Estimates only over-count, so the kept set is a SUPERSET of the exact
+    compute_signatures_min_occ set (the reference's own collision mode,
+    README.md:67-69); width sizes the error.
+
+    The exact filters are relational, so a config this pass cannot honour
+    raises rather than sketching unfiltered: ``max_doc_freq`` set, or
+    ``min_occ`` set without ``cms``.
+    """
+    if cfg.max_doc_freq is not None:
+        raise ValueError(
+            "compute_signatures cannot apply cfg.max_doc_freq; "
+            "use compute_signatures_min_occ"
+        )
+    keep = None
+    if cfg.min_occ is not None:
+        if cms is None:
+            raise ValueError(
+                "compute_signatures applies cfg.min_occ only through a "
+                "Count-Min counter (cms=); use compute_signatures_min_occ"
+            )
+        min_occ = int(cfg.min_occ)
+
+        def keep(h: np.ndarray) -> np.ndarray:
+            return cms.estimate(h) >= min_occ
+
     k, s, seed = cfg.k, cfg.sketch_size, cfg.hash_seed
     num_perms = cfg.num_bands * cfg.band_rows
-    banned = None
-    if drop_hashes is not None and len(drop_hashes):
-        banned = np.sort(np.asarray(drop_hashes, dtype=np.int64).view(np.uint64))
 
     # Column-prune before the python worker: only url+text cross Arrow.
     narrow = pages.select(url_col, text_col)
@@ -76,7 +106,7 @@ def compute_signatures(
         for pdf in batches:
             sketches, minhashes, counts = sketch_texts_batch(
                 pdf[text_col].tolist(), k, s, seed,
-                drop_hashes=banned, num_bins=num_perms,
+                keep=keep, num_bins=num_perms,
             )
             yield pd.DataFrame(
                 {
@@ -90,100 +120,42 @@ def compute_signatures(
     return narrow.mapInPandas(kernel, schema=signatures_schema())
 
 
-def compute_signatures_min_occ_approx(
-    pages: DataFrame,
-    cfg: DedupConfig,
-    cms,
-    url_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
-    """F4 via the A5 Count-Min counter: keep a hash iff the CMS ESTIMATE
-    of its global occurrence count >= cfg.min_occ — the literal Spark
-    reshaping of the reference's doReadDepth loop (counter lookup per
-    sorted hash, /root/reference/src/rkmh.cpp:1256-1267) with the counter
-    broadcast instead of shared-memory-resident.
-
-    vs the exact relational path (compute_signatures_min_occ): ZERO
-    shuffles — one mapInPandas pass, the CMS table rides the closure
-    (~0.5 MB). CMS estimates only over-count, so the kept set is a
-    SUPERSET of the exact path's (the reference's own collision-mode
-    direction, README.md:67-69); width sizes the error.
-    """
-    if cfg.min_occ is None:
-        raise ValueError("requires cfg.min_occ")
-    from rkmh_spark.functions.shingles import oph_minhash as _oph
-
-    k, s, seed = cfg.k, cfg.sketch_size, cfg.hash_seed
-    num_perms = cfg.num_bands * cfg.band_rows
-    min_occ = int(cfg.min_occ)
-    table, a, b, width, depth = cms.table, cms.a, cms.b, cms.width, cms.depth
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from rkmh_spark.operators.docfreq import CountMinSketchNP
-
-        local = CountMinSketchNP(width, depth, 0)
-        local.table, local.a, local.b = table, a, b
-        for pdf in batches:
-            sketches, minhashes, counts = [], [], []
-            for t in pdf[text_col].tolist():
-                h = shingle_hashes(t if t is not None else "", k, seed)
-                h = h[h != 0]
-                counts.append(h.size)
-                if h.size:
-                    h = h[local.estimate(h) >= min_occ]
-                hs = np.sort(h)
-                sketches.append(hs[:s].view(np.int64))
-                minhashes.append(_oph(hs, num_perms))
-            yield pd.DataFrame(
-                {
-                    "url": pdf[url_col].values,
-                    "sketch": sketches,
-                    "minhash": minhashes,
-                    "n_shingles": np.asarray(counts, dtype=np.int64),
-                }
-            )
-
-    return pages.select(url_col, text_col).mapInPandas(
-        kernel, schema=signatures_schema()
-    )
-
-
 def compute_signatures_min_occ(
     pages: DataFrame,
     cfg: DedupConfig,
-    depth: DataFrame | None = None,
-    doc_freq: DataFrame | None = None,
     url_col: str = "url",
     text_col: str = "text",
 ) -> DataFrame:
-    """F4 (rkmh ``-M min_kmer_occ``): keep a hash iff its GLOBAL occurrence
-    count >= cfg.min_occ, then bottom-s sketch the survivors
-    (/root/reference/src/rkmh.cpp:1256-1267,1363-1374).
-
-    The keep-set at web scale is every shingle seen >= M times — far too
-    large to broadcast (the opposite regime from the hot-shingle drop-set,
-    which is small by construction). So this path is relational:
-
-      pages → per-doc distinct (url, hash, cnt)      [mapInPandas]
-            ⋈ depth(hash, depth)                      [shuffle on hash]
-            → groupBy(url) rebuild sketch + OPH       [applyInPandas]
-
-    Both shuffles are bounded by Σ distinct shingles per doc (counts
-    travel, not occurrences). ``depth`` defaults to the per-doc relation
-    re-aggregated (one corpus pass total — r6; hash_depth_table spells
-    the same table standalone); pass a precomputed one to share it with
-    the variant caller. When cfg.max_doc_freq is also set, ``doc_freq`` (distinct-doc
-    counts, rkmh ``-I``) is joined too and hot shingles are dropped before
-    sketching — the two reference filters compose exactly as in the
+    """F4/F5 (rkmh ``-M min_kmer_occ`` and ``-I max_samples``): keep a hash
+    iff its GLOBAL occurrence count >= cfg.min_occ and/or it occurs in at
+    most cfg.max_doc_freq documents, then bottom-s sketch the survivors
+    (/root/reference/src/rkmh.cpp:835-836,1256-1267,1363-1374). At least
+    one of the two must be set; together they compose as in the
     reference's doReadDepth branch.
+
+    The keep-set at web scale is every shingle seen >= M times, and a low
+    ``-I`` makes most shingles hot — neither set is bounded enough to
+    collect to the driver, so the pass is relational:
+
+      pages → per-doc distinct (url, hash, cnt)      [mapInPandas, checkpointed]
+            → groupBy(hash) depth=Σcnt, df=count(*)   [shuffle on hash]
+            ⋈ per-doc on hash → keep column           [shuffle on hash]
+            → groupBy(url) rebuild sketch + OPH       [mapInPandas]
+
+    Every shuffle is bounded by Σ distinct shingles per doc (counts
+    travel, not occurrences). ``per_doc`` holds each document's DISTINCT
+    hashes, so one aggregate gives both statistics: ``count(*)`` is the
+    document frequency and ``Σ cnt`` the depth (hash_depth_table spells
+    the depth standalone).
+
+    Precondition: ``url`` is a key — the rebuild groups by url, so pages
+    sharing a url merge into one signature.
     """
     if cfg.min_occ is None and cfg.max_doc_freq is None:
         raise ValueError(
             "compute_signatures_min_occ requires cfg.min_occ and/or "
-            "cfg.max_doc_freq (relational -I-only mode)"
+            "cfg.max_doc_freq"
         )
-    from rkmh_spark.operators.docfreq import shingle_doc_frequency
-
     k, s, seed = cfg.k, cfg.sketch_size, cfg.hash_seed
     num_perms = cfg.num_bands * cfg.band_rows
 
@@ -209,6 +181,9 @@ def compute_signatures_min_occ(
                 }
             )
 
+    # materialized once (localCheckpoint, O(Σ distinct shingles/doc)
+    # compact rows): it feeds both the statistics aggregate and the keep
+    # join, so the corpus is tokenized and hashed once
     per_doc = pages.select(url_col, text_col).mapInPandas(
         explode_kernel,
         schema=T.StructType(
@@ -218,43 +193,21 @@ def compute_signatures_min_occ(
                 T.StructField("cnt", T.LongType(), False),
             ]
         ),
+    ).localCheckpoint(eager=True)
+    # cnt=0 placeholder rows of empty docs are excluded from the counts
+    stats = (
+        per_doc.where(F.col("cnt") > 0)
+        .groupBy("hash")
+        .agg(F.sum("cnt").alias("depth"), F.count("*").alias("df"))
     )
-    if cfg.min_occ is not None and depth is None:
-        # the global depth table IS the per-doc relation re-aggregated:
-        # depth(h) = Σ_docs cnt(doc, h). Deriving it here (r6) instead of
-        # calling hash_depth_table saves a SECOND full tokenize+murmur
-        # pass over the corpus — per_doc is materialized once
-        # (localCheckpoint, O(Σ distinct shingles/doc) compact rows, the
-        # same volume the depth shuffle already moves) and feeds both the
-        # groupBy and the keep-join below. cnt=0 placeholder rows of
-        # empty docs are excluded to match hash_depth_table exactly.
-        per_doc = per_doc.localCheckpoint(eager=True)
-        depth = (
-            per_doc.where(F.col("cnt") > 0)
-            .groupBy("hash")
-            .agg(F.sum("cnt").alias("depth"))
-        )
+    # every real hash finds its statistics row (its own doc contributed);
+    # the placeholder row joins NULLs and stays unkept (cnt > 0 is false)
+    keep = F.col("cnt") > 0
     if cfg.min_occ is not None:
-        # the join loses nothing: every real hash of every doc appears in
-        # the depth table (the doc itself contributed); the cnt=0
-        # placeholder row of empty docs left-joins to NULL depth →
-        # keep=false, cnt sum 0.
-        joined = per_doc.join(depth, "hash", "left").withColumn(
-            "keep",
-            F.coalesce(F.col("depth"), F.lit(0)) >= F.lit(int(cfg.min_occ)),
-        )
-    else:
-        # -I-only relational mode (hot set too large to broadcast): every
-        # real hash starts kept; the doc-freq join below applies the drop
-        joined = per_doc.withColumn("keep", F.col("cnt") > 0)
+        keep = keep & (F.col("depth") >= F.lit(int(cfg.min_occ)))
     if cfg.max_doc_freq is not None:
-        if doc_freq is None:
-            doc_freq = shingle_doc_frequency(pages, cfg, text_col=text_col)
-        joined = joined.join(doc_freq, "hash", "left").withColumn(
-            "keep",
-            F.col("keep")
-            & (F.coalesce(F.col("df"), F.lit(0)) <= F.lit(cfg.max_doc_freq)),
-        )
+        keep = keep & (F.col("df") <= F.lit(int(cfg.max_doc_freq)))
+    joined = per_doc.join(stats, "hash", "left").withColumn("keep", keep)
     # ONE aggregation gathers each doc's kept (hash, cnt) pairs + totals;
     # the sketch rebuild then runs as a batched mapInPandas (one Python
     # call per Arrow batch) rather than applyInPandas' one call + one

@@ -201,8 +201,8 @@ def _enumerate_mutants(kmer: str, d_alt: str | None, k: int) -> list[str]:
 #: max ENUMERATED KEYS the driver-side needed-key path may hold; past
 #: this the relational spelling builds the same set distributedly (the
 #: panel is small by construction — same boundedness assumption as the
-#: resident-panel broadcast, rkmh.cpp:867-870 — but guard anyway, the
-#: dedup hot_broadcast_limit pattern). The position guard is derived
+#: resident-panel broadcast, rkmh.cpp:867-870 — but guard anyway: a
+#: driver collect must have a bound). The position guard is derived
 #: from this via the per-position mutant fanout (3k SNP + k del + 1),
 #: so the bound is on what actually lands on the driver, not on the
 #: row count that generates it (review r6).

@@ -326,28 +326,23 @@ def process_incremental_batch(
     """One micro-batch of the incremental dedup loop (module-level so the
     at-least-once replay semantics are unit-testable without a stream).
 
-    ``cms``: an optional pre-built CountMinSketchNP — when given and
-    ``cfg.min_occ`` is set, the reference's -M filter runs INSIDE the
-    signature kernel per micro-batch (the table broadcasts with the UDF
-    closure; zero shuffle, no exact depth-table rebuild per batch —
-    VERDICT r2 #8). The counter is built offline by a corpus scan; it
-    is deliberately NOT updated here, because at-least-once replays of
-    a batch would double-count its shingles."""
+    ``cms``: a pre-built CountMinSketchNP, required when ``cfg.min_occ``
+    is set: the reference's -M filter runs INSIDE the signature kernel
+    per micro-batch (the table rides the UDF closure; zero shuffle, no
+    exact depth-table rebuild per batch — VERDICT r2 #8). The counter is
+    built offline by a corpus scan; it is deliberately NOT updated here,
+    because at-least-once replays of a batch would double-count its
+    shingles. ``cfg.max_doc_freq`` has no per-batch spelling and raises
+    (compute_signatures)."""
     from pyspark.sql import functions as F
 
     from rkmh_spark.operators.dedup import assign_clusters
     from rkmh_spark.operators.lsh import band_buckets
     from rkmh_spark.operators.verify import verify_pairs
 
-    if cms is not None and cfg.min_occ is not None:
-        from rkmh_spark.operators.signatures import (
-            compute_signatures_min_occ_approx,
-        )
-
-        sigs_new = compute_signatures_min_occ_approx(batch, cfg, cms)
-    else:
-        sigs_new = compute_signatures(batch, cfg)
-    sigs_new = sigs_new.localCheckpoint(eager=True)
+    sigs_new = compute_signatures(batch, cfg, cms=cms).localCheckpoint(
+        eager=True
+    )
     bands_new = (
         band_buckets(sigs_new, cfg)
         .withColumn("band_bucket", _band_bucket_col())

@@ -117,10 +117,6 @@ def test_cms_counter_one_sided_and_accurate(spark):
 
 def test_approx_min_occ_superset_and_converges_to_exact(spark):
     from rkmh_spark.operators.docfreq import approx_hash_depth_cms
-    from rkmh_spark.operators.signatures import (
-        compute_signatures_min_occ,
-        compute_signatures_min_occ_approx,
-    )
 
     cfg = DedupConfig(
         k=8, sketch_size=1_000_000, num_bands=72, band_rows=4, min_occ=2
@@ -136,7 +132,7 @@ def test_approx_min_occ_superset_and_converges_to_exact(spark):
     cms_big = approx_hash_depth_cms(pages, cfg, width=1 << 16, depth=4)
     approx_big = {
         r["url"]: set(r["sketch"])
-        for r in compute_signatures_min_occ_approx(pages, cfg, cms_big).collect()
+        for r in compute_signatures(pages, cfg, cms=cms_big).collect()
     }
     n_exact = sum(len(v) for v in exact.values())
     n_extra = sum(len(approx_big[u] - exact[u]) for u in exact)
@@ -146,6 +142,6 @@ def test_approx_min_occ_superset_and_converges_to_exact(spark):
     cms_tiny = approx_hash_depth_cms(pages, cfg, width=64, depth=2)
     approx_tiny = {
         r["url"]: set(r["sketch"])
-        for r in compute_signatures_min_occ_approx(pages, cfg, cms_tiny).collect()
+        for r in compute_signatures(pages, cfg, cms=cms_tiny).collect()
     }
     assert all(approx_tiny[u] >= exact[u] for u in exact)

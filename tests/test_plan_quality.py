@@ -341,6 +341,31 @@ def test_dedup_pages_job_count(spark):
     assert 0 < n_jobs <= DEDUP_PAGES_MAX_JOBS, n_jobs
 
 
+# Spark jobs of one compute_signatures_min_occ collect with -I and -M both
+# set, on the job-gate fixture above: 6 with one statistics aggregate over
+# the checkpointed per-doc relation (8 with a depth aggregate plus a
+# second corpus hash pass for the document frequency, each joined on its
+# own).
+MIN_OCC_SIGNATURES_MAX_JOBS = 6
+
+
+def test_frequency_filtered_signatures_job_count(spark):
+    import dataclasses
+
+    from rkmh_spark.config import TEST_CONFIG
+    from rkmh_spark.operators.signatures import compute_signatures_min_occ
+    from rkmh_spark.sources.pages import pages_dataframe
+
+    pages = pages_dataframe(spark, n_clusters=12, dup_rate=0.6, seed=3)
+    cfg = dataclasses.replace(TEST_CONFIG, max_doc_freq=3, min_occ=2)
+    n_jobs = _jobs_of(
+        spark,
+        "test_frequency_filtered_signatures_job_count",
+        lambda: compute_signatures_min_occ(pages, cfg).collect(),
+    )
+    assert 0 < n_jobs <= MIN_OCC_SIGNATURES_MAX_JOBS, n_jobs
+
+
 def test_per_document_statistics_are_one_map_only_arrow_pass(spark):
     """SimHash, the Gopher filter and the repetition signals each give one
     row per document: a JVM projection and ONE mapInArrow kernel, with no
@@ -364,8 +389,11 @@ def test_per_document_statistics_are_one_map_only_arrow_pass(spark):
 # local[4] session (Spark 4.1.2, cold cache). simhash_dup_pairs: 13 with
 # the Arrow SimHash vote (14 with the token explode + groupBy);
 # quality_filter: 2 with the map-only pass (5 with the gram groupBys and
-# the join back).
-QUERY_MAX_JOBS = {"simhash_dup_pairs": 13, "quality_filter": 2}
+# the join back); min_occ_signatures: 6 (the -M pass of
+# compute_signatures_min_occ).
+QUERY_MAX_JOBS = {
+    "simhash_dup_pairs": 13, "quality_filter": 2, "min_occ_signatures": 6
+}
 
 
 @pytest.mark.parametrize("name", sorted(QUERY_MAX_JOBS))

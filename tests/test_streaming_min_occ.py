@@ -6,15 +6,13 @@ depth-table rebuild per batch."""
 import dataclasses
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from rkmh_spark.config import TEST_CONFIG
 from rkmh_spark.functions.shingles import shingle_hashes
 from rkmh_spark.operators.docfreq import CountMinSketchNP
-from rkmh_spark.operators.signatures import (
-    compute_signatures,
-    compute_signatures_min_occ_approx,
-)
+from rkmh_spark.operators.signatures import compute_signatures
 from rkmh_spark.sources.pages import generate_pages, pages_schema
 from rkmh_spark.streaming.stream_classify import process_incremental_batch
 
@@ -55,7 +53,7 @@ def test_incremental_cms_min_occ_matches_batch(spark, tmp_path):
 
     streamed = _sig_map(spark.read.parquet(sigs_d).drop("batch"))
     batch_sigs = _sig_map(
-        compute_signatures_min_occ_approx(_batch_df(spark, rows), cfg, cms)
+        compute_signatures(_batch_df(spark, rows), cfg, cms=cms)
     )
     assert streamed == batch_sigs
     assert len(streamed) == len(rows)
@@ -102,7 +100,7 @@ def test_cms_filter_superset_of_exact(spark):
             exact[v] = exact.get(v, 0) + 1
 
     df = _batch_df(spark, rows)
-    approx = _sig_map(compute_signatures_min_occ_approx(df, cfg, cms))
+    approx = _sig_map(compute_signatures(df, cfg, cms=cms))
     for r in rows:
         url, text = r[0], r[3]
         h = shingle_hashes(text, cfg.k, cfg.hash_seed)
@@ -114,3 +112,18 @@ def test_cms_filter_superset_of_exact(spark):
         # and the Spark kernel's sketch is exactly bottom-s of the CMS keep-set
         expect = np.sort(kept_cms)[: cfg.sketch_size].view(np.int64)
         assert tuple(expect.tolist()) == approx[url][0], url
+
+
+
+@pytest.mark.parametrize("field, value", [("max_doc_freq", 3), ("min_occ", 2)])
+def test_incremental_batch_rejects_unfilterable_config(
+    spark, tmp_path, field, value
+):
+    """-I needs corpus-wide document counts that one micro-batch does not
+    have, and -M without a Count-Min counter has nothing to look up: the
+    batch must refuse, not sketch unfiltered."""
+    rows = generate_pages(n_clusters=2, dup_rate=0.5, seed=5)
+    cfg = dataclasses.replace(TEST_CONFIG, **{field: value})
+    dirs = [str(tmp_path / d) for d in ("s", "b", "a")]
+    with pytest.raises(ValueError, match=field):
+        process_incremental_batch(spark, _batch_df(spark, rows), 0, cfg, *dirs)
