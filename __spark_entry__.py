@@ -48,7 +48,11 @@ def entry(spark: SparkSession) -> DataFrame:
     from rkmh_spark.sources.pages import documents_as_pages
 
     pages = documents_as_pages(_docs(spark, SF0001))
-    return dedup_pages(pages, TEST_CONFIG).assignments
+    res = dedup_pages(pages, TEST_CONFIG)
+    try:
+        return res.assignments
+    finally:
+        res.release()
 
 
 # ---------------------------------------------------------------------------
@@ -415,7 +419,11 @@ def q_dedup_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rkmh_spark.sources.pages import documents_as_pages
 
     pages = documents_as_pages(_docs(spark, sf_dir))
-    return dedup_pages(pages, TEST_CONFIG).assignments
+    res = dedup_pages(pages, TEST_CONFIG)
+    try:
+        return res.assignments
+    finally:
+        res.release()
 
 
 def q_exact_dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -444,17 +452,22 @@ def q_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rkmh_spark.sources.pages import documents_as_pages
 
     pages = documents_as_pages(_docs(spark, sf_dir))
-    a = dedup_pages(pages, TEST_CONFIG).assignments
-    sizes = a.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
-    return (
-        sizes.groupBy("cluster_size")
-        .agg(F.count("*").alias("n_clusters"))
-        .select(
-            "cluster_size",
-            "n_clusters",
-            (F.col("cluster_size") * F.col("n_clusters")).alias("n_pages"),
+    res = dedup_pages(pages, TEST_CONFIG)
+    try:
+        sizes = res.assignments.groupBy("cluster_id").agg(
+            F.count("*").alias("cluster_size")
         )
-    )
+        return (
+            sizes.groupBy("cluster_size")
+            .agg(F.count("*").alias("n_clusters"))
+            .select(
+                "cluster_size",
+                "n_clusters",
+                (F.col("cluster_size") * F.col("n_clusters")).alias("n_pages"),
+            )
+        )
+    finally:
+        res.release()
 
 
 def q_simhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -623,10 +636,16 @@ def q_cluster_rep_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pages = documents_as_pages(_docs(spark, sf_dir))
     res = dedup_pages(pages, TEST_CONFIG)
-    reps = cluster_representative_sketches(res.signatures, res.assignments, TEST_CONFIG)
-    return reps.select(
-        "cluster_id", F.size("sketch").cast("long").alias("sketch_len")
-    )
+    try:
+        reps = cluster_representative_sketches(
+            res.signatures, res.assignments, TEST_CONFIG
+        )
+        # materialize before releasing the signatures the plan reads
+        return reps.select(
+            "cluster_id", F.size("sketch").cast("long").alias("sketch_len")
+        ).localCheckpoint(eager=True)
+    finally:
+        res.release()
 
 
 def q_search_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -764,7 +783,10 @@ def q_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pages = documents_as_pages(_docs(spark, sf_dir))
     res = dedup_pages(pages, TEST_CONFIG)
-    return keep_representatives(pages, res.assignments).select("url", "lang")
+    try:
+        return keep_representatives(pages, res.assignments).select("url", "lang")
+    finally:
+        res.release()
 
 
 def q_sketch_json(spark: SparkSession, sf_dir: str) -> DataFrame:

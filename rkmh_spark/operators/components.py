@@ -57,19 +57,6 @@ def connected_components(
     if n_edges <= driver_threshold:
         return _driver_union_find(edges, src_col, dst_col)
 
-    sym = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).union(edges.select(F.col(dst_col), F.col(src_col)))
-    sym = sym.persist()
-
-    # round 0 fused into initialization: label = min(self, neighbors)
-    labels = (
-        sym.groupBy(F.col("src").alias("node"))
-        .agg(F.min("dst").alias("mn"))
-        .select("node", F.least("node", "mn").alias("label"))
-        .localCheckpoint(eager=True)
-    )
-
     def _sig(df) -> tuple:
         """Cheap convergence fingerprint: one aggregate job, no join.
         decimal sum survives ANSI overflow; (sum, count) collision over
@@ -80,28 +67,41 @@ def connected_components(
         ).first()
         return (int(row["s"] or 0), row["c"])
 
-    prev = _sig(labels)
-    for _ in range(max_iterations):
-        nbr_labels = sym.join(
-            labels, sym["dst"] == labels["node"], "inner"
-        ).select(F.col("src").alias("node"), "label")
+    sym = edges.select(
+        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+    ).union(edges.select(F.col(dst_col), F.col(src_col)))
+    sym = sym.persist()
+    try:
+        # round 0 fused into initialization: label = min(self, neighbors)
         labels = (
-            labels.unionByName(nbr_labels)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
+            sym.groupBy(F.col("src").alias("node"))
+            .agg(F.min("dst").alias("mn"))
+            .select("node", F.least("node", "mn").alias("label"))
             .localCheckpoint(eager=True)
         )
-        cur = _sig(labels)
-        if cur == prev:
-            sym.unpersist()
-            return labels
-        prev = cur
+
+        prev = _sig(labels)
+        for _ in range(max_iterations):
+            nbr_labels = sym.join(
+                labels, sym["dst"] == labels["node"], "inner"
+            ).select(F.col("src").alias("node"), "label")
+            labels = (
+                labels.unionByName(nbr_labels)
+                .groupBy("node")
+                .agg(F.min("label").alias("label"))
+                .localCheckpoint(eager=True)
+            )
+            cur = _sig(labels)
+            if cur == prev:
+                return labels
+            prev = cur
+    finally:
+        sym.unpersist()
 
     # Not converged: a component with diameter > max_iterations would get
     # split labels. Near-dup graphs are low-diameter, so this means
     # pathological chaining; star contraction converges in O(log n) rounds
     # whatever the diameter, so it gives the exact answer instead.
-    sym.unpersist()
     return connected_components_star(edges, src_col=src_col, dst_col=dst_col)
 
 

@@ -45,9 +45,17 @@ def keep_representatives(pages: DataFrame, assignments: DataFrame) -> DataFrame:
 
 @dataclass
 class DedupResult:
+    """``signatures`` and ``pairs`` are persisted, and the result is their
+    one owner: ``release()`` unpersists both. ``assignments`` reads
+    neither, so it stays valid after the release."""
+
     signatures: DataFrame
     pairs: DataFrame          # verified dup pairs (url_a, url_b, shared, est_jaccard)
     assignments: DataFrame    # (url, cluster_id)
+
+    def release(self) -> None:
+        self.signatures.unpersist()
+        self.pairs.unpersist()
 
 
 def assign_clusters(
@@ -97,6 +105,17 @@ def dedup_pages(
     skips every stage whose manifest is complete, so a killed run resumes
     with the same assignments (tests/test_resume.py). Without it each
     stage's build runs directly.
+
+    Cache ownership (the one rule: whoever calls ``persist()`` releases
+    it in a ``finally`` or hands the handle to exactly one owner): the
+    LSH census goes to a local ``cleanup`` list and is released right
+    after the pairs ``count``; the persisted ``signatures`` and ``pairs``
+    go to the returned result, whose ``release()`` frees them. The
+    ``assignments`` never read either relation once this returns — the
+    driver union-find labels are a local Arrow relation, the distributed
+    paths return checkpointed labels, and the containment and
+    ``checkpoint`` paths are materialized here — so a caller that needs
+    only the assignments may release at once.
     """
 
     def run(name: str, build: Callable[[], DataFrame]) -> DataFrame:
@@ -111,33 +130,6 @@ def dedup_pages(
             return compute_signatures(pages, cfg)
         # rkmh -M / -I: corpus-wide counts, one relational pass
         return compute_signatures_min_occ(pages, cfg)
-
-    sigs = run("signatures", signatures).persist()
-
-    cands = None
-    if use_lsh:
-        # containment path reads candidates twice → eager checkpoint;
-        # plain dedup consumes them once → lazy (checkpoint measured 2×
-        # the candidate-stage wall), with the census persist handed back
-        # for unpersist after pairs materialize
-        cands = run(
-            "candidates",
-            lambda: candidate_pairs(
-                band_buckets(sigs, cfg), cfg,
-                materialize=containment_threshold is not None,
-                cleanup=to_unpersist,
-            ),
-        )
-        pairs = run("pairs", lambda: verify_pairs(cands, sigs, cfg))
-    else:
-        pairs = run("pairs", lambda: brute_force_pairs(sigs, cfg))
-
-    # ONE count job both materializes the persisted pairs and hands the
-    # edge count to connected_components (skips its limit().count() job)
-    pairs = pairs.persist()
-    n_pairs = pairs.count()
-    for h in to_unpersist:
-        h.unpersist()
 
     def assignments() -> DataFrame:
         edges = pairs.select("url_a", "url_b")
@@ -161,6 +153,36 @@ def dedup_pages(
         ).distinct()
         return assign_clusters(pages.select("url"), edges, cfg)
 
-    return DedupResult(
-        signatures=sigs, pairs=pairs, assignments=run("assignments", assignments)
-    )
+    cands = pairs = None
+    sigs = run("signatures", signatures).persist()
+    try:
+        if use_lsh:
+            # containment path reads candidates twice → eager checkpoint
+            # (no cleanup list); plain dedup consumes them once → lazy,
+            # with the census persist handed to to_unpersist
+            cands = run(
+                "candidates",
+                lambda: candidate_pairs(
+                    band_buckets(sigs, cfg), cfg,
+                    cleanup=to_unpersist if containment_threshold is None else None,
+                ),
+            )
+            pairs = run("pairs", lambda: verify_pairs(cands, sigs, cfg))
+        else:
+            pairs = run("pairs", lambda: brute_force_pairs(sigs, cfg))
+
+        # ONE count job both materializes the persisted pairs and hands the
+        # edge count to connected_components (skips its limit().count() job)
+        pairs = pairs.persist()
+        n_pairs = pairs.count()
+        for h in to_unpersist:
+            h.unpersist()
+        return DedupResult(
+            signatures=sigs, pairs=pairs, assignments=run("assignments", assignments)
+        )
+    except BaseException:
+        # no result owns the persists yet
+        for h in [sigs, pairs, *to_unpersist]:
+            if h is not None:
+                h.unpersist()
+        raise

@@ -92,21 +92,17 @@ def candidate_pairs(
     """buckets(url, band_id, band_hash) → distinct (url_a, url_b) with
     url_a < url_b, through ``bucket_pairs`` at ``cfg.bucket_cap``.
 
-    ``materialize=True`` (default): the pair set is localCheckpointed
-    eagerly and the census is released before returning — lineage-free
-    and safe to reuse across plan branches. ``materialize=False``: the
-    pairs come back lazy and the census persist handle goes to
-    ``cleanup`` (a list the caller unpersists after its own action) —
-    single-consumer callers skip the eager checkpoint, measured 2× the
-    candidate-stage wall at sf0.1. Without a ``cleanup`` list there is no
-    owner for that handle, so the pairs are checkpointed eagerly as well.
+    ``cleanup`` is the one switch, as in ``bucket_pairs``: without it the
+    pair set is localCheckpointed eagerly (lineage-free, safe to reuse
+    across plan branches); with it the pairs come back lazy and the
+    census handle goes to the caller's list — single-consumer callers
+    skip the eager checkpoint, measured 2× the candidate-stage wall at
+    sf0.1. ``materialize`` accepts only ``True``: it is kept because the
+    benchmark passes it explicitly.
     """
-    return bucket_pairs(
-        buckets,
-        _BUCKET_KEY,
-        cfg.bucket_cap,
-        cleanup=None if materialize else cleanup,
-    )
+    if materialize is not True:
+        raise ValueError("candidate_pairs: pass cleanup= for lazy pairs")
+    return bucket_pairs(buckets, _BUCKET_KEY, cfg.bucket_cap, cleanup=cleanup)
 
 
 def bucket_pairs(
@@ -133,11 +129,14 @@ def bucket_pairs(
     self-join; a hot bucket's O(sz²) pairs spread over ~(sz/cap)²/2
     tasks instead of one.
 
-    The census relation feeds both join sides, so it is persisted.
-    With a ``cleanup`` list the pairs come back lazy and the census
-    handle is appended to the list; the caller unpersists it after its
-    own action. Without one the pairs are localCheckpointed eagerly and
-    the census is released before returning.
+    The census relation feeds both join sides, so it is persisted, and
+    it follows the one cache-ownership rule: a function that calls
+    ``persist()`` releases it in a ``finally`` before it returns, or
+    hands the handle to exactly one owner. With a ``cleanup`` list the
+    pairs come back lazy and the census handle is appended to the list;
+    the caller owns it and unpersists it after its own action. Without
+    one the pairs are localCheckpointed eagerly and the census is
+    released before returning.
     """
     sized = bucket_census(members, keys).persist()
     if cleanup is not None:

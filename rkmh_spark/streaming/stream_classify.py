@@ -52,7 +52,10 @@ def classify_file_stream(
         .format("parquet")
         .load(source_dir)
     )
-    ref_sigs = ref_sigs.persist()  # hashed once, resident (rkmh.cpp:813-838)
+    # hashed once up front and resident (rkmh.cpp:813-838); a checkpoint,
+    # not a cache, so no session cache entry outlives the stream: it is
+    # freed with the handler's closure
+    ref_sigs = ref_sigs.localCheckpoint(eager=True)
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         sigs = compute_signatures(batch, cfg)
@@ -129,7 +132,9 @@ def _read_all(
     id for recurring urls), while crash-window stale batches (id <= W)
     are dropped entirely. Without a marker (legacy / crashed before the
     marker write), compacted outranks everything per url — the old
-    stale-but-consistent degradation."""
+    stale-but-consistent degradation. Without ``latest_per`` every row of
+    every partition is returned (the append-only signature and band
+    tables; compaction writes only the assignments table)."""
     jvm = spark._jvm
     path = jvm.org.apache.hadoop.fs.Path(root)
     fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -155,48 +160,34 @@ def _read_all(
     if not has_data:
         return None
     df = spark.read.option("basePath", root).parquet(root)
+    if latest_per is None:
+        return df.drop("batch")
+    from pyspark.sql import Window, functions as F
+
     has_comp = any(
         s.getPath().getName() == "batch=compacted" for s in fs.listStatus(path)
     )
-    from pyspark.sql import Window, functions as F
-
-    if latest_per is not None:
-        wmark = _compaction_watermark(fs, jvm, root) if has_comp else None
-        if has_comp and wmark is None:
-            # legacy/crash-window: compacted authoritative per key
-            comp_ver = F.lit(2**62)
-        else:
-            comp_ver = F.lit(wmark if wmark is not None else -1)
-        # partition-type inference types `batch` as int when every dir is
-        # numeric (no compacted yet) — compare through an explicit string
-        # cast so ANSI mode never tries to cast "compacted" to int
-        b = F.col("batch").cast("string")
-        ver = F.when(b == "compacted", comp_ver).otherwise(b.cast("long"))
-        out = df.withColumn("_ver", ver)
-        if wmark is not None:
-            # crash-window stale batches (fully covered by compacted)
-            out = out.where((b == "compacted") | (F.col("_ver") > wmark))
-        w = Window.partitionBy(latest_per).orderBy(F.desc("_ver"))
-        return (
-            out.withColumn("_rk", F.row_number().over(w))
-            .where(F.col("_rk") == 1)
-            .drop("_rk", "_ver", "batch")
-        )
-    if has_comp:
-        # crash-window consistency (ADVICE r4): compact_assignments writes
-        # batch=compacted BEFORE deleting the stale batch=* partitions. If
-        # the process dies in between, a plain union returns two rows per
-        # url with CONFLICTING cluster ids. The compacted partition is
-        # authoritative for every url it contains (it was built from the
-        # full state); other partitions only contribute urls compacted has
-        # never seen (batches appended AFTER the compaction). This
-        # degrades the crash window to stale-but-consistent.
-        comp = df.where(F.col("batch") == "compacted").drop("batch")
-        rest = df.where(F.col("batch") != "compacted").drop("batch")
-        return rest.join(
-            comp.select("url"), "url", "left_anti"
-        ).unionByName(comp)
-    return df.drop("batch")
+    wmark = _compaction_watermark(fs, jvm, root) if has_comp else None
+    if has_comp and wmark is None:
+        # legacy/crash-window: compacted authoritative per key
+        comp_ver = F.lit(2**62)
+    else:
+        comp_ver = F.lit(wmark if wmark is not None else -1)
+    # partition-type inference types `batch` as int when every dir is
+    # numeric (no compacted yet) — compare through an explicit string
+    # cast so ANSI mode never tries to cast "compacted" to int
+    b = F.col("batch").cast("string")
+    ver = F.when(b == "compacted", comp_ver).otherwise(b.cast("long"))
+    out = df.withColumn("_ver", ver)
+    if wmark is not None:
+        # crash-window stale batches (fully covered by compacted)
+        out = out.where((b == "compacted") | (F.col("_ver") > wmark))
+    w = Window.partitionBy(latest_per).orderBy(F.desc("_ver"))
+    return (
+        out.withColumn("_rk", F.row_number().over(w))
+        .where(F.col("_rk") == 1)
+        .drop("_rk", "_ver", "batch")
+    )
 
 
 def incremental_dedup_stream(
@@ -447,8 +438,9 @@ def compact_assignments(
     ]
     wmark = max(covered) if covered else -1
     _write_batch(assign, assignments_dir, "compacted")
-    # marker AFTER the compacted write (a crash in between degrades to
-    # the legacy compacted-preferred read), BEFORE the deletes
+    # marker AFTER the compacted write (a crash in between leaves no
+    # marker, and _read_all then ranks compacted above every batch),
+    # BEFORE the deletes
     for s in fs.listStatus(root):
         name = s.getPath().getName()
         if name.startswith(_COMPACT_MARKER):

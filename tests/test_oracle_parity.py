@@ -67,18 +67,6 @@ def test_query_matches_oracle(spark, duck, name):
     assert not mismatches, f"{name}: first mismatches {mismatches[:5]}"
 
 
-# Entries that still leave a cached relation in the session: dedup_pages
-# persists its signatures and pairs and hands the caller no release
-# handle (ROADMAP item 1). The set may only shrink — the test below also
-# fails when a listed entry stops leaking.
-DEDUP_PAGES_LEAKS = {
-    "dedup_assignments",
-    "cluster_sizes",
-    "cluster_rep_sketches",
-    "cluster_representatives",
-}
-
-
 def test_all_queries_run_rows_only(spark):
     """Every queries() entry (incl. non-oracle) must execute and be stable,
     and leave no cached relation that a rebuilt identical plan would
@@ -93,7 +81,7 @@ def test_all_queries_run_rows_only(spark):
         if not cache.isEmpty():
             leaked.add(name)
     spark.catalog.clearCache()
-    assert leaked == DEDUP_PAGES_LEAKS
+    assert not leaked, sorted(leaked)
 
 
 # ---------------------------------------------------------------------------

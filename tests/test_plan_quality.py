@@ -179,8 +179,7 @@ def test_no_window_census_in_candidate_builders(spark):
     cleanup: list = []
     lazy_plans = {
         "lsh_candidate_pairs": candidate_pairs(
-            band_buckets(sigs, TEST_CONFIG), TEST_CONFIG,
-            materialize=False, cleanup=cleanup,
+            band_buckets(sigs, TEST_CONFIG), TEST_CONFIG, cleanup=cleanup
         ),
         "simhash_band_candidates": simhash_band_candidates(
             simhash_signatures(docs.select("doc_id", "text")), cleanup=cleanup
@@ -366,6 +365,48 @@ def test_frequency_filtered_signatures_job_count(spark):
     assert 0 < n_jobs <= MIN_OCC_SIGNATURES_MAX_JOBS, n_jobs
 
 
+# Spark jobs of the incremental stream on the job-gate fixture, split
+# into two micro-batches by url hash, in this suite's local[4] session
+# (Spark 4.1.2, cold cache): the second micro-batch (stored signature,
+# band and assignment state present) runs process_incremental_batch in
+# 27 jobs, and compacting the two batches runs 20. Tighten as cuts land
+# (ROADMAP item 3 aims for at most 15 each).
+STREAM_BATCH_MAX_JOBS = 27
+COMPACTION_MAX_JOBS = 20
+
+
+def test_stream_batch_and_compaction_job_counts(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from rkmh_spark.config import TEST_CONFIG
+    from rkmh_spark.sources.pages import pages_dataframe
+    from rkmh_spark.streaming.stream_classify import (
+        compact_assignments,
+        process_incremental_batch,
+    )
+
+    pages = pages_dataframe(spark, n_clusters=12, dup_rate=0.6, seed=3)
+    half = F.pmod(F.xxhash64("url"), F.lit(2))
+    dirs = [str(tmp_path / d) for d in ("s", "b", "a")]
+    process_incremental_batch(
+        spark, pages.where(half == 0), 0, TEST_CONFIG, *dirs
+    )
+    n_batch = _jobs_of(
+        spark,
+        "test_stream_batch_job_count",
+        lambda: process_incremental_batch(
+            spark, pages.where(half == 1), 1, TEST_CONFIG, *dirs
+        ),
+    )
+    n_compact = _jobs_of(
+        spark,
+        "test_compaction_job_count",
+        lambda: compact_assignments(spark, TEST_CONFIG, *dirs),
+    )
+    assert 0 < n_batch <= STREAM_BATCH_MAX_JOBS, n_batch
+    assert 0 < n_compact <= COMPACTION_MAX_JOBS, n_compact
+
+
 def test_per_document_statistics_are_one_map_only_arrow_pass(spark):
     """SimHash, the Gopher filter and the repetition signals each give one
     row per document: a JVM projection and ONE mapInArrow kernel, with no
@@ -390,9 +431,11 @@ def test_per_document_statistics_are_one_map_only_arrow_pass(spark):
 # the Arrow SimHash vote (14 with the token explode + groupBy);
 # quality_filter: 2 with the map-only pass (5 with the gram groupBys and
 # the join back); min_occ_signatures: 6 (the -M pass of
-# compute_signatures_min_occ).
+# compute_signatures_min_occ); ngram_jaccard_pairs: 15 (gram census,
+# self-join and the eager checkpoint of the result).
 QUERY_MAX_JOBS = {
-    "simhash_dup_pairs": 13, "quality_filter": 2, "min_occ_signatures": 6
+    "simhash_dup_pairs": 13, "quality_filter": 2, "min_occ_signatures": 6,
+    "ngram_jaccard_pairs": 15,
 }
 
 

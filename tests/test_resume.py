@@ -201,3 +201,51 @@ def test_iceberg_mode_is_config_switchable(spark, tmp_path):
     assert ck.table_identifier("signatures") == "ice.rkmh.stage_signatures"
     with pytest.raises(ValueError):
         CheckpointManager(str(tmp_path), table_format="delta")
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize(
+    "path", ["plain", "containment", "checkpoint", "distributed_cc"]
+)
+def test_release_empties_cache_and_keeps_assignments(
+    spark, pages, tmp_path, path
+):
+    """DedupResult.release() is the one owner of the persisted signatures
+    and pairs: afterwards the session cache is empty, and the assignments
+    (which read neither relation) give the same rows as before."""
+    kw = {
+        "plain": {},
+        "containment": dict(containment_threshold=0.9),
+        "checkpoint": dict(checkpoint=CheckpointManager(str(tmp_path / "ck"))),
+        "distributed_cc": {},
+    }[path]
+    cfg = (
+        dataclasses.replace(TEST_CONFIG, cc_driver_threshold=0)
+        if path == "distributed_cc" else TEST_CONFIG
+    )
+    spark.catalog.clearCache()
+    res = dedup_pages(pages, cfg, **kw)
+    assert not _cache_empty(spark)
+    before = _rows(res.assignments)
+    res.release()
+    assert _cache_empty(spark)
+    assert _rows(res.assignments) == before
+    assert _cache_empty(spark)
+
+
+def test_failed_run_releases_its_persists(spark, pages, monkeypatch):
+    """A run that raises after persisting hands no result to an owner, so
+    it releases the signatures and pairs itself."""
+    import rkmh_spark.operators.dedup as dedup_mod
+
+    def fail(*a, **k):
+        raise RuntimeError("components failed")
+
+    spark.catalog.clearCache()
+    monkeypatch.setattr(dedup_mod, "connected_components", fail)
+    with pytest.raises(RuntimeError, match="components failed"):
+        dedup_pages(pages, TEST_CONFIG)
+    assert _cache_empty(spark)

@@ -38,11 +38,14 @@ def test_stream_classify_matches_batch(spark, tmp_path, panel_rows):
     ref_sigs = compute_signatures(pdf, TEST_CONFIG)
 
     sink = str(tmp_path / "out")
+    spark.catalog.clearCache()
     q = classify_file_stream(
         spark, src, ref_sigs, TEST_CONFIG,
         sink_dir=sink, checkpoint_dir=str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
+    # the resident panel is a checkpoint, not a session cache entry
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     got = {
         r["url"]: (r["best_ref"], r["shared"])

@@ -40,6 +40,14 @@ def scan_has_partition_pruning(df) -> bool:
     return False
 
 
+def _assigned(spark, asg_d) -> dict:
+    """url → cluster_id, read the way the engine reads assignments."""
+    return {
+        r["url"]: r["cluster_id"]
+        for r in _read_all(spark, asg_d, latest_per="url").collect()
+    }
+
+
 def _mk(spark, rows):
     return spark.createDataFrame(
         [(u, TS, b"", t, "en") for u, t in rows], schema=pages_schema()
@@ -79,9 +87,7 @@ def test_compaction_merges_clusters_bridged_across_batches(spark, tmp_path):
         process_incremental_batch(
             spark, _mk(spark, b), i, CFG, sigs_d, bands_d, asg_d
         )
-    before = {
-        r["url"]: r["cluster_id"] for r in _read_all(spark, asg_d).collect()
-    }
+    before = _assigned(spark, asg_d)
     # the incremental tradeoff: the bridge exists (C adopted an old id)
     # but the two old clusters are still split
     assert before["p://a1"] == before["p://a2"]
@@ -90,9 +96,7 @@ def test_compaction_merges_clusters_bridged_across_batches(spark, tmp_path):
     assert before["p://c1"] == min(before["p://a1"], before["p://b1"])
 
     compact_assignments(spark, CFG, sigs_d, bands_d, asg_d)
-    after = {
-        r["url"]: r["cluster_id"] for r in _read_all(spark, asg_d).collect()
-    }
+    after = _assigned(spark, asg_d)
     assert len(set(after.values())) == 1  # one merged cluster
     assert set(after) == {u for b in batches for u, _ in b}
 
@@ -106,9 +110,7 @@ def test_compaction_merges_clusters_bridged_across_batches(spark, tmp_path):
 
     # idempotent: compacting again changes nothing
     compact_assignments(spark, CFG, sigs_d, bands_d, asg_d)
-    again = {
-        r["url"]: r["cluster_id"] for r in _read_all(spark, asg_d).collect()
-    }
+    again = _assigned(spark, asg_d)
     assert again == after
 
 
@@ -133,10 +135,11 @@ def test_read_all_prefers_compacted_in_crash_window(spark, tmp_path):
     )
     # …and a post-compaction batch added a brand-new url
     _write_batch(mk([("p://c1", "p://c1")]), asg_d, 7)
-    got = {r["url"]: r["cluster_id"] for r in _read_all(spark, asg_d).collect()}
+    got = _assigned(spark, asg_d)
     # one row per url; compacted wins for urls it covers; new url kept
     assert got == {"p://a1": "p://a1", "p://b1": "p://a1", "p://c1": "p://c1"}
-    assert _read_all(spark, asg_d).count() == 3  # no conflicting dup rows
+    # no conflicting dup rows
+    assert _read_all(spark, asg_d, latest_per="url").count() == 3
 
 
 def test_read_all_newest_batch_beats_compacted_for_recurring_url(
@@ -162,10 +165,7 @@ def test_read_all_newest_batch_beats_compacted_for_recurring_url(
     # post-compaction batch RE-assigns a1 and adds a new url
     _write_batch(mk([("p://a1", "NEW"), ("p://c1", "p://c1")]), asg_d, 7)
 
-    got = {
-        r["url"]: r["cluster_id"]
-        for r in _read_all(spark, asg_d, latest_per="url").collect()
-    }
+    got = _assigned(spark, asg_d)
     assert got == {
         "p://a1": "NEW",        # batch 7 > watermark 0 → beats compacted
         "p://b1": "p://a1",     # only compacted knows b1
@@ -175,10 +175,7 @@ def test_read_all_newest_batch_beats_compacted_for_recurring_url(
     # no marker (legacy / crashed before the marker write): compacted is
     # authoritative per url — stale-but-consistent degradation
     (tmp_path / "a" / "_compacted_through-0").unlink()
-    got = {
-        r["url"]: r["cluster_id"]
-        for r in _read_all(spark, asg_d, latest_per="url").collect()
-    }
+    got = _assigned(spark, asg_d)
     assert got["p://a1"] == "p://a1" and got["p://b1"] == "p://a1"
 
 
@@ -195,10 +192,7 @@ def test_read_all_latest_per_without_compaction(spark, tmp_path):
     )
     _write_batch(mk([("p://a1", "OLD"), ("p://b1", "p://b1")]), asg_d, 0)
     _write_batch(mk([("p://a1", "NEW")]), asg_d, 2)
-    got = {
-        r["url"]: r["cluster_id"]
-        for r in _read_all(spark, asg_d, latest_per="url").collect()
-    }
+    got = _assigned(spark, asg_d)
     assert got == {"p://a1": "NEW", "p://b1": "p://b1"}
 
 
@@ -234,9 +228,7 @@ def test_stream_auto_compaction_converges(spark, tmp_path):
         parts = [n for n in os.listdir(asg_d) if n.startswith("batch=")]
         assert parts == ["batch=compacted"], (i, parts)
 
-    after = {
-        r["url"]: r["cluster_id"] for r in _read_all(spark, asg_d).collect()
-    }
+    after = _assigned(spark, asg_d)
     all_pages = _mk(spark, [p for b in batches for p in b])
     batch_assign = {
         r["url"]: r["cluster_id"]
@@ -319,9 +311,7 @@ def test_empty_first_batch_then_normal_batch(spark, tmp_path):
         _mk(spark, [("p://a1", t1), ("p://a2", t1)]),
         1, CFG, sigs_d, bands_d, asg_d,
     )
-    assign = {
-        r["url"]: r["cluster_id"] for r in _read_all(spark, asg_d).collect()
-    }
+    assign = _assigned(spark, asg_d)
     assert assign["p://a1"] == assign["p://a2"]
 
     # compaction over a signatures-only state (no band files at all)
