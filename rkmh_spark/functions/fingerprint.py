@@ -22,7 +22,7 @@ from numpy.lib.stride_tricks import sliding_window_view
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from rkmh_spark.functions.shingles import shingle_hashes
+from rkmh_spark.functions.shingles import hash_texts
 
 
 def winnow(hashes: np.ndarray, w: int) -> np.ndarray:
@@ -35,25 +35,19 @@ def winnow(hashes: np.ndarray, w: int) -> np.ndarray:
     return np.sort(np.unique(mins))
 
 
-def fingerprint_documents(
-    pages: DataFrame,
-    k: int = 8,
-    w: int = 4,
-    seed: int = 42,
-    url_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
-    """→ (url, fingerprints array<long>, n_fp)."""
+def fingerprint_documents(pages: DataFrame, k: int = 8, w: int = 4) -> DataFrame:
+    """→ (url, fingerprints array<long>, n_fp), over the seed-42 hashes."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             fps, ns = [], []
-            for t in pdf[text_col]:
-                f = winnow(shingle_hashes(t if t is not None else "", k, seed), w)
-                fps.append(f.view(np.int64))
-                ns.append(f.size)
+            for bounds, hashes in hash_texts(pdf["text"].tolist(), k):
+                for h in np.split(hashes, bounds[1:-1]):
+                    f = winnow(h, w)
+                    fps.append(f.view(np.int64))
+                    ns.append(f.size)
             yield pd.DataFrame(
-                {"url": pdf[url_col].values, "fingerprints": fps, "n_fp": ns}
+                {"url": pdf["url"].values, "fingerprints": fps, "n_fp": ns}
             )
 
     schema = T.StructType(
@@ -63,4 +57,4 @@ def fingerprint_documents(
             T.StructField("n_fp", T.LongType(), False),
         ]
     )
-    return pages.select(url_col, text_col).mapInPandas(kernel, schema=schema)
+    return pages.select("url", "text").mapInPandas(kernel, schema=schema)

@@ -20,14 +20,14 @@ BEFORE the cast (SURVEY.md §7.4 risk 2).
 
 from __future__ import annotations
 
-from typing import Callable
+from typing import Callable, Iterator
 
 import numpy as np
 from numpy.lib.stride_tricks import sliding_window_view
 
 from rkmh_spark.functions.murmur3 import murmur3_x64_128_low64
 
-# Shingles per murmur pass in sketch_texts_batch (see its docstring).
+# Shingles per murmur chunk of hash_texts (see its docstring).
 MAX_CHUNK_SHINGLES = 1 << 17
 
 
@@ -81,97 +81,92 @@ def sketch_text(text: str, k: int, s: int, seed: int = 42) -> np.ndarray:
     return bottom_s_sketch(shingle_hashes(text, k, seed), s).view(np.int64)
 
 
+def hash_texts(
+    texts, k: int | tuple[int, ...], seed: int = 42
+) -> Iterator[tuple[np.ndarray, np.ndarray]]:
+    """Yield ``(bounds, hashes)`` chunks covering ``texts`` in order.
+
+    The one loop that turns page text into murmur hashes (the analog of
+    the reference's calc_hashes loop, rkmh.cpp:845-860): every document
+    lands whole in exactly one chunk, and a chunk's
+    ``hashes[bounds[j]:bounds[j+1]]`` equals ``shingle_hashes`` of its j-th
+    document. ``None`` reads as ``""``. A tuple ``k`` (reference multi-k,
+    rkmh.cpp:296-303) concatenates each document's per-k arrays in k order.
+
+    Each chunk is one vectorized murmur call per k width over the stacked
+    shingle matrices of its documents, closed once it holds at least
+    ``MAX_CHUNK_SHINGLES`` shingles: stacking a whole 2048-doc batch of
+    multi-KB pages produced ~GB-scale numpy temporaries whose
+    allocation/page-fault churn made the stage 7x slower than the same
+    work in cache-sized chunks (measured at 48k x 4KB docs).
+    """
+    ks = (k,) if isinstance(k, int) else tuple(k)
+    mats: list[list[np.ndarray]] = [[] for _ in ks]
+    total = 0
+    for t in texts:
+        for kk, per_k in zip(ks, mats):
+            per_k.append(shingle_matrix(t if t is not None else "", kk))
+            total += per_k[-1].shape[0]
+        if total >= MAX_CHUNK_SHINGLES:
+            yield _hash_chunk(mats, seed)
+            mats, total = [[] for _ in ks], 0
+    if mats[0]:
+        yield _hash_chunk(mats, seed)
+
+
+def _hash_chunk(mats: list[list[np.ndarray]], seed: int):
+    """Per-k lists of shingle matrices → (bounds, per-document hashes)."""
+    counts = np.array([[m.shape[0] for m in per_k] for per_k in mats])
+    hashes = np.concatenate(
+        [murmur3_x64_128_low64(np.vstack(per_k), seed=seed) for per_k in mats]
+    )
+    if len(mats) > 1:  # k-major blocks → document-major, k order kept
+        doc = np.tile(np.arange(counts.shape[1]), len(mats))
+        hashes = hashes[np.argsort(np.repeat(doc, counts.ravel()), kind="stable")]
+    bounds = np.zeros(counts.shape[1] + 1, dtype=np.int64)
+    np.cumsum(counts.sum(axis=0), out=bounds[1:])
+    return bounds, hashes
+
+
 def sketch_texts_batch(
     texts,
-    k: int,
+    k: int | tuple[int, ...],
     s: int,
     seed: int = 42,
     keep: Callable[[np.ndarray], np.ndarray] | None = None,
     num_bins: int | None = None,
 ):
-    """Sketch a whole Arrow batch of texts with ONE murmur pass.
-
-    Stacks every document's shingle matrix into a single (total_shingles, k)
-    uint8 matrix, hashes it in one vectorized call (this is the hot kernel —
-    the analog of the reference's OpenMP hashing loop at
-    /root/reference/src/rkmh.cpp:845-860), then takes per-document bottom-s.
+    """Sketch a whole Arrow batch of texts over ``hash_texts`` chunks, then
+    take per-document bottom-s.
 
     ``keep``: optional keep mask over uint64 hashes — a callable mapping a
     hash array to a same-length bool array; hashes it rejects are removed
     BEFORE bottom-s selection (the Count-Min ``-M`` filter,
-    /root/reference/src/rkmh.cpp:1256-1267). The single-k path calls it
-    once per murmur chunk, not once per document.
+    rkmh.cpp:1256-1267). It is called once per murmur chunk, not once per
+    document.
 
     ``num_bins``: when given, also returns per-doc K-wide OPH minhash
     vectors for LSH banding (computed from the SAME sorted hash array the
     bottom-s sketch uses — one sort serves both signatures).
 
-    The murmur pass runs over sub-chunks capped at ``MAX_CHUNK_SHINGLES``
-    regardless of how many documents Arrow delivered: vstacking a whole
-    2048-doc batch of multi-KB pages produced ~GB-scale numpy temporaries
-    whose allocation/page-fault churn made the stage 7x slower than the
-    same work in cache-sized chunks (measured at 48k x 4KB docs).
-
-    ``k`` may be a tuple (reference multi-k, rkmh.cpp:296-303): per-k hash
-    arrays are concatenated per document before the sort/bottom-s. The
-    multi-k path hashes per document (not per mega-chunk) — k widths
-    differ so the matrices cannot vstack; multi-k is a config corner, the
-    single-k fast path is untouched.
-
     Returns (sketches: list[int64 array], minhashes: list[int64]|None,
     n_shingles: int64 array).
     """
-    empty = np.empty(0, dtype=np.int64)
-    n = len(texts)
-    counts = np.empty(n, dtype=np.int64)
-    sketches: list = [empty] * n
-    minhashes = [empty] * n if num_bins is not None else None
-
-    if not isinstance(k, int):
-        for i, t in enumerate(texts):
-            h = shingle_hashes(t if t is not None else "", k, seed)
-            counts[i] = h.size
-            if keep is not None and h.size:
-                h = h[keep(h)]
-            hs = np.sort(h[h != 0])
-            sketches[i] = hs[:s].view(np.int64)
+    sketches: list = []
+    minhashes: list | None = [] if num_bins is not None else None
+    counts = [np.empty(0, dtype=np.int64)]
+    for bounds, hashes in hash_texts(texts, k, seed):
+        counts.append(np.diff(bounds))
+        live = hashes != 0
+        if keep is not None:
+            live &= keep(hashes)
+        ends = bounds.tolist()
+        for a, z in zip(ends, ends[1:]):
+            hs = np.sort(hashes[a:z][live[a:z]])
+            sketches.append(hs[:s].view(np.int64))
             if minhashes is not None:
-                minhashes[i] = oph_minhash(hs, num_bins)
-        return sketches, minhashes, counts
-
-    chunk_mats: list = []
-    chunk_docs: list = []  # (doc_index, n_shingles)
-    chunk_total = 0
-
-    def flush() -> None:
-        nonlocal chunk_mats, chunk_docs, chunk_total
-        if not chunk_mats:
-            return
-        all_hashes = murmur3_x64_128_low64(np.vstack(chunk_mats), seed=seed)
-        kept = keep(all_hashes) if keep is not None else None
-        pos = 0
-        for i, cnt in chunk_docs:
-            h = all_hashes[pos : pos + cnt]
-            if kept is not None:
-                h = h[kept[pos : pos + cnt]]
-            pos += cnt
-            hs = np.sort(h[h != 0])
-            sketches[i] = hs[:s].view(np.int64)
-            if minhashes is not None:
-                minhashes[i] = oph_minhash(hs, num_bins)
-        chunk_mats, chunk_docs, chunk_total = [], [], 0
-
-    for i, t in enumerate(texts):
-        m = shingle_matrix(t if t is not None else "", k)
-        counts[i] = m.shape[0]
-        if m.shape[0]:
-            chunk_mats.append(m)
-            chunk_docs.append((i, m.shape[0]))
-            chunk_total += m.shape[0]
-            if chunk_total >= MAX_CHUNK_SHINGLES:
-                flush()
-    flush()
-    return sketches, minhashes, counts
+                minhashes.append(oph_minhash(hs, num_bins))
+    return sketches, minhashes, np.concatenate(counts)
 
 
 _DENSIFY_C = np.uint64(0x9E3779B97F4A7C15)  # golden-ratio odd constant

@@ -20,11 +20,13 @@ from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from rkmh_spark.config import DedupConfig
+from rkmh_spark.functions.shingles import hash_texts
 
 
 def sketch_json(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -57,31 +59,32 @@ def vowpal_wabbit_lines(signatures: DataFrame, label: str = "1.0") -> DataFrame:
     )
 
 
+def hash_dump_rows(pdf: pd.DataFrame, k, seed: int) -> pd.DataFrame:
+    """One Arrow batch of pages → its (url, pos, hash) rows; ``pos``
+    restarts at 0 for every document."""
+    counts, chunks = [np.empty(0, dtype=np.int64)], [np.empty(0, np.uint64)]
+    for bounds, hashes in hash_texts(pdf["text"].tolist(), k, seed):
+        counts.append(np.diff(bounds))
+        chunks.append(hashes)
+    n = np.concatenate(counts)
+    h = np.concatenate(chunks)
+    return pd.DataFrame(
+        {
+            "url": np.repeat(pdf["url"].values, n),
+            "pos": np.arange(h.size, dtype=np.int64) - np.repeat(np.cumsum(n) - n, n),
+            "hash": h.view(np.int64),
+        }
+    )
+
+
 def hash_dump(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
     """S12: per-document exploded (url, pos, hash) — position-aligned like
     the reference's hash arrays (golden-fixture generator)."""
-    import numpy as np
-
-    from rkmh_spark.functions.shingles import shingle_hashes
-
     k, seed = cfg.k, cfg.hash_seed
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            urls, poss, chunks = [], [], []
-            for url, t in zip(pdf["url"], pdf["text"]):
-                h = shingle_hashes(t if t is not None else "", k, seed)
-                if h.size:
-                    urls.extend([url] * h.size)
-                    poss.append(np.arange(h.size, dtype=np.int64))
-                    chunks.append(h.view(np.int64))
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "pos": np.concatenate(poss) if poss else np.empty(0, np.int64),
-                    "hash": np.concatenate(chunks) if chunks else np.empty(0, np.int64),
-                }
-            )
+            yield hash_dump_rows(pdf, k, seed)
 
     schema = T.StructType(
         [

@@ -9,8 +9,13 @@ Algorithm: hash-min label propagation. Every node starts labeled with
 itself; each round, a node takes the min label among itself and its
 neighbors (one equi-join + one groupBy-min per round). Converges in
 O(diameter) rounds — near-dup clusters are low-diameter (a page links to
-its mutations through the original), so this beats alternating-star
-constant factors in practice while staying two shuffles per round.
+its mutations through the original), so it stays the first distributed
+path and star contraction only its fallback. Measured on 4 vCPUs (seed 1
+perfbench corpora, verified edges forced through the distributed path,
+identical labels from every path): on 20,480 edges hash-min took 2.82 /
+1.26 / 1.27 s against star's 4.32 / 3.16 / 3.10 s, and on 173 edges
+1.04 / 0.78 / 0.69 s against 2.99 / 2.93 / 2.50 s — a star-only path
+would be 2.4-3.8x slower once warm (driver union-find: 0.05-0.17 s).
 
 Scale hygiene:
 - ``localCheckpoint`` each round truncates the lineage so plans don't grow.

@@ -25,46 +25,31 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from rkmh_spark.config import DedupConfig
-from rkmh_spark.functions.shingles import shingle_hashes
+from rkmh_spark.functions.shingles import hash_texts
 
 
-def hash_depth_table(
-    pages: DataFrame, cfg: DedupConfig, text_col: str = "text"
-) -> DataFrame:
+def hash_depth_table(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
     """→ DataFrame(hash: long, depth: long) — TOTAL occurrences per shingle.
 
     Reference parity: the ``-M``/``call`` global counter counts every hash
     occurrence across all reads, with multiplicity (read_hash_counter /
     read_hash_to_depth, /root/reference/src/rkmh.cpp:1256-1267,1784), not
-    the number of documents containing the hash. The kernel emits
-    per-doc (hash, cnt) pairs — the exploded relation is bounded by
-    Σ distinct shingles/doc, and the shuffle carries counts, not rows.
+    the number of documents containing the hash. The kernel emits one
+    (hash, cnt) pair per distinct hash of each murmur chunk — the exploded
+    relation is bounded by Σ distinct shingles/chunk, and the shuffle
+    carries counts, not rows.
     """
     k, seed = cfg.k, cfg.hash_seed
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            hs, cs = [], []
-            for t in pdf[text_col].tolist():
-                h = shingle_hashes(t if t is not None else "", k, seed)
-                h = h[h != 0]
-                if h.size:
-                    vals, cnts = np.unique(h, return_counts=True)
-                    hs.append(vals.view(np.int64))
-                    cs.append(cnts.astype(np.int64))
-            if hs:
+            for _, hashes in hash_texts(pdf["text"].tolist(), k, seed):
+                vals, cnts = np.unique(hashes[hashes != 0], return_counts=True)
                 yield pd.DataFrame(
-                    {"hash": np.concatenate(hs), "cnt": np.concatenate(cs)}
-                )
-            else:
-                yield pd.DataFrame(
-                    {
-                        "hash": np.empty(0, dtype=np.int64),
-                        "cnt": np.empty(0, dtype=np.int64),
-                    }
+                    {"hash": vals.view(np.int64), "cnt": cnts.astype(np.int64)}
                 )
 
-    exploded = pages.select(text_col).mapInPandas(
+    exploded = pages.select("text").mapInPandas(
         kernel,
         schema=T.StructType(
             [
@@ -135,7 +120,6 @@ def approx_hash_depth_cms(
     cfg: DedupConfig,
     width: int = 1 << 14,
     depth: int = 4,
-    text_col: str = "text",
 ) -> CountMinSketchNP:
     """Build the global CMS distributed: one local table per partition
     (mapInPandas emits the flattened int64 table as ONE row), tables
@@ -146,14 +130,11 @@ def approx_hash_depth_cms(
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cms = CountMinSketchNP(width, depth, seed)
         for pdf in batches:
-            for t in pdf[text_col].tolist():
-                h = shingle_hashes(t if t is not None else "", k, seed)
-                h = h[h != 0]
-                if h.size:
-                    cms.update(h)
+            for _, hashes in hash_texts(pdf["text"].tolist(), k, seed):
+                cms.update(hashes[hashes != 0])
         yield pd.DataFrame({"table": [cms.table.ravel().tolist()]})
 
-    parts = pages.select(text_col).mapInPandas(
+    parts = pages.select("text").mapInPandas(
         kernel,
         schema=T.StructType(
             [T.StructField("table", T.ArrayType(T.LongType()), False)]

@@ -21,14 +21,13 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from rkmh_spark.config import DedupConfig
-from rkmh_spark.functions.shingles import shingle_hashes
+from rkmh_spark.functions.shingles import hash_texts
 
 
 def search_hashes_broadcast(
     pages: DataFrame,
     dictionary: np.ndarray,
     cfg: DedupConfig,
-    text_col: str = "text",
 ) -> DataFrame:
     """→ (url, hash, n_hits) — distinct dictionary hashes found per page."""
     k, seed = cfg.k, cfg.hash_seed
@@ -36,24 +35,23 @@ def search_hashes_broadcast(
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            urls: list = []
-            found_chunks: list = []
-            for url, t in zip(pdf["url"], pdf[text_col]):
-                h = shingle_hashes(t if t is not None else "", k, seed)
-                if h.size == 0 or dic.size == 0:
-                    continue
-                uniq = np.unique(h)
-                idx = np.searchsorted(dic, uniq).clip(0, dic.size - 1)
-                found = uniq[dic[idx] == uniq]
-                if found.size:
-                    urls.extend([url] * found.size)
+            sizes: list = []
+            found_chunks: list = [np.empty(0, dtype=np.uint64)]
+            for bounds, hashes in hash_texts(pdf["text"].tolist(), k, seed):
+                for h in np.split(hashes, bounds[1:-1]):
+                    uniq = np.unique(h)
+                    found = uniq[
+                        np.searchsorted(dic, uniq, "right")
+                        > np.searchsorted(dic, uniq)
+                    ]
+                    sizes.append(found.size)
                     found_chunks.append(found)
-            vals = (
-                np.concatenate(found_chunks).view(np.int64)
-                if found_chunks
-                else np.empty(0, dtype=np.int64)
+            yield pd.DataFrame(
+                {
+                    "url": np.repeat(pdf["url"].values, sizes),
+                    "hash": np.concatenate(found_chunks).view(np.int64),
+                }
             )
-            yield pd.DataFrame({"url": urls, "hash": vals})
 
     out_schema = T.StructType(
         [
@@ -61,7 +59,7 @@ def search_hashes_broadcast(
             T.StructField("hash", T.LongType(), False),
         ]
     )
-    hits = pages.select("url", text_col).mapInPandas(kernel, schema=out_schema)
+    hits = pages.select("url", "text").mapInPandas(kernel, schema=out_schema)
     return hits.groupBy("url").agg(
         F.count("*").alias("n_hits"), F.collect_list("hash").alias("hashes")
     )

@@ -3,9 +3,10 @@
 pages(url, warc_ts, html, text, lang) → signatures(url, sketch, minhash,
 n_shingles).
 
-One ``mapInPandas`` pass: Arrow delivers columnar batches, the whole batch's
-shingles are hashed in a single vectorized murmur3 call, and only the
-signatures leave the worker — the full hash arrays never hit the shuffle.
+One ``mapInPandas`` pass: Arrow delivers columnar batches, the batch's
+shingles are hashed in cache-sized vectorized murmur3 chunks
+(shingles.hash_texts), and only the signatures leave the worker — the
+full hash arrays never hit the shuffle.
 This is the Spark reshaping of rkmh's per-read OpenMP loop (calc_hashes →
 minhashes, /root/reference/src/rkmh.cpp:845-863): thread parallelism
 becomes partition parallelism, the per-read task becomes a per-batch
@@ -40,8 +41,8 @@ from pyspark.sql import types as T
 
 from rkmh_spark.config import DedupConfig
 from rkmh_spark.functions.shingles import (
+    hash_texts,
     oph_minhash,
-    shingle_hashes,
     sketch_texts_batch,
 )
 
@@ -57,13 +58,7 @@ def signatures_schema() -> T.StructType:
     )
 
 
-def compute_signatures(
-    pages: DataFrame,
-    cfg: DedupConfig,
-    cms=None,
-    url_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
+def compute_signatures(pages: DataFrame, cfg: DedupConfig, cms=None) -> DataFrame:
     """pages → (url, sketch, minhash, n_shingles); arrays bit-cast u64→i64.
 
     ``cms``: the A5 Count-Min counter (docfreq.CountMinSketchNP), read only
@@ -100,17 +95,17 @@ def compute_signatures(
     num_perms = cfg.num_bands * cfg.band_rows
 
     # Column-prune before the python worker: only url+text cross Arrow.
-    narrow = pages.select(url_col, text_col)
+    narrow = pages.select("url", "text")
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             sketches, minhashes, counts = sketch_texts_batch(
-                pdf[text_col].tolist(), k, s, seed,
+                pdf["text"].tolist(), k, s, seed,
                 keep=keep, num_bins=num_perms,
             )
             yield pd.DataFrame(
                 {
-                    "url": pdf[url_col].values,
+                    "url": pdf["url"].values,
                     "sketch": sketches,
                     "minhash": minhashes,
                     "n_shingles": counts,
@@ -120,12 +115,7 @@ def compute_signatures(
     return narrow.mapInPandas(kernel, schema=signatures_schema())
 
 
-def compute_signatures_min_occ(
-    pages: DataFrame,
-    cfg: DedupConfig,
-    url_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
+def compute_signatures_min_occ(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
     """F4/F5 (rkmh ``-M min_kmer_occ`` and ``-I max_samples``): keep a hash
     iff its GLOBAL occurrence count >= cfg.min_occ and/or it occurs in at
     most cfg.max_doc_freq documents, then bottom-s sketch the survivors
@@ -161,21 +151,21 @@ def compute_signatures_min_occ(
 
     def explode_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            urls, hs, cs = [], [], []
-            for u, t in zip(pdf[url_col].tolist(), pdf[text_col].tolist()):
-                h = shingle_hashes(t if t is not None else "", k, seed)
-                h = h[h != 0]
-                if h.size:
-                    vals, cnts = np.unique(h, return_counts=True)
-                else:  # keep the doc visible downstream (empty-sketch row)
-                    vals = np.zeros(1, dtype=np.uint64)
-                    cnts = np.zeros(1, dtype=np.int64)
-                urls.append(np.repeat(u, vals.size))
-                hs.append(vals.view(np.int64))
-                cs.append(cnts)
+            sizes, hs, cs = [], [], []
+            for bounds, hashes in hash_texts(pdf["text"].tolist(), k, seed):
+                for h in np.split(hashes, bounds[1:-1]):
+                    h = h[h != 0]
+                    if h.size:
+                        vals, cnts = np.unique(h, return_counts=True)
+                    else:  # keep the doc visible downstream (empty-sketch row)
+                        vals = np.zeros(1, dtype=np.uint64)
+                        cnts = np.zeros(1, dtype=np.int64)
+                    sizes.append(vals.size)
+                    hs.append(vals.view(np.int64))
+                    cs.append(cnts)
             yield pd.DataFrame(
                 {
-                    "url": np.concatenate(urls) if urls else [],
+                    "url": np.repeat(pdf["url"].values, sizes),
                     "hash": np.concatenate(hs) if hs else [],
                     "cnt": np.concatenate(cs) if cs else [],
                 }
@@ -184,7 +174,7 @@ def compute_signatures_min_occ(
     # materialized once (localCheckpoint, O(Σ distinct shingles/doc)
     # compact rows): it feeds both the statistics aggregate and the keep
     # join, so the corpus is tokenized and hashed once
-    per_doc = pages.select(url_col, text_col).mapInPandas(
+    per_doc = pages.select("url", "text").mapInPandas(
         explode_kernel,
         schema=T.StructType(
             [

@@ -34,6 +34,7 @@ depth < 0.5*avg_d trigger prunes first), ×(3k SNP + k del) mutants.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 
 #: the graft's rotate_snps class (reference ATCG table, rkmh.cpp:1632-1654)
@@ -222,6 +223,10 @@ def call_variants(
 
     (ref, pos, orig, alt, kc, md, rd, od) — alt='-' for deletions.
     ``depth``: pass a precomputed kmer_depth_table to share it.
+
+    Calling it runs Spark jobs while the plan is built: the ``ref_pos``
+    collect that enumerates the needed keys, and two eager checkpoints
+    (the filtered depth table and the triggered positions).
     """
     ref_pos = reference_positions(refs, k, ref_col=ref_col, text_col=text_col)
     # r6 restructure (guide §8 "decide with small rows"): the only depth
@@ -259,7 +264,7 @@ def call_variants(
             needed_set.add(row["kmer"])
             needed_set.update(_enumerate_mutants(row["kmer"], row["d_alt"], k))
         needed = refs.sparkSession.createDataFrame(
-            [(x,) for x in sorted(needed_set)], "kmer string"
+            pa.table({"kmer": pa.array(sorted(needed_set), pa.string())})
         )
     else:
         # relational fallback: same set, built distributedly. The dummy

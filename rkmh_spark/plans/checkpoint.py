@@ -118,7 +118,6 @@ class CheckpointManager:
         spark: SparkSession,
         name: str,
         build: Callable[[], DataFrame],
-        num_partitions: int | None = None,
     ) -> DataFrame:
         """Return the stage output, computing + persisting only if needed.
 
@@ -132,8 +131,6 @@ class CheckpointManager:
 
         t0 = time.perf_counter()
         df = build()
-        if num_partitions:
-            df = df.repartition(num_partitions)
         if self.table_format == "iceberg":
             # snapshot-isolated replace: a kill mid-write leaves the prior
             # snapshot intact; resume re-runs the stage transactionally
