@@ -12,7 +12,8 @@ one deliberate delta vs the reference; see SURVEY.md §7.1).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from typing import ClassVar
 
 
 @dataclass(frozen=True)
@@ -23,7 +24,8 @@ class DedupConfig:
     # concatenated into one multiset before sketching, rkmh.cpp:296-303)
     k: int | tuple[int, ...] = 16
     sketch_size: int = 1000     # bottom-s sketch size ("-s" in rkmh)
-    hash_seed: int = 42         # murmur3 seed (src/rkmh.cpp:493-497)
+    # murmur3 seed (src/rkmh.cpp:493-497): a constant, not a field
+    hash_seed: ClassVar[int] = 42
 
     # --- frequency filters (rkmh -I / -M analogs) ---
     max_doc_freq: int | None = None   # drop shingles present in > this many docs (A2/F5)

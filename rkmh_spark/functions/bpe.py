@@ -107,8 +107,6 @@ def encode_text(text: str, ranks: dict[tuple[str, str], int], _cache: dict | Non
 def bpe_token_counts(
     documents: DataFrame,
     merges: list[tuple[str, str]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """→ (doc_id, n_bpe_tokens) under the learned merge table."""
     ranks = {tuple(p): i for i, p in enumerate(merges)}
@@ -117,14 +115,14 @@ def bpe_token_counts(
         cache: dict = {}
         for pdf in batches:
             counts = [
-                len(encode_text(t, ranks, cache)) for t in pdf[text_col]
+                len(encode_text(t, ranks, cache)) for t in pdf["text"]
             ]
-            yield pd.DataFrame({id_col: pdf[id_col].values, "n_bpe_tokens": counts})
+            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "n_bpe_tokens": counts})
 
     schema = T.StructType(
         [
-            T.StructField(id_col, T.LongType(), True),
+            T.StructField("doc_id", T.LongType(), True),
             T.StructField("n_bpe_tokens", T.LongType(), False),
         ]
     )
-    return documents.select(id_col, text_col).mapInPandas(kernel, schema=schema)
+    return documents.select("doc_id", "text").mapInPandas(kernel, schema=schema)

@@ -15,7 +15,7 @@ map-only and column-pruned to (id, text).
 
 Rules (each spelled so a DuckDB oracle can mirror it exactly):
 - line retained ⇔ trimmed line ends in terminal punctuation
-  (``. ! ? "``), has ≥ ``min_line_words`` whitespace tokens, and does
+  (``. ! ? "``), has ≥ 3 whitespace tokens, and does
   not contain "javascript" (case-insensitive);
 - page dropped ⇔ fewer than ``min_sentences`` sentence terminators
   (``. ! ?``) in the RETAINED text, or the RAW page contains
@@ -35,35 +35,32 @@ from pyspark.sql import Column, DataFrame, functions as F
 _TERMINAL_RE = r'[.!?"]$'
 
 
-def c4_retained_lines(text: Column | str, min_line_words: int = 3) -> Column:
+def c4_retained_lines(text: Column | str) -> Column:
     """Array of trimmed lines retained by the C4 line rules."""
     c = F.col(text) if isinstance(text, str) else text
     lines = F.transform(F.split(c, "\n"), F.trim)
     return F.filter(
         lines,
         lambda l: l.rlike(_TERMINAL_RE)
-        & (F.size(F.array_remove(F.split(l, r"\s+"), "")) >= min_line_words)
+        & (F.size(F.array_remove(F.split(l, r"\s+"), "")) >= 3)
         & ~F.lower(l).contains("javascript"),
     )
 
 
 def c4_filter(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_line_words: int = 3,
     min_sentences: int = 5,
     bad_words: tuple[str, ...] = (),
 ) -> DataFrame:
-    """-> (id_col, kept_text, n_lines, n_lines_kept, n_sentences,
+    """-> (doc_id, kept_text, n_lines, n_lines_kept, n_sentences,
     fail_sentences, fail_lorem, fail_brace, fail_badwords, keep).
 
     Every input row is reported; ``kept_text`` is the newline-rejoin of
     the retained lines (empty string when nothing survives — NOT null,
     so sinks can write it without null-handling).
     """
-    c = F.col(text_col)
-    kept = c4_retained_lines(c, min_line_words)
+    c = F.col("text")
+    kept = c4_retained_lines(c)
     kept_text = F.array_join(kept, "\n")
     n_sent = F.length(kept_text) - F.length(
         F.regexp_replace(kept_text, r"[.!?]", "")
@@ -77,7 +74,7 @@ def c4_filter(
         else F.lit(False)
     )
     out = df.select(
-        F.col(id_col),
+        "doc_id",
         kept_text.alias("kept_text"),
         F.size(F.split(c, "\n")).alias("n_lines"),
         F.size(kept).alias("n_lines_kept"),

@@ -46,13 +46,13 @@ def sketch_json(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
 
 
-def vowpal_wabbit_lines(signatures: DataFrame, label: str = "1.0") -> DataFrame:
+def vowpal_wabbit_lines(signatures: DataFrame) -> DataFrame:
     """→ single-column 'line' DataFrame of VW feature strings."""
     munged = F.regexp_replace("url", r"\|", "_")  # rkmh.cpp:472 key munge
     return signatures.select(
         F.concat_ws(
             " ",
-            F.lit(label),
+            F.lit("1.0"),
             F.concat(munged, F.lit("|sketch")),
             F.concat_ws(" ", F.transform("sketch", lambda h: h.cast("string"))),
         ).alias("line")

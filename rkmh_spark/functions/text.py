@@ -94,11 +94,11 @@ def ngram_keys(
     return th, F.when(m >= 1, acc).otherwise(F.array().cast("array<bigint>"))
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_features(df: DataFrame) -> DataFrame:
     """Length / token / mean-token-length quality features (F6 analog —
     the reference tosses reads by length at
     /root/reference/scripts/score_real_classification.py:25-52)."""
-    c = F.col(text_col)
+    c = F.col("text")
     toks = tokens(c)
     n_tok = F.size(toks)
     return df.withColumns(
@@ -179,11 +179,7 @@ def gram_stats(df: DataFrame, words: Column, *cols: Column | str) -> DataFrame:
     return proj.mapInArrow(_gram_stats_batches, schema)
 
 
-def repetition_signals(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def repetition_signals(df: DataFrame) -> DataFrame:
     """Gopher-style repetition filters (Rae et al. 2021 §A1.1 — public:
     documents dominated by one repeated n-gram are low-quality) as
     ALL-INTEGER per-doc signals, ratio-free so the oracle compare never
@@ -194,9 +190,9 @@ def repetition_signals(
 
     Words are the raw single-space split, empty strings included (so
     ``"m  m"`` has three words); NULL text gives zeros. One row per input
-    row, from ``gram_stats``: ``id_col`` must be a key of ``df``.
+    row, from ``gram_stats``: ``doc_id`` must be a key of ``df``.
     """
-    return gram_stats(df, F.split(F.col(text_col), " "), id_col)
+    return gram_stats(df, F.split(F.col("text"), " "), "doc_id")
 
 
 # Gopher's English stopword panel for the "must contain ≥2 of these"
@@ -206,20 +202,12 @@ GOPHER_STOPWORDS: tuple[str, ...] = (
 )
 
 
-def gopher_quality_filter(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: int = 3,
-    max_mean_word_len: int = 10,
-) -> DataFrame:
+def gopher_quality_filter(df: DataFrame, min_words: int = 50) -> DataFrame:
     """The Gopher keep/drop decision (Rae et al. 2021 §A1.1, public) as
     one map-only pass: a JVM projection of the per-document signals, the
     word and bigram top counts from ``gram_stats``, and a JVM projection
     of the flags. No shuffle and no join; one row per input row, so
-    ``id_col`` must be a key of ``df``.
+    ``doc_id`` must be a key of ``df``.
 
     Every signal here — including the repetition fractions — is computed
     over the SAME empty-filtered token stream (``tokens()``), so runs of
@@ -228,7 +216,7 @@ def gopher_quality_filter(
 
     Per-document fail flags, every threshold spelled as an INTEGER
     cross-multiplication (no ratios cross the oracle gate):
-    - fail_word_count:    n_words outside [min_words, max_words]
+    - fail_word_count:    n_words outside [min_words, 100000]
     - fail_mean_word_len: mean token length outside [3, 10]
                           (sum_word_chars vs bounds × n_words)
     - fail_symbol_ratio:  '#' occurrences > 0.1·n_words OR '...'
@@ -238,11 +226,11 @@ def gopher_quality_filter(
     - fail_stopwords:     < 2 tokens from the Gopher stopword panel
     - fail_top_word:      top token count > 0.2·n_words   (repetition)
     - fail_top_bigram:    top token-bigram count > 0.18·n_bigrams
-    keep = no flag set. min/max word bounds are parameters because the
+    keep = no flag set. The word floor is a parameter because the
     published 50-word floor is corpus-calibrated (the sf fixtures are
     ~20-word snippets).
     """
-    c = F.col(text_col)
+    c = F.col("text")
     toks = tokens(c)
     nw = F.size(toks)
     sum_word_chars = F.aggregate(
@@ -256,7 +244,7 @@ def gopher_quality_filter(
     q = gram_stats(
         df,
         toks,
-        F.col(id_col).alias("id"),
+        "doc_id",
         nw.alias("nw"),
         sum_word_chars.alias("swc"),
         n_hash_marks.alias("n_hash"),
@@ -266,13 +254,12 @@ def gopher_quality_filter(
     )
     nw = F.col("nw")
     out = q.select(
-        F.col("id").alias(id_col),
+        "doc_id",
         nw.alias("n_words"),
-        ((nw < min_words) | (nw > max_words)).alias("fail_word_count"),
-        (
-            (F.col("swc") < min_mean_word_len * nw)
-            | (F.col("swc") > max_mean_word_len * nw)
-        ).alias("fail_mean_word_len"),
+        ((nw < min_words) | (nw > 100_000)).alias("fail_word_count"),
+        ((F.col("swc") < 3 * nw) | (F.col("swc") > 10 * nw)).alias(
+            "fail_mean_word_len"
+        ),
         ((F.col("n_hash") * 10 > nw) | (F.col("n_ell") * 10 > nw)).alias(
             "fail_symbol_ratio"
         ),

@@ -68,9 +68,7 @@ def canonical_url(url: Column | str) -> Column:
     return F.when(scheme == "", c).otherwise(rebuilt)
 
 
-def url_dedup(
-    pages: DataFrame, url_col: str = "url", ts_col: str = "warc_ts"
-) -> DataFrame:
+def url_dedup(pages: DataFrame, ts_col: str = "warc_ts") -> DataFrame:
     """Keep the NEWEST fetch per canonical url (ties → lexicographically
     smallest raw url, deterministic). One shuffle on the canonical key;
     output adds the ``canonical_url`` column. The standard crawl first
@@ -78,10 +76,10 @@ def url_dedup(
     window over the canonical-url hash partitioning, no skew risk beyond
     ordinary hot hosts (one row per url spelling going in)."""
     w = Window.partitionBy("canonical_url").orderBy(
-        F.desc(ts_col), F.asc(url_col)
+        F.desc(ts_col), F.asc("url")
     )
     return (
-        pages.withColumn("canonical_url", canonical_url(url_col))
+        pages.withColumn("canonical_url", canonical_url("url"))
         .withColumn("_rk", F.row_number().over(w))
         .where(F.col("_rk") == 1)
         .drop("_rk")
@@ -100,9 +98,7 @@ def url_host(url: Column | str) -> Column:
     return F.when(host == "", F.lit(None).cast("string")).otherwise(host)
 
 
-def domain_stats(
-    pages: DataFrame, url_col: str = "url", id_col: str = "doc_id"
-) -> DataFrame:
+def domain_stats(pages: DataFrame) -> DataFrame:
     """Per-host crawl stats: page count, distinct canonical pages, and
     the id span (first/last fetch). One hash-aggregate shuffle on the
     host key with map-side partials; count_distinct over canonical urls
@@ -111,13 +107,13 @@ def domain_stats(
     Non-url rows aggregate under the NULL host (kept: the volume of
     unparseable 'urls' is itself a corpus-quality signal)."""
     return (
-        pages.withColumn("host", url_host(url_col))
-        .withColumn("canonical_url", canonical_url(url_col))
+        pages.withColumn("host", url_host("url"))
+        .withColumn("canonical_url", canonical_url("url"))
         .groupBy("host")
         .agg(
             F.count("*").alias("n_pages"),
             F.count_distinct("canonical_url").alias("n_unique_pages"),
-            F.min(id_col).alias("first_doc"),
-            F.max(id_col).alias("last_doc"),
+            F.min("doc_id").alias("first_doc"),
+            F.max("doc_id").alias("last_doc"),
         )
     )

@@ -33,8 +33,6 @@ from pyspark.sql import DataFrame, functions as F
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 20,
-    src_col: str = "url_a",
-    dst_col: str = "url_b",
     driver_threshold: int = 2_000_000,
     n_edges: int | None = None,
 ) -> DataFrame:
@@ -60,7 +58,7 @@ def connected_components(
     if n_edges is None:
         n_edges = edges.limit(driver_threshold + 1).count()
     if n_edges <= driver_threshold:
-        return _driver_union_find(edges, src_col, dst_col)
+        return _driver_union_find(edges)
 
     def _sig(df) -> tuple:
         """Cheap convergence fingerprint: one aggregate job, no join.
@@ -73,8 +71,8 @@ def connected_components(
         return (int(row["s"] or 0), row["c"])
 
     sym = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).union(edges.select(F.col(dst_col), F.col(src_col)))
+        F.col("url_a").alias("src"), F.col("url_b").alias("dst")
+    ).union(edges.select(F.col("url_b"), F.col("url_a")))
     sym = sym.persist()
     try:
         # round 0 fused into initialization: label = min(self, neighbors)
@@ -107,15 +105,10 @@ def connected_components(
     # split labels. Near-dup graphs are low-diameter, so this means
     # pathological chaining; star contraction converges in O(log n) rounds
     # whatever the diameter, so it gives the exact answer instead.
-    return connected_components_star(edges, src_col=src_col, dst_col=dst_col)
+    return connected_components_star(edges)
 
 
-def connected_components_star(
-    edges: DataFrame,
-    max_iterations: int = 50,
-    src_col: str = "url_a",
-    dst_col: str = "url_b",
-) -> DataFrame:
+def connected_components_star(edges: DataFrame, max_iterations: int = 50) -> DataFrame:
     """Alternating large-star/small-star contraction (Kiveris et al.,
     'Connected Components in MapReduce and Beyond', SoCC'14 — public
     algorithm): converges in O(log n) rounds regardless of component
@@ -163,7 +156,7 @@ def connected_components_star(
         return out.where(F.col("src") != F.col("dst")).distinct()
 
     e = _sym(
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        edges.select(F.col("url_a").alias("src"), F.col("url_b").alias("dst"))
     ).localCheckpoint(eager=True)
 
     def _sig(df: DataFrame) -> tuple:
@@ -197,7 +190,7 @@ def connected_components_star(
     return labels
 
 
-def _driver_union_find(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+def _driver_union_find(edges: DataFrame) -> DataFrame:
     """Small-graph fast path: exact union-find on Arrow-collected edges.
 
     Urls are dictionary-encoded IN ARROW (pc.dictionary_encode over the
@@ -213,7 +206,7 @@ def _driver_union_find(edges: DataFrame, src_col: str, dst_col: str) -> DataFram
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    tbl = edges.select(src_col, dst_col).toArrow()
+    tbl = edges.select("url_a", "url_b").toArrow()
     n_edges = tbl.num_rows
     both = pa.chunked_array(
         list(tbl.column(0).chunks) + list(tbl.column(1).chunks),

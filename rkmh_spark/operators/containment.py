@@ -116,15 +116,13 @@ def containment_pairs(
     ).select("url_a", "url_b", "containment")
 
 
-def confirm_substring(
-    contained: DataFrame, pages: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def confirm_substring(contained: DataFrame, pages: DataFrame) -> DataFrame:
     """Exact confirmation: shorter text occurs verbatim in the longer.
 
     → (url_a, url_b, containment, contained_url, container_url) for
     confirmed pairs only.
     """
-    t = pages.select("url", F.col(text_col).alias("__t"))
+    t = pages.select("url", F.col("text").alias("__t"))
     joined = (
         contained.join(
             t.select(F.col("url").alias("url_a"), F.col("__t").alias("text_a")),

@@ -24,9 +24,6 @@ def flag_contaminated(
     benchmark: DataFrame,
     n: int = 13,
     min_hits: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bench_text_col: str | None = None,
 ) -> DataFrame:
     """Per-document benchmark-overlap report: distinct n-gram count,
     how many of those grams appear anywhere in ``benchmark``, and a
@@ -36,29 +33,28 @@ def flag_contaminated(
     Every input doc appears in the output (zero-gram docs report 0/0,
     not-contaminated). A key collision (bound at ``ngram_keys``) can add
     a false hit, or fold two of one document's grams into one key."""
-    bcol = bench_text_col or text_col
 
-    def grams_of(df: DataFrame, tcol: str, *cols: str) -> DataFrame:
-        th, keys = ngram_keys(df, n, tcol, *cols)
+    def grams_of(df: DataFrame, *cols: str) -> DataFrame:
+        th, keys = ngram_keys(df, n, "text", *cols)
         return th.select(*cols, F.explode(F.array_distinct(keys)).alias("_g"))
 
-    bench = F.broadcast(grams_of(benchmark, bcol).distinct())
-    doc_grams = grams_of(docs, text_col, id_col)
+    bench = F.broadcast(grams_of(benchmark).distinct())
+    doc_grams = grams_of(docs, "doc_id")
     hits = (
         doc_grams.join(
             bench.withColumn("_hit", F.lit(1)), on="_g", how="left"
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_grams"),
             F.count("_hit").alias("n_hit"),
         )
     )
     return (
-        docs.select(id_col)
-        .join(hits, on=id_col, how="left")
+        docs.select("doc_id")
+        .join(hits, on="doc_id", how="left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_grams", F.lit(0)).alias("n_grams"),
             F.coalesce("n_hit", F.lit(0)).alias("n_hit"),
             (F.coalesce("n_hit", F.lit(0)) >= min_hits).alias(

@@ -25,10 +25,10 @@ from rkmh_spark.functions.text import ngram_keys, tokens
 from rkmh_spark.operators.lsh import bucket_pairs
 
 
-def exact_duplicate_groups(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_duplicate_groups(documents: DataFrame) -> DataFrame:
     """→ (text_md5, n_docs, keep_doc_id) for texts appearing more than once."""
     return (
-        documents.groupBy(F.md5(F.col(text_col)).alias("text_md5"))
+        documents.groupBy(F.md5(F.col("text")).alias("text_md5"))
         .agg(
             F.count("*").alias("n_docs"),
             F.min("doc_id").alias("keep_doc_id"),
@@ -37,9 +37,9 @@ def exact_duplicate_groups(documents: DataFrame, text_col: str = "text") -> Data
     )
 
 
-def exact_dedup_keep_first(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dedup_keep_first(documents: DataFrame) -> DataFrame:
     """Documents with non-minimal doc_id per identical text removed."""
-    keep = documents.groupBy(F.md5(F.col(text_col)).alias("text_md5")).agg(
+    keep = documents.groupBy(F.md5(F.col("text")).alias("text_md5")).agg(
         F.min("doc_id").alias("doc_id")
     )
     return documents.join(keep, "doc_id", "left_semi")
@@ -49,7 +49,6 @@ def ngram_jaccard_pairs(
     documents: DataFrame,
     n: int = 3,
     threshold: float = 0.5,
-    text_col: str = "text",
     max_gram_df: int = 1000,
     hash_keys: bool = True,
 ) -> DataFrame:
@@ -86,7 +85,7 @@ def ngram_jaccard_pairs(
     """
     if hash_keys is not True:
         raise ValueError("ngram_jaccard_pairs keys grams by 8-byte hash only")
-    th, keys = ngram_keys(documents, n, text_col, "doc_id")
+    th, keys = ngram_keys(documents, n, "text", "doc_id")
     raw = th.select("doc_id", F.explode(F.array_distinct(keys)).alias("_k"))
     keep = (
         raw.groupBy("_k")
@@ -150,7 +149,7 @@ def _simhash_batches(
         )
 
 
-def simhash_signatures(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash_signatures(documents: DataFrame) -> DataFrame:
     """→ (doc_id, simhash) — 64-bit SimHash over distinct tokens.
 
     bit_b(doc) = 1 iff 2·s_b > n, where n is the number of distinct
@@ -164,7 +163,7 @@ def simhash_signatures(documents: DataFrame, text_col: str = "text") -> DataFram
     th = documents.select(
         "doc_id",
         F.transform(
-            F.array_distinct(tokens(F.col(text_col))), lambda w: F.xxhash64(w)
+            F.array_distinct(tokens(F.col("text"))), lambda w: F.xxhash64(w)
         ).alias("th"),
     )
     schema = T.StructType(
@@ -176,8 +175,6 @@ def simhash_signatures(documents: DataFrame, text_col: str = "text") -> DataFram
 def simhash_dup_pairs(
     documents: DataFrame,
     max_hamming: int = 3,
-    text_col: str = "text",
-    bucket_cap: int = 200,
 ) -> DataFrame:
     """→ (doc_a, doc_b, hamming) — verified SimHash near-duplicate pairs
     with Hamming distance ≤ ``max_hamming`` (exact, not approximate).
@@ -202,9 +199,9 @@ def simhash_dup_pairs(
             "4×16-bit banding only guarantees recall for hamming <= 3; "
             f"got max_hamming={max_hamming}"
         )
-    sigs = simhash_signatures(documents, text_col).persist()
+    sigs = simhash_signatures(documents).persist()
     cleanup: list = []
-    cand = simhash_band_candidates(sigs, bucket_cap=bucket_cap, cleanup=cleanup)
+    cand = simhash_band_candidates(sigs, cleanup=cleanup)
     sa = sigs.withColumnsRenamed({"doc_id": "doc_a", "simhash": "sim_a"})
     sb = sigs.withColumnsRenamed({"doc_id": "doc_b", "simhash": "sim_b"})
     out = (

@@ -23,14 +23,12 @@ from rkmh_spark.functions.urls import url_dedup
 def crawl_delta(
     old: DataFrame,
     new: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
     ts_col: str | None = None,
     content_hash: str = "md5",
 ) -> DataFrame:
     """(canonical_url, status ∈ added|removed|changed|unchanged,
     old_hash, new_hash). ``ts_col`` picks the newest fetch per canonical
-    url within each snapshot before diffing (None → url_col itself,
+    url within each snapshot before diffing (None → the url itself,
     fine when urls are unique per side)."""
     if content_hash == "md5":
         h = lambda c: F.md5(F.col(c).cast("string"))  # noqa: E731
@@ -40,12 +38,12 @@ def crawl_delta(
         raise ValueError(f"unknown content_hash {content_hash!r}")
 
     def side(df: DataFrame, out: str, flag: str) -> DataFrame:
-        one = url_dedup(df, url_col=url_col, ts_col=ts_col or url_col)
+        one = url_dedup(df, ts_col=ts_col or "url")
         # presence travels as its own flag: a NULL text column hashes to
         # NULL, and classifying on hash nullness would misreport a
         # present-but-textless page as absent (review r5)
         return one.select(
-            "canonical_url", h(text_col).alias(out), F.lit(True).alias(flag)
+            "canonical_url", h("text").alias(out), F.lit(True).alias(flag)
         )
 
     o = side(old, "old_hash", "_in_old")

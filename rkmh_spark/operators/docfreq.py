@@ -124,7 +124,16 @@ def approx_hash_depth_cms(
     """Build the global CMS distributed: one local table per partition
     (mapInPandas emits the flattened int64 table as ONE row), tables
     summed on the driver — a fixed depth×width×8-byte transfer per
-    partition regardless of corpus size. No shuffle at all."""
+    partition regardless of corpus size. No shuffle at all.
+
+    Saturation bound: a Count-Min estimate never undercounts, and with N
+    counted shingles each cell holds N/width of them on average. Once
+    that mean load reaches ``min_occ``, nearly every hash reads at least
+    ``min_occ`` in all ``depth`` rows, so the ``-M`` keep mask keeps
+    nearly every hash and filters nothing. Size ``width`` well above
+    N/min_occ. Measured: seed 1 of the perfbench ``dedup_longdocs``
+    corpus has ≈4.6M shingles, ≈280 per cell at the default width
+    ``1 << 14``, and there ``-M`` = 2 keeps every hash."""
     k, seed = cfg.k, cfg.hash_seed
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -23,27 +23,24 @@ from pyspark.sql import DataFrame, functions as F
 def line_dedup(
     documents: DataFrame,
     max_line_df: int = 1,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n",
 ) -> DataFrame:
-    """→ (id, n_lines, n_kept, text_dedup).
+    """→ (doc_id, n_lines, n_kept, text_dedup).
 
     Drops every line that appears in MORE THAN ``max_line_df`` distinct
     documents (blank/whitespace lines are never counted as boilerplate
     and are always kept); remaining lines are reassembled in original
-    order with ``sep``. A document whose every line is boilerplate
+    order, joined by '\\n'. A document whose every line is boilerplate
     yields an empty string — the caller's length filter removes it, same
     as C4's pipeline.
     """
     lines = documents.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(F.split(F.col(text_col), sep)).alias("pos", "line"),
+        "doc_id",
+        F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "line"),
     ).withColumn("_k", F.xxhash64("line"))
     df_tbl = (
         lines.where(F.trim("line") != "")
         .groupBy("_k")
-        .agg(F.count_distinct("id").alias("line_df"))
+        .agg(F.count_distinct("doc_id").alias("line_df"))
     )
     kept = (
         lines.join(df_tbl, "_k", "left")
@@ -52,7 +49,7 @@ def line_dedup(
         )
     )
     return (
-        kept.groupBy("id")
+        kept.groupBy("doc_id")
         .agg(
             F.count("*").alias("n_lines"),
             F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("n_kept"),
@@ -68,28 +65,22 @@ def line_dedup(
                     ),
                     lambda x: x["line"],
                 ),
-                sep,
+                "\n",
             ).alias("text_dedup"),
         )
-        .withColumnRenamed("id", id_col)
     )
 
 
-def window_text_lines(
-    documents: DataFrame,
-    words_per_line: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Reshape single-line space-separated text into ``words_per_line``-word
-    lines joined by '\\n' (the testdata documents carry no newlines; this
+def window_text_lines(documents: DataFrame) -> DataFrame:
+    """Reshape single-line space-separated text into 10-word lines
+    joined by '\\n' (the testdata documents carry no newlines; this
     gives line_dedup a deterministic, SQL-reproducible line structure).
 
-    Spelled as ONE regexp_replace turning every Nth word-separating space
+    Spelled as ONE regexp_replace turning every 10th word-separating space
     into '\\n' — linear per row and fully codegen'd. (The r4 spelling
     sliced the words array inside a transform lambda; slice-in-lambda
     re-evaluates the words expression per line on the interpreted HOF
-    path — O(n²/words_per_line) per row, the same mechanism as the r4
+    path — quadratic per row, the same mechanism as the r4
     bigram finding in functions/text.py. VERDICT r4 #3.) A "word" is any
     run of non-space chars INCLUDING the empty run between two adjacent
     spaces — exactly what split(text, ' ') yields, so the respelling is
@@ -97,8 +88,7 @@ def window_text_lines(
     100k-word row). The pattern is backtrack-free: `[^ ]*` can never
     consume the following literal space.
     """
-    pat = "((?:[^ ]* ){%d}[^ ]*) " % (words_per_line - 1)
+    pat = "((?:[^ ]* ){9}[^ ]*) "
     return documents.select(
-        F.col(id_col),
-        F.regexp_replace(F.col(text_col), pat, "$1\n").alias(text_col),
+        "doc_id", F.regexp_replace("text", pat, "$1\n").alias("text")
     )

@@ -37,11 +37,7 @@ def _resolve_href_host(href, src):
     )
 
 
-def domain_link_graph(
-    pages: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-) -> DataFrame:
+def domain_link_graph(pages: DataFrame) -> DataFrame:
     """-> (src_host, dst_host, n_links): outlink counts between
     registrable hosts.
 
@@ -58,8 +54,8 @@ def domain_link_graph(
     dst = _resolve_href_host(F.col("href"), src)
     return (
         pages.select(
-            url_host(url_col).alias("src_host"),
-            F.explode(extract_links(html_col)).alias("href"),
+            url_host("url").alias("src_host"),
+            F.explode(extract_links("html")).alias("href"),
         )
         .select(src, dst.alias("dst_host"))
         .where(src.isNotNull() & F.col("dst_host").isNotNull())
@@ -68,11 +64,7 @@ def domain_link_graph(
     )
 
 
-def anchor_text_agg(
-    pages: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-) -> DataFrame:
+def anchor_text_agg(pages: DataFrame) -> DataFrame:
     """-> (dst_host, anchor, n_links): how the web DESCRIBES each
     target host — anchor texts aggregated over every link pointing at
     it. The classic relevance/spam signal (anchor text was the original
@@ -95,8 +87,8 @@ def anchor_text_agg(
     src = F.col("src_host")
     return (
         pages.select(
-            url_host(url_col).alias("src_host"),
-            F.explode(extract_anchors(html_col)).alias("a"),
+            url_host("url").alias("src_host"),
+            F.explode(extract_anchors("html")).alias("a"),
         )
         .where(src.isNotNull())
         .select(

@@ -5,9 +5,9 @@ bits-per-token (low = boilerplate-ish/common, high = noise/OOV-heavy).
 CCNet uses a KenLM 5-gram; the unigram spelling keeps the estimator
 fully relational — same decision surface, no native LM library.
 
-Model: add-alpha smoothed unigram over reference token counts,
-    p(tok) = (c(tok) + a) / (T + a * (V + 1)),
-    p(OOV)  =           a  / (T + a * (V + 1)),
+Model: add-one smoothed unigram over reference token counts,
+    p(tok) = (c(tok) + 1) / (T + V + 1),
+    p(OOV)  =           1  / (T + V + 1),
 cross-entropy H(doc) = -(1/n) * sum log2 p(tok_i)  [bits/token].
 
 Scale shape (the interesting part): the per-token probability join is
@@ -29,14 +29,10 @@ from pyspark.sql import DataFrame, functions as F
 def lm_score(
     docs: DataFrame,
     ref: DataFrame | None = None,
-    alpha: float = 1.0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     hot_df: int = 2,
-    round_digits: int = 4,
 ) -> DataFrame:
-    """Per-document (n_tokens, bits_per_token) under an add-alpha
-    unigram LM trained on ``ref`` (default: ``docs`` itself —
+    """Per-document (n_tokens, bits_per_token, rounded to 4 digits) under
+    an add-one unigram LM trained on ``ref`` (default: ``docs`` itself —
     self-scoring, the corpus-outlier spelling). Zero-token docs report
     (0, NULL). ``hot_df`` is the broadcast cutoff: reference tokens with
     count >= hot_df ride the broadcast path (set it so the hot table
@@ -54,7 +50,7 @@ def lm_score(
     if ref is None:
         ref = docs
 
-    ref_toks = ref.select(F.explode(tokens(text_col)).alias("tok"))
+    ref_toks = ref.select(F.explode(tokens("text")).alias("tok"))
     vocab = ref_toks.groupBy("tok").agg(F.count("*").alias("c"))
     # vocab feeds THREE consumers (totals row, hot broadcast, tail join) —
     # without materialization the reference tokenize+count lineage
@@ -71,8 +67,8 @@ def lm_score(
     )
 
     doc_tf = (
-        docs.select(F.col(id_col), F.explode(tokens(text_col)).alias("tok"))
-        .groupBy(id_col, "tok")
+        docs.select("doc_id", F.explode(tokens("text")).alias("tok"))
+        .groupBy("doc_id", "tok")
         .agg(F.count("*").alias("tf"))
     )
     hot = F.broadcast(
@@ -84,27 +80,27 @@ def lm_score(
         eager=True
     )
     resolved = with_hot.where(F.col("c_hot").isNotNull()).select(
-        id_col, "tf", F.col("c_hot").alias("c")
+        "doc_id", "tf", F.col("c_hot").alias("c")
     )
     # tail path: only rows the hot table missed — rare tokens, no skew
     unresolved = (
         with_hot.where(F.col("c_hot").isNull())
         .drop("c_hot")
         .join(tail, on="tok", how="left")
-        .select(id_col, "tf", F.coalesce("c_tail", F.lit(0)).alias("c"))
+        .select("doc_id", "tf", F.coalesce("c_tail", F.lit(0)).alias("c"))
     )
     scored = (
         resolved.unionByName(unresolved)
         .crossJoin(totals)
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("tf").alias("n_tokens"),
             (
                 -F.sum(
                     F.col("tf")
                     * F.log2(
-                        (F.col("c") + F.lit(alpha))
-                        / (F.col("T") + F.lit(alpha) * (F.col("V") + 1))
+                        (F.col("c") + F.lit(1.0))
+                        / (F.col("T") + (F.col("V") + 1))
                     )
                 )
                 / F.sum("tf")
@@ -112,11 +108,11 @@ def lm_score(
         )
     )
     return (
-        docs.select(id_col)
-        .join(scored, on=id_col, how="left")
+        docs.select("doc_id")
+        .join(scored, on="doc_id", how="left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),
-            F.round("_bpt", round_digits).alias("bits_per_token"),
+            F.round("_bpt", 4).alias("bits_per_token"),
         )
     )

@@ -30,11 +30,9 @@ from rkmh_spark.config import DedupConfig
 _BUCKET_KEY = ["band_id", "band_hash"]
 
 
-def bucket_census(
-    members: DataFrame, keys: list[str], min_sz: int = 2
-) -> DataFrame:
-    """members + per-key ``sz`` column, keys with < ``min_sz`` members
-    dropped — the groupBy + join-back spelling, NOT a count window.
+def bucket_census(members: DataFrame, keys: list[str]) -> DataFrame:
+    """members + per-key ``sz`` column, keys with one member dropped —
+    the groupBy + join-back spelling, NOT a count window.
 
     Precondition: no key column is null. groupBy counts null keys as one
     group, but the equi-join back never matches a null, so members with
@@ -54,7 +52,7 @@ def bucket_census(
     counts = (
         members.groupBy(*keys)
         .agg(F.count("*").alias("sz"))
-        .where(F.col("sz") >= min_sz)
+        .where(F.col("sz") >= 2)
     )
     return members.join(counts, keys)
 

@@ -51,17 +51,14 @@ def _thresh_hex(p: float) -> str:
 def stratified_sample(
     df: DataFrame,
     rates: dict[str, float],
-    strata_col: str = "lang",
-    key_col: str = "doc_id",
     default_rate: float = 0.0,
-    salt: str = "sample",
 ) -> DataFrame:
-    """Keep each row with its stratum's probability, decided by the
-    row's own key hash. Strata absent from ``rates`` use
+    """Keep each row with its ``lang`` stratum's probability, decided by
+    the row's own ``doc_id`` hash. Strata absent from ``rates`` use
     ``default_rate``. Pure projection + filter: pushes down to the scan,
-    no shuffle, no rand(). Give repeated/composed stages distinct
-    ``salt`` values to decorrelate their decisions."""
-    u = _u_hex(F.col(key_col), salt)
+    no shuffle, no rand(). The salt ``"sample"`` decorrelates the
+    decision from ``weighted_mixture``'s."""
+    u = _u_hex(F.col("doc_id"), "sample")
 
     def _keep(p: float) -> Column:
         if p >= 1.0:
@@ -72,26 +69,22 @@ def stratified_sample(
 
     keep = _keep(default_rate)
     for s, r in sorted(rates.items()):
-        keep = F.when(F.col(strata_col) == s, _keep(r)).otherwise(keep)
+        keep = F.when(F.col("lang") == s, _keep(r)).otherwise(keep)
     return df.where(keep)
 
 
 def weighted_mixture(
     df: DataFrame,
     weights: dict[str, float],
-    strata_col: str = "lang",
-    key_col: str = "doc_id",
-    default_weight: float = 1.0,
-    copy_col: str = "copy",
-    salt: str = "mix",
 ) -> DataFrame:
     """Replicate each row ``floor(w) + (u < frac(w))`` times for its
-    stratum weight w ≥ 0 (w<1 subsamples, w>1 upsamples; expectation is
-    exactly w per row — the default salt differs from
-    stratified_sample's, so a sample→mix pipeline draws independent
-    uniforms). Adds ``copy_col`` = 0..n-1 so downstream shuffles and
-    dedup keys can distinguish copies. Map-only expansion."""
-    u = _u_hex(F.col(key_col), salt)
+    ``lang`` stratum weight w ≥ 0 (w<1 subsamples, w>1 upsamples; strata
+    absent from ``weights`` keep w = 1; expectation is exactly w per row
+    — the salt ``"mix"`` differs from stratified_sample's, so a
+    sample→mix pipeline draws independent uniforms). Adds ``copy`` =
+    0..n-1 so downstream shuffles and dedup keys can distinguish copies.
+    Map-only expansion."""
+    u = _u_hex(F.col("doc_id"), "mix")
 
     def _n(w: float) -> Column:
         base = int(math.floor(w))
@@ -101,13 +94,13 @@ def weighted_mixture(
             n = n + (u < F.lit(_thresh_hex(frac))).cast("int")
         return n
 
-    factor = _n(default_weight)
+    factor = _n(1.0)
     for s, w in sorted(weights.items()):
-        factor = F.when(F.col(strata_col) == s, _n(w)).otherwise(factor)
+        factor = F.when(F.col("lang") == s, _n(w)).otherwise(factor)
     out = df.withColumn("_n_copies", factor).select(
         "*",
         F.posexplode(F.array_repeat(F.lit(1), F.col("_n_copies"))).alias(
-            copy_col, "_one"
+            "copy", "_one"
         ),
     )
     return out.drop("_one", "_n_copies")

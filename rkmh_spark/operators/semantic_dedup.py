@@ -43,11 +43,10 @@ from rkmh_spark.operators.similarity import embedding_near_dup_pairs
 def semantic_dedup(
     embeddings: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     pairs: DataFrame | None = None,
 ) -> DataFrame:
-    """-> (id_col, dup_of, keep): min-id-representative semantic dedup.
+    """embeddings(vec_id, embedding) -> (vec_id, dup_of, keep):
+    min-id-representative semantic dedup.
 
     ``pairs``: optional precomputed candidate pairs (id_a, id_b, cosine)
     with id_a < id_b — pass the LSH/IVF-bucketed pair set at scale. When
@@ -58,9 +57,7 @@ def semantic_dedup(
     dup_of = NULL, keep = true.
     """
     if pairs is None:
-        pairs = embedding_near_dup_pairs(
-            embeddings, threshold=threshold, id_col=id_col, vec_col=vec_col
-        )
+        pairs = embedding_near_dup_pairs(embeddings, threshold=threshold)
     # defensive orientation normalization (ADVICE r5): an externally
     # supplied pair set containing both orientations (or reversed pairs)
     # would otherwise let groupBy(id_b).min(id_a) pick a LATER id as
@@ -72,14 +69,14 @@ def semantic_dedup(
         F.greatest("id_a", "id_b").alias("id_b"),
     )
     dup_of = (
-        oriented.groupBy(F.col("id_b").alias(id_col))
+        oriented.groupBy(F.col("id_b").alias("vec_id"))
         .agg(F.min("id_a").alias("dup_of"))
     )
     return (
-        embeddings.select(id_col)
-        .join(dup_of, id_col, "left")
+        embeddings.select("vec_id")
+        .join(dup_of, "vec_id", "left")
         .select(
-            id_col,
+            "vec_id",
             "dup_of",
             F.col("dup_of").isNull().alias("keep"),
         )

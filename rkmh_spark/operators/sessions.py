@@ -24,26 +24,20 @@ from pyspark.sql import DataFrame, Window, functions as F
 def sessionize(
     events: DataFrame,
     gap_seconds: int = 43_200,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    order_tiebreak: str = "event_id",
 ) -> DataFrame:
-    """→ events + (session_idx) — session index per user, 1-based."""
-    w = Window.partitionBy(user_col).orderBy(
-        F.asc(ts_col), F.asc(order_tiebreak)
-    )
-    prev = F.lag(ts_col).over(w)
+    """→ events + (session_idx) — session index per ``user_id``, 1-based,
+    in (``ts``, ``event_id``) order."""
+    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
+    prev = F.lag("ts").over(w)
     brk = F.when(
         prev.isNull()
         | (
-            F.unix_timestamp(F.col(ts_col)) - F.unix_timestamp(prev)
+            F.unix_timestamp(F.col("ts")) - F.unix_timestamp(prev)
             > gap_seconds
         ),
         1,
     ).otherwise(0)
-    running = Window.partitionBy(user_col).orderBy(
-        F.asc(ts_col), F.asc(order_tiebreak)
-    ).rowsBetween(Window.unboundedPreceding, 0)
+    running = w.rowsBetween(Window.unboundedPreceding, 0)
     return events.withColumn("__brk", brk).withColumn(
         "session_idx", F.sum("__brk").over(running)
     ).drop("__brk")

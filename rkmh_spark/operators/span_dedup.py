@@ -40,11 +40,9 @@ from rkmh_spark.functions.text import ngram_keys, tokens
 def duplicated_spans(
     documents: DataFrame,
     min_len: int = 20,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     hash_keys: bool = True,
 ) -> DataFrame:
-    """-> (id, span_start, span_end, n_dup_grams): maximal word-index
+    """-> (doc_id, span_start, span_end, n_dup_grams): maximal word-index
     spans [span_start, span_end) in which EVERY ``min_len``-gram occurs
     more than once corpus-wide (counting within-document repeats too —
     a page that repeats its own boilerplate twice is a dup of itself).
@@ -61,8 +59,8 @@ def duplicated_spans(
     """
     if hash_keys is not True:
         raise ValueError("duplicated_spans keys grams by 8-byte hash only")
-    th, keys = ngram_keys(documents, min_len, text_col, F.col(id_col).alias("id"))
-    grams = th.select("id", F.posexplode(keys).alias("pos", "_k"))
+    th, keys = ngram_keys(documents, min_len, "text", "doc_id")
+    grams = th.select("doc_id", F.posexplode(keys).alias("pos", "_k"))
     # groupBy + join back (the line_dedup spelling), NOT a count window:
     # a window count buffers each gram's whole partition in WindowExec —
     # a hot boilerplate gram at web scale is a one-reducer spill bomb —
@@ -76,30 +74,27 @@ def duplicated_spans(
     )
     dup = grams.join(dup_keys, "_k")
 
-    w = Window.partitionBy("id").orderBy("pos")
+    w = Window.partitionBy("doc_id").orderBy("pos")
     gap = F.col("pos") - F.lag("pos").over(w)
     brk = F.when(gap <= min_len, F.lit(0)).otherwise(F.lit(1))  # NULL -> 1
     island = F.sum(brk).over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        dup.select("id", "pos", island.alias("_island"))
-        .groupBy("id", "_island")
+        dup.select("doc_id", "pos", island.alias("_island"))
+        .groupBy("doc_id", "_island")
         .agg(
             F.min("pos").alias("span_start"),
             (F.max("pos") + F.lit(min_len)).alias("span_end"),
             F.count("*").alias("n_dup_grams"),
         )
         .drop("_island")
-        .withColumnRenamed("id", id_col)
     )
 
 
 def strip_spans(
     documents: DataFrame,
     spans: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """-> documents with ``text_stripped``: the text with every span's
     words removed (word indices in [span_start, span_end) dropped,
@@ -112,12 +107,12 @@ def strip_spans(
     representative already plays that role. Documented tradeoff.
 
     The span list rides a per-document array column (collect_list after
-    a groupBy on id — spans per doc are few), and the word filter is one
+    a groupBy on doc_id — spans per doc are few), and the word filter is one
     two-arg F.filter whose index lambda probes that array; map-side
     after the single join, no extra shuffle.
     """
     sp = (
-        spans.groupBy(id_col)
+        spans.groupBy("doc_id")
         .agg(
             F.collect_list(
                 F.struct(
@@ -126,16 +121,16 @@ def strip_spans(
             ).alias("_spans")
         )
     )
-    words = tokens(text_col)
+    words = tokens("text")
     in_span = lambda i: F.exists(  # noqa: E731
         F.col("_spans"), lambda sp_: (i >= sp_["s"]) & (i < sp_["e"])
     )
     kept = F.filter(words, lambda wd, i: ~in_span(i))
     return (
-        documents.join(sp, id_col, "left")
+        documents.join(sp, "doc_id", "left")
         .withColumn(
             "text_stripped",
-            F.when(F.col("_spans").isNull(), F.col(text_col)).otherwise(
+            F.when(F.col("_spans").isNull(), F.col("text")).otherwise(
                 F.concat_ws(" ", kept)
             ),
         )

@@ -17,13 +17,11 @@ from pyspark.sql import DataFrame, functions as F
 
 def tfidf(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_df: int | None = None,
-    round_digits: int = 4,
     n_docs: int | None = None,
 ) -> DataFrame:
-    """(doc, token, tf, df, tfidf=tf*ln(N/df)) for every token
+    """(doc_id, token, tf, df, tfidf=tf*ln(N/df), rounded to 4 digits)
+    for every token
     occurrence-set; tokens with df > max_df are dropped (idf-useless
     boilerplate AND the join-skew guard — see module docstring).
     Pass ``n_docs`` when known (parquet footer / table stats) to skip
@@ -31,23 +29,23 @@ def tfidf(
     from rkmh_spark.functions.text import tokens
 
     tf = (
-        docs.select(F.col(id_col), F.explode(tokens(text_col)).alias("token"))
-        .groupBy(id_col, "token")
+        docs.select("doc_id", F.explode(tokens("text")).alias("token"))
+        .groupBy("doc_id", "token")
         .agg(F.count("*").alias("tf"))
     )
     df = tf.groupBy("token").agg(F.count("*").alias("df"))
     if max_df is not None:
         df = df.where(F.col("df") <= max_df)
     if n_docs is None:
-        n_docs = docs.select(id_col).distinct().count()
+        n_docs = docs.select("doc_id").distinct().count()
     return tf.join(df, on="token").select(
-        id_col,
+        "doc_id",
         "token",
         "tf",
         "df",
         F.round(
             F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")),
-            round_digits,
+            4,
         ).alias("tfidf"),
     )
 

@@ -50,7 +50,6 @@ def _rotation_pairs() -> list[tuple[str, str]]:
 def kmer_depth_table(
     corpus: DataFrame,
     k: int,
-    text_col: str = "text",
     keys: DataFrame | None = None,
 ) -> DataFrame:
     """→ (kmer, depth): total occurrences of each char k-gram in the corpus.
@@ -68,7 +67,7 @@ def kmer_depth_table(
     shuffle carries only matching rows instead of every distinct corpus
     gram. Counts for surviving keys are identical.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     grams = F.transform(
         _positions(t, k),
         lambda i: F.substring(t, i, k),
@@ -88,25 +87,21 @@ def _positions(t, k: int):
     )
 
 
-def reference_positions(
-    refs: DataFrame,
-    k: int,
-    ref_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
-    """→ (ref, j, kmer, d_alt): every reference k-mer position.
+def reference_positions(refs: DataFrame, k: int) -> DataFrame:
+    """refs(url, text) → (ref, j, kmer, d_alt): every reference k-mer
+    position.
 
     j is the 0-based shingle index (the reference's inner loop variable);
     d_alt is the (k+1)-gram starting at j-1 used by the deletion pass
     (NULL at j=0, mirroring the ``j > 0`` guard at rkmh.cpp:1848).
     """
-    t = F.col(text_col)
+    t = F.col("text")
     kmers = F.transform(
         _positions(t, k),
         lambda i: F.substring(t, i, k),
     )
     out = refs.select(
-        F.col(ref_col).alias("ref"),
+        F.col("url").alias("ref"),
         t.alias("__text"),
         F.posexplode(kmers).alias("j", "kmer"),
     )
@@ -215,20 +210,16 @@ def call_variants(
     corpus: DataFrame,
     k: int = 8,
     window_len: int = 10,
-    ref_col: str = "url",
-    text_col: str = "text",
-    depth: DataFrame | None = None,
 ) -> DataFrame:
     """Full rkmh-call graft → per-site aggregate (A9):
 
     (ref, pos, orig, alt, kc, md, rd, od) — alt='-' for deletions.
-    ``depth``: pass a precomputed kmer_depth_table to share it.
 
     Calling it runs Spark jobs while the plan is built: the ``ref_pos``
     collect that enumerates the needed keys, and two eager checkpoints
     (the filtered depth table and the triggered positions).
     """
-    ref_pos = reference_positions(refs, k, ref_col=ref_col, text_col=text_col)
+    ref_pos = reference_positions(refs, k)
     # r6 restructure (guide §8 "decide with small rows"): the only depth
     # values this job ever reads are those of the reference's own k-mers
     # (position join) and of the permuted mutants of reference positions
@@ -238,10 +229,9 @@ def call_variants(
     # and then broadcast that full table into the left joins — at web
     # scale that blows the 8 GB broadcast cap; locally it built a
     # multi-million-row hash relation three times. Now ONE key-filtered
-    # count pass (depth=None path; the semi-join filter runs BEFORE the
-    # count shuffle, so only matching gram occurrences shuffle) — or one
-    # semi-join prune of the caller's shared table — yields a small
-    # checkpointed relation that serves all three joins as a broadcast.
+    # count pass (the semi-join filter runs BEFORE the count shuffle, so
+    # only matching gram occurrences shuffle) yields a small checkpointed
+    # relation that serves all three joins as a broadcast.
     # Left-join semantics are unchanged: dropped rows could never match,
     # and misses still coalesce to depth 0.
     # The needed key set is enumerable UP FRONT from the reference alone:
@@ -283,10 +273,7 @@ def call_variants(
             )
             .distinct()
         )
-    if depth is None:
-        depth = kmer_depth_table(corpus, k, text_col=text_col, keys=needed)
-    else:
-        depth = depth.join(F.broadcast(needed), "kmer", "left_semi")
+    depth = kmer_depth_table(corpus, k, keys=needed)
     # ONE small filtered table serves all three consumers (position join
     # + both mutant joins) — eager checkpoint = one corpus pass total
     depth = depth.localCheckpoint(eager=True)

@@ -123,7 +123,10 @@ class CheckpointManager:
 
         The parquet write is atomic-enough for resume purposes: the
         manifest is written AFTER a successful write, so a kill mid-write
-        leaves no complete-manifest and the stage recomputes.
+        leaves no complete-manifest and the stage recomputes. The manifest
+        itself is written to a temporary name and renamed over
+        ``_MANIFEST.json``, so a kill mid-dump never leaves a truncated
+        manifest that the next run's ``is_complete`` cannot parse.
         """
         path = self.stage_path(name)
         if self.is_complete(name):
@@ -148,7 +151,8 @@ class CheckpointManager:
         # the manifest dir must be created explicitly (ADVICE r2: iceberg
         # mode crashed here with FileNotFoundError after a successful write)
         os.makedirs(self.stage_path(name), exist_ok=True)
-        with open(self._manifest_path(name), "w") as f:
+        tmp = self._manifest_path(name) + ".tmp"
+        with open(tmp, "w") as f:
             json.dump(
                 {
                     "status": "complete",
@@ -162,6 +166,7 @@ class CheckpointManager:
                 f,
                 indent=1,
             )
+        os.replace(tmp, self._manifest_path(name))
         return out
 
     def _read(self, spark: SparkSession, name: str, path: str) -> DataFrame:

@@ -17,7 +17,6 @@ def get_spark(
     app_name: str = "rkmh_spark",
     cores: int | str | None = None,
     shuffle_partitions: int | None = None,
-    arrow_batch_size: int = 2048,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cores = cores or os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -34,7 +33,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Arrow batches feed the vectorized shingle/sketch kernels
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_size))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # Spark 4 default, pinned explicitly: operators rely on ANSI's
         # loud INVALID_ARRAY_INDEX for over-declared vector widths

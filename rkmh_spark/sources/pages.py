@@ -3,12 +3,10 @@
 Mirrors the reference's test-data strategy — ground truth generated with a
 fixed seed and carried alongside the data (rkmh encodes truth in filenames,
 /root/reference/scripts/make_mix.py:7,33; we carry a ``true_cluster_id``
-sidecar column instead).
+at the end of each ``generate_pages`` row instead, for recall scoring).
 
 Schema per BASELINE.json input_hint:
     pages(url string, warc_ts timestamp, html binary, text string, lang string)
-plus sidecar ``true_cluster_id`` (int) for recall scoring; production code
-never reads the sidecar.
 
 Planted near-dup transformations (SURVEY.md §7.2 M0): identical mirror,
 whitespace churn, token substitution at low rate, truncation, boilerplate
@@ -39,17 +37,16 @@ _BOILER = (
 _LANGS = ["en", "es", "de", "fr", "it"]
 
 
-def pages_schema(with_truth: bool = False) -> T.StructType:
-    fields = [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), False),
-        T.StructField("html", T.BinaryType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-    ]
-    if with_truth:
-        fields.append(T.StructField("true_cluster_id", T.LongType(), False))
-    return T.StructType(fields)
+def pages_schema() -> T.StructType:
+    return T.StructType(
+        [
+            T.StructField("url", T.StringType(), False),
+            T.StructField("warc_ts", T.TimestampType(), False),
+            T.StructField("html", T.BinaryType(), True),
+            T.StructField("text", T.StringType(), True),
+            T.StructField("lang", T.StringType(), True),
+        ]
+    )
 
 
 def _base_text(rng: random.Random, n_tokens: int) -> str:
@@ -113,13 +110,11 @@ def pages_dataframe(
     n_clusters: int = 40,
     dup_rate: float = 0.5,
     seed: int = 42,
-    with_truth: bool = False,
     num_partitions: int | None = None,
 ) -> DataFrame:
+    """The ``generate_pages`` rows without their truth column."""
     rows = generate_pages(n_clusters=n_clusters, dup_rate=dup_rate, seed=seed)
-    if not with_truth:
-        rows = [r[:5] for r in rows]
-    df = spark.createDataFrame(rows, schema=pages_schema(with_truth))
+    df = spark.createDataFrame([r[:5] for r in rows], schema=pages_schema())
     if num_partitions:
         df = df.repartition(num_partitions)
     return df

@@ -4,9 +4,10 @@ page-level flags, full reporting, and empty-survivor behavior."""
 from rkmh_spark.functions.c4 import c4_filter
 
 
-def _run(spark, rows, **kw):
+def _run(spark, rows, min_sentences, bad_words=()):
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    return {r["doc_id"]: r.asDict() for r in c4_filter(df, **kw).collect()}
+    out = c4_filter(df, min_sentences=min_sentences, bad_words=bad_words)
+    return {r["doc_id"]: r.asDict() for r in out.collect()}
 
 
 def test_line_rules(spark):

@@ -31,7 +31,7 @@ def test_star_matches_union_find_random(spark, seed):
         pairs.append((min(a, b), max(a, b)))
     df = _edges_df(spark, pairs)
     star = _labels(connected_components_star(df))
-    uf = _labels(_driver_union_find(df, "url_a", "url_b"))
+    uf = _labels(_driver_union_find(df))
     assert star == uf
 
 

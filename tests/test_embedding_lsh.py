@@ -219,7 +219,7 @@ def test_ivf_topk_empty_input_schema_matches_id_type(spark):
     from rkmh_spark.operators.similarity import ivf_topk
 
     empty = spark.createDataFrame([], "vec_id string, embedding array<double>")
-    out = ivf_topk(empty, id_col="vec_id", vec_col="embedding")
+    out = ivf_topk(empty)
     assert out.count() == 0
     assert dict(out.dtypes) == {
         "query_id": "string",

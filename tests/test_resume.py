@@ -249,3 +249,32 @@ def test_failed_run_releases_its_persists(spark, pages, monkeypatch):
     with pytest.raises(RuntimeError, match="components failed"):
         dedup_pages(pages, TEST_CONFIG)
     assert _cache_empty(spark)
+
+
+def test_kill_before_manifest_rename_recomputes_stage(
+    spark, pages, tmp_path, monkeypatch
+):
+    """The manifest is dumped under a temporary name and renamed over
+    ``_MANIFEST.json``. A kill before the rename leaves no manifest under
+    the final name (never a truncated one that ``json.load`` rejects), so
+    the next run recomputes that stage and gives the same assignments."""
+    real_replace = os.replace
+    failed: list[str] = []
+
+    def replace_fails_once(src, dst):
+        if not failed:
+            failed.append(str(dst))
+            raise OSError("killed before the manifest rename")
+        return real_replace(src, dst)
+
+    root = tmp_path / "ck"
+    monkeypatch.setattr(os, "replace", replace_fails_once)
+    with pytest.raises(OSError, match="manifest rename"):
+        _assignments(spark, pages, root)
+    assert failed and os.path.basename(failed[0]) == "_MANIFEST.json"
+    stage = os.path.basename(os.path.dirname(failed[0])).split("=", 1)[1]
+    assert not CheckpointManager(str(root)).is_complete(stage)
+
+    a1, ckpt = _assignments(spark, pages, root)
+    assert ckpt.is_complete(stage)
+    assert a1 == _rows(dedup_pages(pages, TEST_CONFIG).assignments)

@@ -43,8 +43,8 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def _spans(df, **kw):
-    out = duplicated_spans(df, min_len=L, **kw)
+def _spans(df, hash_keys=True):
+    out = duplicated_spans(df, min_len=L, hash_keys=hash_keys)
     return sorted(
         (r["doc_id"], r["span_start"], r["span_end"], r["n_dup_grams"])
         for r in out.collect()

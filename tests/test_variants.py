@@ -123,3 +123,38 @@ def test_driver_mutant_enumeration_matches_relational(spark):
     for row in ref_pos.select("kmer", "d_alt").collect():
         driver.update(_enumerate_mutants(row["kmer"], row["d_alt"], K))
     assert driver == relational
+
+
+def test_relational_key_fallback_matches_driver_path(spark, monkeypatch):
+    """A reference with more than ``_DRIVER_ENUM_KEY_LIMIT // (4k+1)``
+    positions builds its needed-key set in Spark instead of on the
+    driver. Lowering the limit sends the planted-SNP fixture down that
+    branch; its calls must equal the driver path's row for row."""
+    import rkmh_spark.operators.variants as variants
+
+    ref_text = "qqqwwtotoqqqww"
+    refs = _df(spark, [("ref0", ref_text)])
+    corpus = _df(
+        spark, [(f"c{i}", ref_text.replace("toto", "tato")) for i in range(30)]
+    )
+    driver = sorted(
+        map(tuple, call_variants(refs, corpus, k=K, window_len=4).collect())
+    )
+    assert ("ref0", 7, "o", "a") in {r[:4] for r in driver}
+
+    snp_calls: list[int] = []
+    real_snp = variants.snp_candidates
+
+    def counted_snp(*a, **kw):
+        snp_calls.append(1)
+        return real_snp(*a, **kw)
+
+    monkeypatch.setattr(variants, "snp_candidates", counted_snp)
+    monkeypatch.setattr(variants, "_DRIVER_ENUM_KEY_LIMIT", 4 * K + 1)
+    relational = sorted(
+        map(tuple, call_variants(refs, corpus, k=K, window_len=4).collect())
+    )
+    # the fallback calls the SNP generator for the key set as well as for
+    # the triggered positions; the driver path calls it once
+    assert len(snp_calls) == 2
+    assert relational == driver
